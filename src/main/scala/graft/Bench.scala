@@ -32,16 +32,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.configure(spark)
+    val spark = SparkEntry.session("bench")
+    val cpus = spark.sparkContext.defaultParallelism
 
     def contendedLeg(trials: Seq[Double]): Boolean =
       trials.forall(_ >= 0) && trials.min >= 0.3 && trials.max > 2.0 * trials.min
@@ -181,15 +173,7 @@ object Bench {
         def trial(cores: Int): ((Long, Long, Double), Seq[Double]) = {
           SparkSession.clearActiveSession()
           SparkSession.clearDefaultSession()
-          val s = SparkSession.builder()
-            .master(s"local[$cores]")
-            .config("spark.sql.shuffle.partitions", cores)
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate()
-          s.sparkContext.setLogLevel("WARN")
-          SparkEntry.configure(s)
+          val s = SparkEntry.session("bench-scaling", cores)
           BenchCrawl.pipelineThroughput(s, scaleN / 4, scaleHosts) // warm
           // loadavg sampled BEFORE and AFTER the timed run: a wave landing
           // mid-trial is invisible to the pre-sample alone, and the artifact

@@ -13,7 +13,8 @@ import graft.operators.{Bloom, Extract, Seen}
   * scheduling + commit dominate, compute doesn't), which measures the
   * sandbox, not the engine; this path is the part whose cost grows with the
   * frontier and is what a 1000-executor run spends its time in. Run it at
-  * SPARK_GRAFT_CPUS=8 and 32 on the same N to evidence N→4N scaling.
+  * SPARK_GRAFT_CPUS=8 and 32 (default: every core) on the same N to
+  * evidence N→4N scaling.
   *
   * Honesty of the dedup stage: the seen set is the frontier PLUS the
   * distinct discoveries of the frontier's even half — i.e. the state after
@@ -80,30 +81,8 @@ object BenchCrawl {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toLong).getOrElse(2000000L)
     val nHosts = args.lift(1).map(_.toInt).getOrElse(5000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "4m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.configure(spark)
-    if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = sc.stageInfo
-            val dur = for { a <- i.submissionTime; b <- i.completionTime } yield b - a
-            System.err.println(
-              f"[stage] ${i.stageId}%4d tasks=${i.numTasks}%4d wall=${dur.getOrElse(-1L)}%6dms run=${i.taskMetrics.executorRunTime}%7dms cpu=${i.taskMetrics.executorCpuTime / 1000000}%7dms gc=${i.taskMetrics.jvmGCTime}%6dms")
-          }
-        })
-    }
+    val spark = SparkEntry.session("bench-crawl")
+    val cpus = spark.sparkContext.defaultParallelism
 
     pipelineThroughput(spark, n / 4, nHosts) // warm: codegen + JIT
     val trials = sys.env.getOrElse("SPARK_GRAFT_TRIALS", "3").toInt

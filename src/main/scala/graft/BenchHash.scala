@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.NearDup
 
@@ -18,15 +17,8 @@ object BenchHash {
     val nDocs = args.lift(0).map(_.toInt).getOrElse(600000)
     val tokens = args.lift(1).map(_.toInt).getOrElse(64)
     val trials = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.configure(spark)
+    val spark = SparkEntry.session("bench-hash")
+    val cpus = spark.sparkContext.defaultParallelism
 
     // deterministic corpus: nDocs docs × `tokens` distinct tokens drawn
     // from a 50k vocabulary — the explode/hash/vote shape of a real run,

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.ckpt.SnapshotStore
 import graft.engine.EpochDriver
 import graft.gen.SimWeb
@@ -11,10 +10,13 @@ import graft.gen.SimWeb
   *
   * Usage: runMain graft.Crawl <storeDir> <seeds> <nHosts> <epochs>
   *   [budgetMs] [compactEvery] [minorEvery]
-  * Parallelism/partitions come from SPARK_GRAFT_CPUS (default 32) so the
-  * same job can be run at two cluster sizes for the scaling-efficiency
-  * evidence (BASELINE.md protocol). Seen-table AND frontier-log compaction
-  * run every `compactEvery` epochs (default 4, 0 = off) — a long crawl
+  * The session comes from SparkEntry.session: values the deployer passed
+  * (spark-submit `--master`, `--conf`) win; otherwise it runs
+  * `local[SPARK_GRAFT_CPUS]` with that many shuffle partitions, and
+  * SPARK_GRAFT_CPUS defaults to every core of the machine.
+  *
+  * Seen-table AND frontier-log compaction run every `compactEvery` epochs
+  * (default 4, 0 = off) — a long crawl
   * otherwise accumulates one seen partition directory + one frontier delta
   * dir per epoch, and the anti-join / merge-on-read scans pay per-file
   * open costs forever. `minorEvery` (default 0 = off) adds MINOR frontier
@@ -31,26 +33,6 @@ import graft.gen.SimWeb
   */
 object Crawl {
 
-  /** The session settings `main` applies, EXCLUDING anything the deployer
-    * already provided: spark-submit places `--master` and every `--conf`
-    * into system properties BEFORE `main` runs, and an unconditional
-    * `.master()`/`.config()` would override them — the documented
-    * `--master yarn --conf spark.sql.shuffle.partitions=2000` cluster
-    * invocation would silently run `local[cpus]` with 32 shuffle
-    * partitions inside the driver process. Pure so CrawlCliSpec can pin
-    * the precedence rule: `has` answers "did the deployer set this key".
-    * The UTC session time zone is NOT here — it is forced unconditionally
-    * (KST virtual time / job-id derivation are semantics, not tuning).
-    */
-  private[graft] def sessionDefaults(
-      has: String => Boolean, cpus: String): Seq[(String, String)] =
-    Seq(
-      "spark.sql.shuffle.partitions" -> cpus,
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.ui.enabled" -> "false",
-      "spark.master" -> s"local[$cpus]"
-    ).filterNot { case (k, _) => has(k) }
-
   def main(args: Array[String]): Unit = {
     val storeDir = args.lift(0).getOrElse("target/crawl-store")
     val nSeeds = args.lift(1).map(_.toInt).getOrElse(200)
@@ -60,33 +42,8 @@ object Crawl {
     val compactEvery = args.lift(5).map(_.toInt).getOrElse(4)
     val minorEvery = args.lift(6).map(_.toInt).getOrElse(0)
     val seed = 42L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    // honor externally-provided settings (see sessionDefaults): deployer
-    // values win, these are defaults only; the time zone stays FORCED
-    val spark = sessionDefaults(sys.props.contains, cpus)
-      .foldLeft(SparkSession.builder()
-        .config("spark.sql.session.timeZone", "UTC")) {
-        case (b, (k, v)) => b.config(k, v)
-      }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.configure(spark)
-
-    if (sys.env.contains("SPARK_GRAFT_PROFILE")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = sc.stageInfo
-            val dur = for {
-              a <- i.submissionTime; b <- i.completionTime
-            } yield b - a
-            System.err.println(
-              f"[stage] ${i.stageId}%4d tasks=${i.numTasks}%4d wall=${dur.getOrElse(-1L)}%6dms cpu=${i.taskMetrics.executorRunTime}%7dms ${i.name.take(60)}")
-          }
-        })
-    }
+    val spark = SparkEntry.session("crawl")
+    val cpus = spark.sparkContext.defaultParallelism
 
     val store = new SnapshotStore(storeDir, spark)
     // SPARK_GRAFT_SINK_DIR: emit per-epoch fresh records + job-control
@@ -96,21 +53,6 @@ object Crawl {
       compactFrontierEvery = compactEvery,
       compactDeltaEvery = minorEvery,
       bloomRouted = sys.env.get("SPARK_GRAFT_BLOOM_ROUTED").contains("1"),
-      // SPARK_GRAFT_SCHED_HEAD=0 disables the frontier-head fast path
-      // (full pending scan per epoch) — batches are identical either way;
-      // the knob exists for A/B measurement and for geometries where
-      // hosts*K exceeds the pending set (head pays without saving)
-      scheduleFromHead = !sys.env.get("SPARK_GRAFT_SCHED_HEAD").contains("0"),
-      // SPARK_GRAFT_HEAD_FRACTION: head cost-guard threshold over the
-      // exactly-tracked pending_rows counter (skip builds/refreshes when
-      // nHosts*K > fraction * pending). Default "inf" = head always
-      // engaged: the interleaved A/B at hosts*K ~50x pending still
-      // measured head-ON faster (BASELINE.md round 5). The knob exists
-      // for geometries an operator measures otherwise; SCHED_HEAD=0
-      // remains the hard off switch
-      headMaxPendingFraction = sys.env.get("SPARK_GRAFT_HEAD_FRACTION")
-        .map(s => if (s == "inf") Double.PositiveInfinity else s.toDouble)
-        .getOrElse(Double.PositiveInfinity),
       // SPARK_GRAFT_NEARDUP=1: near-dup each epoch's fetched docs against
       // the persisted corpus signatures (corpus_sim) and append the batch's
       // signatures — the steady-state training-data ingest shape. Resume-

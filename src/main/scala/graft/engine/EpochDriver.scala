@@ -1,11 +1,14 @@
 package graft.engine
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ckpt.SnapshotStore
 import graft.fetch.FetchSim
 import graft.functions.Canon
-import graft.operators.{Bloom, Extract, Sched, Seen}
+import graft.operators.{Bloom, Extract, NearDup, Sched, Seen, SegmentedBloom}
 
 /** Epoch-loop crawl engine (SURVEY.md §3.1 Spark trace; north rule).
   *
@@ -17,14 +20,20 @@ import graft.operators.{Bloom, Extract, Sched, Seen}
   * commit frontier/seen/lineage/metrics as one atomic snapshot. Every epoch
   * is resumable: state lives only in the snapshot store.
   *
+  * runEpoch is a sequence of layer functions — robots in effect, schedule,
+  * fetch, extract, dedup, sink, near-dup, media, frontier update — each
+  * taking the epoch's inputs and returning its outputs plus a [[Commit]]
+  * fragment. The fragments merge into ONE epoch commit; at most one more
+  * (the append-root swap, see [[consolidate]]) follows it.
+  *
   * Per-epoch I/O is O(batch), never O(crawl): the seen set appends one
   * epoch partition + Bloom segment per epoch (log-compacted by
   * compactSeen), the frontier appends state-transition deltas resolved
   * merge-on-read ([[FrontierLog]]) — nothing rewrites a crawl-sized table
   * inside an epoch — and between folds the scheduler READS a materialized
   * per-host top-K head instead of the pending frontier (batch-exact; see
-  * the head invariant in runEpoch), so a normal epoch neither writes nor
-  * scans the full frontier. Fold epochs are bounded too: terminal
+  * the head invariant at [[schedule]]), so a normal epoch neither writes
+  * nor scans the full frontier. Fold epochs are bounded too: terminal
   * (fetched/failed) rows are absorbing, so each fold renames them out of
   * the staged base into the append-only frontier_archive — the fold
   * resolves O(pending wavefront + delta window) rows, independent of how
@@ -81,8 +90,8 @@ final class EpochDriver(
     // epoch. When a table's root count passes the cap, the newer roots'
     // files are MERGE-MOVED (file renames, zero rewrite — these tables
     // are immutable appends, nothing ever needs resolution) into the
-    // PERMANENT oldest root and a second manifest swap retires them — see
-    // consolidateRoots for why the target must be the oldest (files move
+    // PERMANENT oldest root and a swap commit retires them — see
+    // consolidate for why the target must be the oldest (files move
     // at most once). Pure layout knob (view-identical,
     // FrontierLogSpec/EngineSpec), so not resume-guarded
     archiveMaxRoots: Int = 8,
@@ -110,29 +119,11 @@ final class EpochDriver(
     // schedule from the materialized frontier HEAD (top-K rows per host,
     // committed at each fold) instead of scanning the full pending
     // frontier every epoch. Batch-EXACT, never heuristic — see the head
-    // invariant at the fold commit below — and pure execution strategy
-    // (batches, counters and views are byte-identical either way, pinned
-    // by FrontierLogSpec), so not resume-guarded. Requires folds to
-    // refresh the head; with compactFrontierEvery=0 it never activates
+    // invariant at schedule — and pure execution strategy (batches,
+    // counters and views are byte-identical either way, pinned by
+    // FrontierLogSpec), so not resume-guarded. Requires folds to refresh
+    // the head; with compactFrontierEvery=0 it never activates
     scheduleFromHead: Boolean = true,
-    // cost guard on head BUILDS: materialize/refresh the head only when
-    // its size bound (nHosts × K — headSlice can never exceed it) is at
-    // most this fraction of the exactly-tracked pending set
-    // (`pending_rows`, see below). Default ENGAGED everywhere
-    // (PositiveInfinity): an interleaved best-of-3 CLI A/B at the most
-    // head-hostile geometry available (hosts·K ~50× pending — 400k seeds,
-    // 5000 hosts, 60 s budget, minors every 4) measured the head-ON legs
-    // 4-9% FASTER than head-off on every trial (BASELINE.md round 5,
-    // correcting round 4's wave-contaminated 40%-slower note): a minor
-    // fold's refresh is one O(pending ∪ Δ) pass per `compactDeltaEvery`
-    // epochs, while the full path re-resolves O(pending + Δ log) EVERY
-    // epoch — the head never loses asymptotically, only shifts where the
-    // pass runs. The threshold remains for operators whose measured
-    // geometry says otherwise (CLI SPARK_GRAFT_HEAD_FRACTION); skipping a
-    // build leaves the exact full-view path (or a still-valid older
-    // head), so any setting is pure execution strategy — not
-    // resume-guarded
-    headMaxPendingFraction: Double = Double.PositiveInfinity,
     // K1/K2 external sink (file-backed stand-in for the reference's Kafka
     // REST bridge): per-epoch fresh records batch-emitted from the
     // executors, plus one job-control completion message per epoch.
@@ -148,6 +139,7 @@ final class EpochDriver(
     sinkBridge: Option[String] = None) {
 
   import spark.implicits._
+  import EpochDriver.{Commit, HeadMeta}
 
   // the bridge POST rides the sink's flush path: a bridge URL without a
   // sink dir would silently emit NOTHING over the wire — fail loudly at
@@ -156,14 +148,6 @@ final class EpochDriver(
     "sinkBridge requires sinkDir: bridge POSTs ride the sink flush path")
 
   private val defaultDelayMs = 2500L
-  // the INIT robots resolution (a real deployment fetches robots.txt for
-  // the seed hosts here): init commits these rows as the versioned `robots`
-  // store table, and every later epoch re-resolves robots FROM THE STORE —
-  // a mid-crawl update (stageRobotsUpdate) or a resume in a fresh JVM both
-  // see the table, never this generator
-  private val robotsRows =
-    Sched.robotsFor((0 until nHosts).map(graft.gen.SimWeb.hostName), seed)
-  private val robots = Sched.robotsDf(spark, robotsRows)
 
   /** Exact floor of every delay the scheduler can see under `rows`: known
     * hosts carry their robots delay, unknown hosts coalesce to
@@ -171,74 +155,21 @@ final class EpochDriver(
     * exact only for a true floor, so it is DERIVED from the actual delay
     * rows rather than trusting the Sched.MinCrawlDelayMs generator
     * constant — retuning either delay source can never silently starve
-    * rows past the cut.
+    * rows past the cut. The floor rides every manifest
+    * (`robots_floor_ms`), so an epoch derives its budget cut
+    * (Sched.budgetCut) with zero extra Spark work.
     */
   private def floorOf(rows: Seq[(String, Long, Seq[String])]): Long =
     math.min(defaultDelayMs, rows.map(_._2).minOption.getOrElse(defaultDelayMs))
 
-  private val minDelayFloorMs: Long = floorOf(robotsRows)
-
-  /** Per-host upper bound on rows any single epoch can schedule AT INIT —
-    * the shared Sched.budgetCut definition (head exactness requires the
-    * sizing/validity math and rankAndBudget to use the same value, not two
-    * copies of a formula). Epochs recompute the cut from the floor of the
-    * robots rows in effect; a head records the cut it was built under
-    * (`head_cut`) and is invalidated when the cut changes.
+  /** Output files for a write of `rows` rows: ~1M rows per file, capped at
+    * the session parallelism, so a small epoch writes one file instead of
+    * one near-empty file per shuffle partition — committed bytes and file
+    * counts scale with the batch, not with file-count constants
+    * (FrontierLogSpec pins the byte ratio).
     */
-  private val cutRows: Long = Sched.budgetCut(epochBudgetMs, minDelayFloorMs)
-
-  /** Head-build cost guard: is a head of up to `kPerHost` rows/host worth
-    * materializing against a pending set of `pendingRows`? nHosts·K is an
-    * upper bound on the slice (headSlice keeps at most K rows per host and
-    * only hosts with pending rows contribute), so over-estimating skips
-    * conservatively — exactly the degenerate-geometry direction. An
-    * UNKNOWN pending count (legacy store resumed mid-crawl, before a major
-    * fold re-seeds the counter) engages the head as before the guard
-    * existed.
-    */
-  private def headWorthwhile(kPerHost: Long, pendingRows: Option[Long]): Boolean =
-    pendingRows.forall(p =>
-      nHosts.toDouble * kPerHost <= p.toDouble * headMaxPendingFraction)
-
-  /** Merge-move an over-cap append-table root list into its OLDEST root;
-    * returns the one-root list for the manifest swap, or None under cap.
-    * ONE shared implementation for every append-rooted table
-    * (frontier_archive, corpus_sim, neardup_pairs, media_features) — the
-    * commit-before-move crash argument and the naming rule must not live
-    * in per-table copies that can drift.
-    *
-    * The target being the PERMANENT head root makes every file move at
-    * most once over the table's lifetime: later appends land AFTER the
-    * head in the manifest list, so a consolidated file is never a move
-    * source again. (The previous newest-root target re-prefixed and
-    * re-renamed the ENTIRE history every cycle — O(crawl age) renames per
-    * cycle, and names grew a prefix each pass toward the filesystem's
-    * 255-char component limit, a guaranteed eventual crash on a
-    * long-running crawl.) The r<i>- prefix disambiguates same-named files
-    * from different source roots within one pass; across passes the part
-    * files' write-job UUIDs already make names unique.
-    *
-    * Crash-safe by ordering: the epoch commit preceding this call
-    * references the old roots AND the head, renames keep each file in
-    * exactly one referenced location at every instant (multi-root reads
-    * stay complete and duplicate-free), and a crash mid-move leaves a
-    * still-over-cap list the next pass converges. Emptied roots leave the
-    * manifest at the swap and expire with the next sweep. `subdirs` names
-    * partition dirs inside each root (Seq("") = flat table).
-    */
-  private def consolidateRoots(roots: Seq[String],
-      subdirs: Seq[String]): Option[Seq[String]] =
-    if (roots.size <= archiveMaxRoots) None
-    else {
-      val target = roots.head
-      roots.tail.zipWithIndex.foreach { case (root, i) =>
-        subdirs.foreach { sub =>
-          val suffix = if (sub.isEmpty) "" else s"/$sub"
-          store.moveFilesInto(s"$root$suffix", s"$target$suffix", s"r$i-")
-        }
-      }
-      Some(Seq(target))
-    }
+  private def filesFor(rows: Long): Int =
+    math.min(rows / 1000000L + 1, spark.sparkContext.defaultParallelism.toLong).toInt
 
   /** Queue a robots refresh (new (host, crawl_delay_ms, disallow) rows —
     * the reference re-fetches robots.txt mid-crawl; the engine analog is a
@@ -274,7 +205,8 @@ final class EpochDriver(
     * snapshot manifest and require-matched on resume: re-invoking with
     * different CLI args would otherwise silently continue the crawl under
     * different scheduling/dedup semantics (and mismatched Bloom geometry
-    * would mis-route segment probes).
+    * would mis-route segment probes). A manifest missing a key was written
+    * before that key guarded anything, so it refuses to resume too.
     */
   private val cfg: Map[String, Long] = Map(
     "cfg_seed" -> seed,
@@ -289,28 +221,54 @@ final class EpochDriver(
     "cfg_media" -> (if (mediaDocs) 1L else 0L),
     "cfg_store_layout" -> EpochDriver.StoreLayoutVersion)
 
-  /** Guard keys added after stores already existed: a manifest missing the
-    * key is treated as having the value the code shipped with before the
-    * key was introduced, so a semantic change older than its guard key
-    * still refuses to resume instead of silently corrupting (a v1-hashed
-    * seen_bloom probed with v2 hashes returns false negatives — seen URLs
-    * would re-enter the frontier as fresh; a layout-1 store has no
-    * frontier_base/fetch_result tables to read).
-    */
-  private val cfgLegacyDefaults: Map[String, Long] =
-    Map("cfg_bloom_hash_version" -> 1L, "cfg_store_layout" -> 1L,
-      "cfg_neardup" -> 0L, "cfg_media" -> 0L)
-
   private def requireCfgMatch(counters: Map[String, Long]): Unit =
     cfg.foreach { case (k, v) =>
-      counters.get(k).orElse(cfgLegacyDefaults.get(k)).foreach(pv =>
-        require(pv == v,
-          s"resume config mismatch: $k snapshot=$pv, this driver=$v"))
+      require(counters.contains(k),
+        s"resume config mismatch: snapshot has no $k, this driver=$v")
+      require(counters(k) == v,
+        s"resume config mismatch: $k snapshot=${counters(k)}, this driver=$v")
+    }
+
+  /** The head a manifest describes, if any (all three keys ride together). */
+  private def headMeta(m: store.Manifest): Option[HeadMeta] = for {
+    e <- m.counters.get("head_epoch")
+    k <- m.counters.get("head_k")
+    c <- m.counters.get("head_cut")
+  } yield HeadMeta(e, k, c)
+
+  /** The one head decision every commit path takes, as a commit fragment:
+    *  - REPLACE with `slice` (a freshly built or refreshed head, re-dated to
+    *    this epoch) when one was built and is non-empty;
+    *  - KEEP the `standing` head's table and meta when nothing was built
+    *    and the standing head is still meaningful;
+    *  - DROP head table + meta otherwise. A drained slice must not commit:
+    *    a row-less parquet dir breaks schema inference, and pending rows
+    *    may still exist below the original cut — later epochs take the
+    *    exact full-view path until a fold rebuilds the head.
+    * The slice is cached: the emptiness probe and the committed write both
+    * consume it, and uncached the per-host window would run twice.
+    */
+  private def headCommit(c: Ctx, slice: Option[(DataFrame, HeadMeta)],
+      standing: Option[HeadMeta]): Commit =
+    slice.map { case (df, meta) => (c.keep(df), meta) } match {
+      case Some((df, meta)) if !df.isEmpty =>
+        Commit(replace = Map("frontier_head" -> df), counters = meta.counters)
+      case None if standing.isDefined => Commit(counters = standing.get.counters)
+      case _ => Commit(drop = Set("frontier_head"))
     }
 
   /** Initialize snapshot v0 from the ordered seed list. */
   def init(seedUrls: Seq[String]): Unit = {
     require(store.latest().isEmpty, "store already initialized")
+    // the INIT robots resolution (a real deployment fetches robots.txt for
+    // the seed hosts here): init commits these rows as the versioned
+    // `robots` store table, and every later epoch re-resolves robots FROM
+    // THE STORE — a mid-crawl update (stageRobotsUpdate) or a resume in a
+    // fresh JVM both see the table, never this generator
+    val robotsRows =
+      Sched.robotsFor((0 until nHosts).map(graft.gen.SimWeb.hostName), seed)
+    val robots = Sched.robotsDf(spark, robotsRows)
+    val floorMs = floorOf(robotsRows)
     val raw = seedUrls.toDF("url")
     val canoned = Canon.canonicalize(raw, "url", "https://unknown.example.com")
       .filter(Canon.isHttp(col("canon_url")))
@@ -326,34 +284,27 @@ final class EpochDriver(
     // all-or-nothing resume semantics: an uncommitted epoch partition is
     // both invisible to readers (epoch gate) and overwritten on re-run
     store.appendSeen(seen, 0L)
-    // every seed row starts pending: the exact pending_rows baseline the
-    // per-epoch arithmetic and the head cost guard build on
     val nSeeds = frontier.count()
     // the head exists from epoch 0 (same slice a fold would build): the
     // first fold-cadence window of epochs schedules from O(hosts·K) rows
     // too, instead of scanning the full seed frontier until the first fold
-    val headK = (compactFrontierEvery.toLong + 1L) * cutRows
-    val headDf =
-      if (scheduleFromHead && compactFrontierEvery > 0 && headK > 0 &&
-          headWorthwhile(headK, Some(nSeeds)))
-        Some(Sched.headSlice(frontier, headK).cache())
-      else None
-    val headCommit = headDf.filter(h => !h.isEmpty)
+    val cut = Sched.budgetCut(epochBudgetMs, floorMs)
+    val meta = HeadMeta(0L, (compactFrontierEvery.toLong + 1L) * cut, cut)
+    val c = new Ctx(None) // init builds on no manifest; only its cache is used
     try {
+      val head = headCommit(c,
+        if (scheduleFromHead && compactFrontierEvery > 0 && meta.k > 0)
+          Some((Sched.headSlice(frontier, meta.k), meta))
+        else None, None)
       store.commit(0L,
         replace = Map("frontier_base" -> frontier, "robots" -> robots) ++
-          headCommit.map("frontier_head" -> _),
+          head.replace,
         append = Map(
           "seen_bloom" -> Bloom.buildSegments(seen, "canon_url", bloomSegments, bloomBitsPerSegment)),
-        counters = cfg +
-          ("seeds" -> nSeeds) +
-          ("pending_rows" -> nSeeds) +
-          ("robots_floor_ms" -> minDelayFloorMs) ++
-          (if (headCommit.isDefined)
-            Map("head_epoch" -> 0L, "head_k" -> headK, "head_cut" -> cutRows)
-          else Map.empty[String, Long]),
+        counters = cfg + ("seeds" -> nSeeds) + ("robots_floor_ms" -> floorMs) ++
+          head.counters,
         partitionedBy = Map("frontier_base" -> "state"))
-    } finally headDf.foreach(_.unpersist())
+    } finally c.release()
     ()
   }
 
@@ -371,677 +322,58 @@ final class EpochDriver(
     }
   }
 
+  /** One epoch's inputs (`m` = the manifest it builds on; None at init),
+    * plus the caches and Bloom broadcast it holds — released in
+    * runEpoch's finally block so a failed commit (retried by the caller)
+    * cannot leak them, and so filter blobs never accumulate across epochs.
+    */
+  private final class Ctx(parent: Option[store.Manifest]) {
+    def m: store.Manifest = parent.get
+    def epoch: Long = m.epoch + 1
+    private val held = ArrayBuffer.empty[DataFrame]
+    var bloom: Option[Broadcast[SegmentedBloom]] = None
+    def keep(df: DataFrame): DataFrame = { val d = df.cache(); held += d; d }
+    def release(): Unit = { held.foreach(_.unpersist()); bloom.foreach(_.destroy()) }
+  }
+
   /** Run one epoch on top of the latest snapshot; returns epoch metrics. */
   def runEpoch(): Map[String, Long] = {
     val m = store.latest().getOrElse(sys.error("store not initialized"))
     requireCfgMatch(m.counters)
-    val epoch = m.epoch + 1
-    // bucketed scan: the (huge, append-only) seen side of the anti-join
-    // arrives pre-partitioned by hash(canon_url) — no big-side Exchange
-    val seen = store.readSeen(m.epoch)
-
-    // ---- robots in effect for THIS epoch (J3): a staged update wins (and
-    // is committed with this epoch's snapshot, so it survives resume); else
-    // the versioned store table (what every resume reads — the constructor
-    // generator is only the init resolution); a legacy pre-robots-table
-    // store self-migrates by committing the generator rows it crawled
-    // with. The delay floor rides the manifest counters, so the common
-    // path derives the cut with zero extra Spark work
+    val c = new Ctx(Some(m))
     val staged = stagedRobots.get()
-    val (robotsEpoch, floorMs, robotsReplace) = staged match {
-      case Some(rows) =>
-        val df = Sched.robotsDf(spark, rows)
-        (df, floorOf(rows), Map("robots" -> df))
-      case None => m.tables.get("robots").filter(_.nonEmpty) match {
-        case Some(paths) =>
-          val df = robotsCache match {
-            case Some((p, d)) if p == paths => d
-            case _ =>
-              val d = store.readTable(m, "robots").get
-              robotsCache = Some((paths, d)); d
-          }
-          (df, m.counters.getOrElse("robots_floor_ms", minDelayFloorMs),
-            Map.empty[String, DataFrame])
-        case None => (robots, minDelayFloorMs, Map("robots" -> robots))
-      }
-    }
-    val cut = Sched.budgetCut(epochBudgetMs, floorMs)
-    val robotsMeta = Map("robots_floor_ms" -> floorMs)
-    // a cut change PERMANENTLY invalidates any standing head, so the first
-    // epoch that runs under the new cut drops head + meta in its commit.
-    // Merely failing the head_cut check is not enough: epochs that run
-    // under a different cut consume up to THAT cut per host, so if the
-    // floor later reverted, the hk >= elapsed*cut validity arithmetic
-    // would under-count the mismatched epochs' consumption and re-validate
-    // an over-consumed head (hosts whose head rows are all terminal would
-    // silently schedule nothing until the next major fold)
-    val headCutStale = m.counters.contains("head_epoch") &&
-      m.counters.getOrElse("head_cut", cutRows) != cut
-    // cumulative fold-cost accounting (bytes written by major base rewrites
-    // and by minor delta resolves): pure ops visibility — the evidence that
-    // minor folds let the major cadence stretch is these two counters'
-    // RATIO in a CLI A/B, read straight out of the final manifest
-    val foldBytesMeta = m.counters.view.filterKeys(k =>
-      k == "fold_base_bytes" || k == "fold_delta_bytes").toMap
-
-    // epoch-scale caches + the Bloom broadcast, released in the finally
-    // block so a failed commit (retried by the caller) cannot leak them
-    var rankedC: Option[DataFrame] = None
-    var candDepthC: Option[DataFrame] = None
-    var freshC: Option[DataFrame] = None
-    var headC: Option[DataFrame] = None
-    var simNewC: Option[DataFrame] = None
-    var bloomBc: Option[org.apache.spark.broadcast.Broadcast[
-      graft.operators.SegmentedBloom]] = None
     try {
-      // ---- schedule: W2 rank + T4 budget over the merged pending view.
-      // Head fast path: a head of K rows/host built at fold epoch `he`
-      // still contains every host's true top-cut at epoch e iff
-      // K >= (e - he) * cut — each epoch consumes at most `cut` rows per
-      // host, rows only leave pending by being scheduled (so their
-      // transitions are in the delta), and scores never rise. When valid,
-      // scheduling reads O(hosts*K + delta) rows instead of the whole
-      // pending frontier; when stale or absent (no fold yet, head
-      // disabled, resume from a headless store) it falls back to the full
-      // merge-on-read view. Both sources contain the true per-host
-      // top-cut, so the window + budget cut yield identical batches
-      // counters first, table read last: a permanently stale head (e.g.
-      // resume with folding off) must not pay a parquet schema read per
-      // epoch just to be discarded
-      // head_cut: the budget cut the head was built under. A robots
-      // update that changes the delay floor changes the cut — per-host
-      // consumption bounds computed under one cut are meaningless under
-      // another (a RAISED floor shrinks the cut and would make the stale
-      // check UNDER-count past consumption), so any cut change simply
-      // invalidates the head until the next fold rebuilds it
-      val headSrc: Option[(DataFrame, Long)] =
-        if (!scheduleFromHead) None
-        else for {
-          he <- m.counters.get("head_epoch")
-          hk <- m.counters.get("head_k")
-          if m.counters.getOrElse("head_cut", cutRows) == cut
-          if hk >= (epoch - he) * cut
-          h <- store.readTable(m, "frontier_head")
-        } yield (h, he)
-      lastSchedSource = if (headSrc.isDefined) "head" else "full"
-      val pendingSrc = headSrc.map(_._1).getOrElse(
-        store.readTable(m, "frontier_base").get)
-      // head path: the head already resolves every delta row with
-      // seq <= head_epoch (a fold-built head post-dates the dropped log; a
-      // minor-refreshed head absorbed the folded run), so prune the delta
-      // scan to strictly newer rows — each delta file is one epoch, so
-      // parquet min/max stats on seq skip old files (and the whole folded
-      // run) at footer cost. The full-view fallback must NOT prune: the
-      // base pre-dates every delta row
-      val deltaAll = store.readTable(m, "frontier_delta")
-      val deltaSrc = headSrc match {
-        case Some((_, he)) => deltaAll.map(_.filter(col("seq") > he))
-        case None => deltaAll
-      }
-      val pending = FrontierLog.pending(pendingSrc, deltaSrc)
-        .join(broadcast(robotsEpoch.select("host", "crawl_delay_ms")), Seq("host"), "left")
-        .withColumn("crawl_delay_ms", coalesce(col("crawl_delay_ms"), lit(defaultDelayMs)))
-      // cached: ranked is BATCH-sized after the budget cut, and both the
-      // fetch path and the frontier transitions consume it — without the
-      // cache the second consumer recomputes the full pending-frontier
-      // scan + window (a second O(frontier) pass per epoch)
-      val ranked = Sched.rankAndBudget(pending, epochBudgetMs,
-        floorMs).cache()
-      rankedC = Some(ranked)
-      val batch = Sched.fetchBatch(ranked, epoch, saltBuckets,
-        spark.sparkContext.defaultParallelism)
-
-      // ---- fetch (S1) — salted partitions, partition-local lineage. The
-      // full fetch output is made durable FIRST (the dir this commit will
-      // reference; a crash re-runs the deterministic fetch over the same
-      // batch into the same dir), then every consumer reads it
-      // column-pruned — transitions/counters never deserialize the spans
-      val fetchDir = store.stagingDir("fetch_result")
-      val fetchedDs = FetchSim.run(batch, seed, nHosts).toDF()
-      val fetchSchema = fetchedDs.schema
-      fetchedDs.write.mode("overwrite").parquet(fetchDir)
-      val fetched = spark.read.schema(fetchSchema).parquet(fetchDir)
-      val okDocs = fetched.filter(col("status") === "ok")
-        .select(col("canon_url").as("doc_id"), col("depth"), col("spans"))
-
-      // ---- extract (S2/D2) + canon (X14) + robots filter (J3/F3)
-      val cand = Extract.canonCandidates(okDocs.select("doc_id", "spans"))
-      val candAllowed = Sched.allowed(cand, robotsEpoch, defaultDelayMs)
-        .select("canon_url", "host", "src_doc")
-      val candDepth = candAllowed
-        .join(okDocs.select(col("doc_id").as("src_doc"), col("depth")), Seq("src_doc"))
-        .groupBy("canon_url", "host")
-        .agg((min("depth") + 1).cast("int").as("depth"))
-        .cache()
-      candDepthC = Some(candDepth)
-      val nDiscovered = candDepth.count()
-
-      // ---- dedup vs seen: Bloom prefilter (D3) + exact anti-join (J2).
-      // Segment merge runs on the executors (one final blob per segment
-      // reaches the driver); the broadcast handle is destroyed in the
-      // finally block so filter blobs never accumulate across epochs
-      val segTable = if (useBloom) store.readTable(m, "seen_bloom") else None
-      bloomBc =
-        if (bloomRouted) None
-        else segTable.map(df =>
-          Seen.broadcastSegments(spark,
-            Bloom.mergedSegments(df, bloomSegments, bloomBitsPerSegment)))
-      val fresh = (if (bloomRouted && segTable.isDefined)
-          Seen.filterUnseenRouted(candDepth, "canon_url", seen,
-            segTable.get, bloomSegments)
-        else Seen.filterUnseen(candDepth, "canon_url", seen, bloomBc))
-        .withColumn("score", lit(1.0) / (lit(1.0) + col("depth")))
-        .withColumn("state", lit("pending"))
-        .withColumn("retry_count", lit(0))
-        .withColumn("discovered_epoch", lit(epoch))
-        .select("canon_url", "host", "depth", "score", "state", "retry_count",
-          "discovered_epoch")
-        .cache()
-      freshC = Some(fresh)
-
-      // ---- frontier delta: ONLY the scheduled rows transition (fetched ok
-      // → fetched; error → retry w/ score decay, dead at maxRetries —
-      // T5/T7); everything else rests untouched in base/older deltas. The
-      // inner join is batch-sized on both sides: the per-epoch frontier
-      // write is O(batch + fresh), never O(frontier)
-      val outcome = fetched.select(col("canon_url"), col("status").as("_status"))
-      val transitions = ranked
-        .select("canon_url", "host", "depth", "score", "state", "retry_count",
-          "discovered_epoch")
-        .join(outcome, Seq("canon_url"))
-        .withColumn("state",
-          when(col("_status") === "ok", lit("fetched"))
-            .when(col("_status") === "error" && col("retry_count") + 1 >= maxRetries,
-              lit("failed"))
-            .otherwise(col("state")))
-        .withColumn("score",
-          when(col("_status") === "error" && col("retry_count") + 1 < maxRetries,
-            col("score") * 0.5).otherwise(col("score")))
-        .withColumn("retry_count",
-          when(col("_status") === "error", col("retry_count") + 1)
-            .otherwise(col("retry_count")))
-        .drop("_status")
-      // one batch-sized pass over the post-transition states yields the
-      // fetch outcome tallies AND the terminal-failure count the
-      // pending_rows arithmetic needs (ok → fetched; error → failed at
-      // maxRetries, else still pending with retry_count bumped — errors
-      // are exactly failed + still-pending)
-      val stateCounts = transitions.groupBy("state").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val nFetched = stateCounts.getOrElse("fetched", 0L)
-      val nFailed = stateCounts.getOrElse("failed", 0L)
-      val nErrors = nFailed + stateCounts.getOrElse("pending", 0L)
+      val (robotsDf, floorMs, robotsCommit) = robotsInEffect(m, staged)
+      val cut = Sched.budgetCut(epochBudgetMs, floorMs)
+      val (ranked, deltaAll) = schedule(c, robotsDf, floorMs, cut)
+      val (fetchDir, fetched, okDocs) = fetch(c, ranked)
+      val (candDepth, nDiscovered) = extract(c, okDocs, robotsDf)
+      val fresh = dedup(c, candDepth)
+      val (transitions, nFetched, nErrors) = outcomes(ranked, fetched)
       val nEmitted = fresh.count()
       val counters = Map(
-        "epoch" -> epoch,
+        "epoch" -> c.epoch,
         "fetched" -> nFetched,
         "errors" -> nErrors,
         "discovered" -> nDiscovered,
         "deduped" -> (nDiscovered - nEmitted),
         "emitted" -> nEmitted)
-
-      // pending_rows: exact by the state machine — rows enter pending only
-      // as seeds (init) or fresh emissions, and leave only by
-      // transitioning to fetched/failed (retries stay pending). Carried
-      // through every commit so the head cost guard always has the current
-      // value; absent on a legacy store until the next major fold re-seeds
-      // it from the folded base's footers
-      val pendingNow: Option[Long] = m.counters.get("pending_rows")
-        .map(p => p + nEmitted - nFetched - nFailed)
-      val pendingMeta: Map[String, Long] =
-        pendingNow.map("pending_rows" -> _).toMap
-
-      val metricsDf = Seq((epoch, nFetched, nErrors, nDiscovered,
+      val metricsDf = Seq((c.epoch, nFetched, nErrors, nDiscovered,
         nDiscovered - nEmitted, nEmitted))
         .toDF("epoch", "fetched", "errors", "discovered", "deduped", "emitted")
-
-      // ---- K1 record sink + K2 job-control message (kafka_producer.py
-      // send_crawling_completion semantics: count==0 ⇒ fail with reason, no
-      // wall clock — completed_at is virtual epoch time in KST)
-      sinkDir.foreach { d =>
-        graft.sinks.RecordSink.emit(
-          fresh.withColumn("epoch", lit(epoch)), "canon_url",
-          s"$d/frontier-records", tag = s"e$epoch", bridgeUrl = sinkBridge)
-        val completedAt = java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0)
-          .plusMinutes(epoch).atOffset(java.time.ZoneOffset.ofHours(9))
-          .format(java.time.format.DateTimeFormatter.ofPattern(
-            "yyyy-MM-dd'T'HH:mm:ssxxx"))
-        val control = Seq((s"epoch_$epoch",
-          if (nEmitted > 0) "done" else "fail",
-          "collection",
-          if (nEmitted > 0) null else "review count 0",
-          nEmitted, completedAt))
-          .toDF("job_id", "status", "step", "failure_reason",
-            "expected_count", "completed_at")
-        graft.sinks.RecordSink.emit(control, "job_id", s"$d/job-control",
-          tag = s"e$epoch", bridgeUrl = sinkBridge)
-      }
-
-      // ---- incremental near-dup over the epoch's fetched documents (the
-      // q49 steady-state shape as an ENGINE stage): reassemble each ok
-      // doc's text from its spans in offset order (the q43 formulation),
-      // simhash the batch with the production xxhash64/64 path, probe the
-      // persisted corpus signatures — candidate work O(batch × bucket
-      // occupancy), old-old pairs never generated — and append the batch's
-      // signatures so the next epoch probes this one too. Banding geometry
-      // is re-derived per epoch from the cumulative doc count (B is a pure
-      // cost knob, never a recall knob — NearDupSpec), so signatures are
-      // geometry-free and a growing corpus widens its own banding.
-      val ndState: Option[(DataFrame, Option[String], Long, Long)] =
-        if (!nearDupDocs || nFetched == 0) None
-        else {
-          val batchText = okDocs
-            .select(col("doc_id"), explode(col("spans")).as("span"))
-            .groupBy("doc_id")
-            .agg(array_join(transform(array_sort(filter(
-                collect_list(struct(col("span.offset"), col("span.text"))),
-                x => x.getField("text") =!= "")),
-              x => x.getField("text")), " ").as("text"))
-          // TOTAL over the batch: explode drops a doc whose spans array is
-          // empty, so the reassembly alone would skip it — re-anchor on the
-          // fetched set and coalesce to "" so every fetched doc reaches the
-          // signature step (simhashTotal then assigns the empty-token
-          // signature 0L); the sim_docs counter and the corpus_sim row
-          // count stay equal BY CONSTRUCTION, not by corpus luck
-          val batchDocs = okDocs.select("doc_id")
-            .join(batchText, Seq("doc_id"), "left")
-            .na.fill("", Seq("text"))
-          // cached: the pairs probe and the commit write both consume the
-          // batch signatures
-          val simNew = graft.operators.NearDup.simhashTotal(batchDocs,
-            graft.operators.NearDup.XxHashBits,
-            graft.operators.NearDup.xxTokenHash).cache()
-          simNewC = Some(simNew)
-          val simDocs = m.counters.getOrElse("sim_docs", 0L) + nFetched
-          val blocks = graft.functions.Banding.blocksFor(simDocs,
-            hashBits = graft.operators.NearDup.XxHashBits)
-          val corpusSim = store.readTable(m, "corpus_sim")
-          val pairsDf = (corpusSim match {
-            case Some(c) => graft.operators.NearDup.incrementalFromSimhash(
-              simNew, c.select("doc_id", "simhash"), blocks,
-              graft.operators.NearDup.XxHashBits)
-            case None => graft.operators.NearDup.pairsFromSimhash(
-              simNew, blocks, graft.operators.NearDup.XxHashBits)
-          }).withColumn("epoch", lit(epoch))
-          // write-once, count from the written footers (the fetch_result
-          // pattern): the banded probe is the epoch's second-most-expensive
-          // plan, and a separate count() action would execute it twice. A
-          // crash re-runs the deterministic probe into the same dir
-          val pairsDir = store.stagingDir("neardup_pairs")
-          pairsDf.write.mode("overwrite").parquet(pairsDir)
-          val nPairs = spark.read.parquet(pairsDir).count()
-          if (nPairs == 0) store.deletePath(pairsDir) // row-less dir hazard
-          Some((simNew, if (nPairs > 0) Some(pairsDir) else None,
-            simDocs, nPairs))
-        }
-      // sim_docs carries forward across empty/disabled epochs like
-      // delta_rows: a counter absent from one manifest would reset the
-      // cumulative count (and the derived banding geometry) on the next
-      val ndCounters: Map[String, Long] =
-        if (!nearDupDocs) Map.empty
-        else ndState match {
-          case Some((_, _, simDocs, nPairs)) =>
-            Map("sim_docs" -> simDocs, "neardup_pairs" -> nPairs)
-          case None =>
-            Map("sim_docs" -> m.counters.getOrElse("sim_docs", 0L),
-              "neardup_pairs" -> 0L)
-        }
-
-      // ---- media feature extraction over the epoch's fetched documents
-      // (the media half of the interleaved corpus, mirroring the near-dup
-      // stage's text half): each ok doc's media spans resolve their
-      // media_ref through the simulated media fetch and decode through the
-      // production JDK pixel path — REAL container bytes, REAL raster
-      // decode, luma-grid embedding — inside one mapPartitions (payload
-      // bytes live only inside the task; the table stores features, never
-      // payloads, so nothing raster-sized ever shuffles or persists).
-      // Write-once staging + footer count, the neardup_pairs pattern.
-      val mediaState: Option[(String, Long)] =
-        if (!mediaDocs || nFetched == 0) None
-        else {
-          val refs = okDocs
-            .select(col("doc_id"), explode(col("spans")).as("span"))
-            .filter(col("span.kind") === "media" && col("span.media_ref") =!= "")
-            .select(col("doc_id"), col("span.media_ref").as("media_ref"),
-              col("span.offset").as("offset"))
-          val theSeed = seed
-          val feats = refs.as[(String, String, Int)].mapPartitions { it =>
-            // partition-local codec init (the extractFeatures posture)
-            java.lang.System.setProperty("java.awt.headless", "true")
-            javax.imageio.ImageIO.setUseCache(false)
-            it.map { case (doc, ref, off) =>
-              val payload = graft.fetch.MediaFetchSim.fetchBytes(ref, theSeed)
-              // shared decode-or-stub posture (incl. header-dims recovery
-              // for undecodable-but-headered bytes) — one implementation,
-              // so this stage and extractFeatures can never drift
-              val (w, h, emb, _) =
-                graft.operators.Multimodal.imageFeatures(payload)
-              (doc, ref, off, w, h, payload.length, emb)
-            }
-          }.toDF("doc_id", "media_ref", "offset", "width", "height",
-            "n_bytes", "embedding")
-          val dir = store.stagingDir("media_features")
-          // repartition AFTER the decode, never coalesce: coalesce is
-          // narrow, so it would collapse the uncached synth+decode map
-          // itself to the output file count — at small batches ONE task
-          // doing every JPEG round-trip (measured: +51 s/6-epoch run).
-          // The shuffle moves only feature rows (~hundreds of bytes each);
-          // file sizing tracks the fetched-doc count (spans/doc is a
-          // small corpus constant, so ~1M-row files up to that factor)
-          feats.repartition(math.max(1L, math.min(nFetched / 1000000L + 1,
-            spark.sparkContext.defaultParallelism.toLong)).toInt)
-            .write.mode("overwrite").parquet(dir)
-          val n = spark.read.parquet(dir).count()
-          if (n == 0) { store.deletePath(dir); None } // row-less dir hazard
-          else Some((dir, n))
-        }
-      // media_rows carries forward like sim_docs: an absent counter would
-      // read as a reset corpus on the next manifest
-      val mdCounters: Map[String, Long] =
-        if (!mediaDocs) Map.empty
-        else Map("media_rows" -> (m.counters.getOrElse("media_rows", 0L) +
-          mediaState.map(_._2).getOrElse(0L)))
-      val mdAppendPaths: Map[String, Seq[String]] =
-        mediaState.map(s => "media_features" -> Seq(s._1)).toMap
-
-      // seen + its Bloom segments are append-only: each epoch contributes
-      // only its fresh URLs; seen goes to the bucketed table
-      // (epoch-partitioned, idempotent overwrite — see SnapshotStore),
-      // Bloom readers OR-merge segments. The frontier delta appends the
-      // same way; a compaction epoch folds base+deltas into a fresh base
-      // and drops the log (merge-on-read view identical either way)
-      store.appendSeen(fresh.select("canon_url"), epoch)
-      val bloomNew = Bloom.buildSegments(fresh.select("canon_url"),
-        "canon_url", bloomSegments, bloomBitsPerSegment)
-      val appendTables = Map(
-        "seen_bloom" -> bloomNew,
-        "metrics" -> metricsDf) ++
-        // signature file sizing tracks the BATCH's row count (the deltaDf
-        // rule below): the cached plan carries the probe's shuffle
-        // partitioning, which at small batches would strew one near-empty
-        // file per partition into a table read every epoch
-        ndState.map { case (simNew, _, _, _) => "corpus_sim" ->
-          simNew.coalesce(math.max(1L, math.min(nFetched / 1000000L + 1,
-            spark.sparkContext.defaultParallelism.toLong)).toInt) }
-      val ndAppendPaths: Map[String, Seq[String]] =
-        ndState.flatMap(_._2).map(d => "neardup_pairs" -> Seq(d)).toMap
-      // delta file sizing tracks the DELTA's row count (~1M rows/file,
-      // capped at the session parallelism), so a small epoch writes one
-      // file instead of one near-empty file per shuffle partition — the
-      // committed bytes scale with the batch, not with file-count
-      // constants (FrontierLogSpec pins the byte ratio). Deltas are plain
-      // parquet (state as a data column): appended dirs are read as one
-      // multi-root table, where hive-style partition inference would
-      // reject the multiple roots
-      val deltaRows = nFetched + nErrors + nEmitted
-      val deltaDf = transitions.unionByName(fresh)
-        .withColumn("seq", lit(epoch))
-        .repartition(math.max(1L, math.min(deltaRows / 1000000L + 1,
-          spark.sparkContext.defaultParallelism.toLong)).toInt)
-      val emptyDelta = deltaRows == 0
-      if (compactFrontierEvery > 0 && epoch % compactFrontierEvery == 0) {
-        val folded = FrontierLog.resolve(
-          if (emptyDelta) frontierAll(m) else frontierAll(m).unionByName(deltaDf))
-        // stage the fold once (state-partitioned, same dir the commit
-        // names), then derive the HEAD from the written bytes — the
-        // top-(R+1)*cut rows per host, the only rows the next R epochs of
-        // scheduling can possibly touch (head invariant above). Building
-        // it here rides the fold's amortization: one extra host-keyed
-        // top-k pass over the pending slice every R epochs buys every
-        // in-between epoch a head-sized scheduler read
-        val foldDir = store.stagingDir("frontier_base")
-        folded.write.mode("overwrite").partitionBy("state").parquet(foldDir)
-        // bytes this major fold REWROTE (measured before terminals rename
-        // out: the write cost was paid for them too)
-        val foldBaseBytes = m.counters.getOrElse("fold_base_bytes", 0L) +
-          store.pathBytes(foldDir)
-        // ---- archive-by-rename: fetched/failed are ABSORBING (a URL enters
-        // the frontier exactly once — candidates are anti-joined against
-        // seen — and only pending rows are ever scheduled), so the fold's
-        // terminal partitions are immutable forever. MOVE them — an O(1)
-        // directory rename inside the uncommitted staging space, crash-safe
-        // by the same argument as every staged write — into the append-only
-        // frontier_archive table instead of carrying them through every
-        // later fold: fold I/O is O(pending wavefront + delta window),
-        // independent of crawl AGE, where re-resolving the full frontier
-        // would re-write the ever-growing terminal history (≫ pending on a
-        // long crawl) every R epochs. A resumed v2-layout store (its whole
-        // terminal history still inside frontier_base) migrates itself on
-        // its first fold — the history leaves the fold window by one rename
-        // per state and is never rewritten again.
-        val hasPending = store.pathExists(s"$foldDir/state=pending")
-        val archDirs: Seq[String] =
-          if (!hasPending) Seq.empty // draining fold (no pending rows left):
-            // keep the terminals in the base so the committed dir is never
-            // a row-less parquet root that later reads cannot schema-infer
-          else {
-            val arch = store.stagingDir("frontier_archive")
-            store.deletePath(arch) // clobber a crashed attempt's orphan
-            val moved = Seq("fetched", "failed")
-              .filter(st => store.pathExists(s"$foldDir/state=$st"))
-            moved.foreach(st =>
-              store.movePath(s"$foldDir/state=$st", s"$arch/state=$st"))
-            if (moved.isEmpty) Seq.empty else Seq(arch)
-          }
-        val headK = (compactFrontierEvery.toLong + 1L) * cut
-        // the fold just materialized the exact pending set — count it from
-        // the written footers (count(*) over parquet is metadata-only, no
-        // data pages) to re-seed pending_rows and drive the head guard
-        val foldedPending =
-          spark.read.parquet(foldDir).filter(col("state") === "pending")
-        val pendingCount = if (hasPending) foldedPending.count() else 0L
-        // cached: the emptiness probe below and the committed write both
-        // consume the head — uncached, the per-host window over the fold's
-        // full pending slice would execute twice per fold epoch. The cost
-        // guard skips the build entirely when hosts·K ≳ pending: the extra
-        // window sort + head write would cost ~another fold for a head
-        // that saves ~nothing per epoch
-        val headOpt =
-          if (scheduleFromHead && headWorthwhile(headK, Some(pendingCount)))
-            Some(Sched.headSlice(foldedPending, headK).cache())
-          else None
-        headC = headOpt
-        // a frontier-draining fold produces an EMPTY head; committing it
-        // would leave a row-less parquet dir the next epoch cannot
-        // schema-infer (the delta append guards the identical hazard) —
-        // commit no head instead and drop any stale one, so the next
-        // epoch takes the full-view path and terminates normally. A
-        // guard-skipped build takes the same path: the base rewrite +
-        // dropped delta log invalidate any older head regardless
-        val headEmpty = headOpt.forall(_.isEmpty)
-        // the Bloom blob log folds here too: OR-merge every appended
-        // (epoch, segment) row plus this epoch's into one row per segment,
-        // so the per-epoch filter read merges O(segments + R) blobs, not
-        // O(epochs × segments) — OR is associative, so bit-identical
-        val bloomFolded = Bloom.foldSegments(
-          store.readTable(m, "seen_bloom") match {
-            case Some(prev) =>
-              prev.select("segment_id", "bloom").unionByName(bloomNew)
-            case None => bloomNew
-          })
-        val mFold = store.commit(epoch,
-          replace = (headOpt match {
-            case Some(h) if !headEmpty => Map("frontier_head" -> h)
-            case _ => Map.empty[String, DataFrame]
-          }) +
-            ("seen_bloom" -> bloomFolded) ++ robotsReplace,
-          replacePaths = Map("frontier_base" -> Seq(foldDir)),
-          append = appendTables - "seen_bloom",
-          counters = cfg ++ counters ++ ndCounters ++ mdCounters ++ robotsMeta ++
-            foldBytesMeta + ("fold_base_bytes" -> foldBaseBytes) +
-            ("pending_rows" -> pendingCount) ++
-            (if (headEmpty) Map.empty[String, Long]
-             else Map("head_epoch" -> epoch, "head_k" -> headK,
-               "head_cut" -> cut)),
-          appendPaths = Map("fetch_result" -> Seq(fetchDir)) ++
-            ndAppendPaths ++ mdAppendPaths ++
-            (if (archDirs.nonEmpty) Map("frontier_archive" -> archDirs)
-             else Map.empty),
-          drop = if (headEmpty) Set("frontier_delta", "frontier_head")
-            else Set("frontier_delta"))
-        // ---- archive-root consolidation: consolidateRoots (rename-only,
-        // into the PERMANENT oldest root — files move at most once). Newer
-        // roots end up holding only marker files; after the swap they are
-        // unreferenced and expire
-        val archRoots = mFold.tables.getOrElse("frontier_archive", Seq.empty)
-        consolidateRoots(archRoots, Seq("state=fetched", "state=failed"))
-          .foreach(kept =>
-            store.commit(epoch, replace = Map.empty, append = Map.empty,
-              counters = mFold.counters,
-              replacePaths = Map("frontier_archive" -> kept)))
-      } else {
-        // an all-empty epoch appends no delta: an empty parquet dir at the
-        // head of the delta list would break schema inference on read.
-        // head_epoch/head_k ride every manifest so the validity check
-        // above survives commits that don't touch the head — EXCEPT when
-        // this epoch's cut diverged from the head's (headCutStale): then
-        // head + meta leave the store now, before a floor revert could
-        // ever re-validate the over-consumed head
-        val headMeta: Map[String, Long] =
-          if (headCutStale) Map.empty
-          else m.counters.view
-            .filterKeys(k => k == "head_epoch" || k == "head_k" ||
-              k == "head_cut").toMap
-        val headDrop: Set[String] =
-          if (headCutStale) Set("frontier_head") else Set.empty
-        // delta_rows: upper bound on the delta table's rows, carried for
-        // minor-fold file sizing only (a fold's repartition must track the
-        // run's magnitude, not a file-count constant). Major folds drop the
-        // log and the counter together
-        val deltaRowsBound =
-          m.counters.getOrElse("delta_rows", 0L) + deltaRows
-        // fold only when there is something to fold: new delta rows, or a
-        // log of more than one run (an empty epoch over an already-folded
-        // single run would rewrite identical bytes). The prior log is
-        // deltaAll, already read ONCE for this epoch's schedule — a second
-        // readTable here would pay the delta list's file-listing + footer
-        // read again on every non-fold epoch for nothing
-        val minorFold = compactDeltaEvery > 0 &&
-          epoch % compactDeltaEvery == 0 &&
-          (if (emptyDelta) m.tables.get("frontier_delta").exists(_.size > 1)
-           else true) &&
-          (deltaAll.isDefined || !emptyDelta)
-        if (!minorFold) {
-          store.commit(epoch,
-            replace = robotsReplace,
-            append = if (emptyDelta) appendTables
-              else appendTables + ("frontier_delta" -> deltaDf),
-            counters = cfg ++ counters ++ ndCounters ++ mdCounters ++ robotsMeta ++
-              foldBytesMeta ++ pendingMeta ++ headMeta +
-              ("delta_rows" -> deltaRowsBound),
-            appendPaths = Map("fetch_result" -> Seq(fetchDir)) ++
-              ndAppendPaths ++ mdAppendPaths,
-            drop = headDrop)
-        } else {
-          // ---- MINOR fold: resolve the delta LOG into one run (latest row
-          // per key — view-identical, the same resolution the major fold
-          // would apply) and refresh the head from head ∪ delta. Touches
-          // O(delta window) bytes; the base is NEVER read or written here —
-          // this is what lets the major O(pending) rewrite cadence stretch
-          // while the delta list and the scheduler head stay compact.
-          val allDelta = (deltaAll, emptyDelta) match {
-            case (Some(p), false) => p.unionByName(deltaDf)
-            case (Some(p), true) => p
-            case (None, _) => deltaDf
-          }
-          val runDir = store.stagingDir("frontier_delta")
-          FrontierLog.resolve(allDelta)
-            .repartition(math.max(1L, math.min(deltaRowsBound / 1000000L + 1,
-              spark.sparkContext.defaultParallelism.toLong)).toInt)
-            .write.mode("overwrite").parquet(runDir)
-          val foldDeltaBytes = m.counters.getOrElse("fold_delta_bytes", 0L) +
-            store.pathBytes(runDir)
-          // Head refresh: head' = top-K' per host of pending(head ∪ delta),
-          // K' = hk − (epoch − he)·cut (the budget not yet consumable since
-          // the head was built). Exactness: the head at `he` contained the
-          // true per-host top-hk; since then ≤ (epoch−he)·cut rows per host
-          // left pending (only scheduled rows transition) and every touched
-          // or fresh row is in the delta, so pending(head ∪ delta) ⊇ the
-          // true per-host top-K' — and its top-K' slice EQUALS the true
-          // top-K' (same total order as the scheduler). Re-dating the head
-          // to `epoch` with budget K' makes the standard validity check
-          // exact, and sweeps consumed rows out of storage. Skipped when
-          // K' < cut — such a head could never serve even the next epoch
-          // (and by the same arithmetic the old head is stale for every
-          // later epoch too, so keeping its meta unchanged is harmless)
-          // the refresh arithmetic is exact only under an unchanged cut
-          // (same reasoning as the scheduling validity check above): a cut
-          // change leaves the head un-refreshed and the check drops it
-          // the cost guard applies to refreshes exactly as to builds:
-          // skipping leaves the old head meta carried unchanged — the head
-          // simply goes stale by the validity arithmetic and later epochs
-          // take the exact full-view path
-          val headRefresh: Option[(DataFrame, Long)] = for {
-            he <- m.counters.get("head_epoch")
-            hk <- m.counters.get("head_k")
-            // the hard off switch skips refreshes too: a store resumed
-            // with the head path disabled must not keep paying the
-            // per-host window sort for a head no scheduler reads (meta is
-            // carried unchanged, so a later head-on resume re-validates
-            // against the true elapsed-epoch consumption)
-            if scheduleFromHead
-            if m.counters.getOrElse("head_cut", cutRows) == cut
-            kRem = hk - (epoch - he) * cut
-            if kRem >= cut
-            if headWorthwhile(kRem, pendingNow)
-            h <- store.readTable(m, "frontier_head")
-          } yield (Sched.headSlice(
-            FrontierLog.pendingResolved(h,
-              Some(allDelta.filter(col("seq") > he))), kRem).cache(), kRem)
-          headC = headRefresh.map(_._1)
-          // a drained head (all consumed, nothing fresh) must not commit:
-          // a row-less parquet dir breaks schema inference, and pending
-          // rows may still exist below the original cut — drop head + meta
-          // so later epochs take the exact full-view path
-          val headEmpty = headRefresh.exists(_._1.isEmpty)
-          store.commit(epoch,
-            replace = (headRefresh match {
-              case Some((h, _)) if !headEmpty => Map("frontier_head" -> h)
-              case _ => Map.empty[String, DataFrame]
-            }) ++ robotsReplace,
-            replacePaths = Map("frontier_delta" -> Seq(runDir)),
-            append = appendTables,
-            counters = cfg ++ counters ++ ndCounters ++ mdCounters ++ robotsMeta ++
-              foldBytesMeta ++ pendingMeta +
-              ("fold_delta_bytes" -> foldDeltaBytes) ++
-              (headRefresh match {
-                case Some((_, k)) if !headEmpty =>
-                  Map("head_epoch" -> epoch, "head_k" -> k, "head_cut" -> cut)
-                case Some(_) => Map.empty[String, Long] // drained: meta dropped
-                // no refresh: carry unchanged — unless the cut diverged,
-                // which retires head + meta for good (headCutStale above)
-                case None => headMeta
-              }) +
-              ("delta_rows" -> deltaRowsBound),
-            appendPaths = Map("fetch_result" -> Seq(fetchDir)) ++
-              ndAppendPaths ++ mdAppendPaths,
-            drop = if (headEmpty) Set("frontier_head") else headDrop)
-        }
-      }
-      // ---- per-epoch append-root consolidation (consolidateRoots, shared
-      // with the archive): corpus_sim gains one parquet root per
-      // epoch-with-fetches and is read on the EPOCH PATH (the banded
-      // probe), neardup_pairs and media_features one per such epoch —
-      // unbounded, every listing and manifest growing linearly with crawl
-      // AGE. Over the cap the newer roots' files merge-move (renames, zero
-      // rewrite — all three are immutable appends, no resolution exists to
-      // skip) into the permanent oldest root and the manifest swaps to
-      // that one root. Emptied roots drop out at the swap and expire with
-      // the next
-      // expireUnreferenced sweep
-      val appendRootTables =
-        (if (nearDupDocs) Seq("corpus_sim", "neardup_pairs") else Seq.empty) ++
-          (if (mediaDocs) Seq("media_features") else Seq.empty)
-      if (appendRootTables.nonEmpty) {
-        val mNow = store.latest().get
-        val swaps = appendRootTables.flatMap { t =>
-          consolidateRoots(mNow.tables.getOrElse(t, Seq.empty), Seq(""))
-            .map(t -> _)
-        }
-        if (swaps.nonEmpty)
-          store.commit(epoch, replace = Map.empty, append = Map.empty,
-            counters = mNow.counters, replacePaths = swaps.toMap)
-      }
+      sink(c, fresh, nEmitted)
+      val nd = nearDup(c, okDocs, nFetched)
+      val md = media(c, okDocs, nFetched)
+      val update = frontierUpdate(c, cut, transitions, fresh, deltaAll,
+        nFetched + nErrors + nEmitted)
+      // ---- the ONE epoch commit: every layer's fragment, all-or-nothing
+      val all = Commit(append = Map("metrics" -> metricsDf),
+        appendPaths = Map("fetch_result" -> Seq(fetchDir)),
+        counters = cfg ++ counters) ++ robotsCommit ++ nd ++ md ++ update
+      val mEpoch = store.commit(c.epoch, all.replace, all.append, all.counters,
+        appendPaths = all.appendPaths, replacePaths = all.replacePaths,
+        drop = all.drop)
+      consolidate(mEpoch)
       // seen compaction is GENERATIONAL (tier-1: fold only this cadence
       // window's partitions — O(R × batch) I/O, older generations never
       // touched), with a rare tier-2 full fold when generation partitions
@@ -1050,10 +382,10 @@ final class EpochDriver(
       // O(total) every cadence. Tier-2 also sweeps up any range a crashed
       // compaction left unfolded (folds are file-count hygiene, never
       // needed for correctness: appends are disjoint by the anti-join)
-      if (compactSeenEvery > 0 && epoch % compactSeenEvery == 0) {
+      if (compactSeenEvery > 0 && c.epoch % compactSeenEvery == 0) {
         if (store.seenPartitionCount() >= EpochDriver.SeenFullFoldPartitions)
-          store.compactSeen(epoch)
-        else store.compactSeen(epoch, epoch - compactSeenEvery)
+          store.compactSeen(c.epoch)
+        else store.compactSeen(c.epoch, c.epoch - compactSeenEvery)
       }
       // the staged robots rows are durable in this epoch's snapshot now; a
       // failed commit leaves them staged so the retry still applies them.
@@ -1062,15 +394,507 @@ final class EpochDriver(
       // epoch, not be wiped with the one just committed — including one
       // that lands between reading the field and clearing it
       if (staged.isDefined) stagedRobots.compareAndSet(staged, None)
-      counters ++ ndCounters ++ mdCounters
-    } finally {
-      rankedC.foreach(_.unpersist())
-      candDepthC.foreach(_.unpersist())
-      freshC.foreach(_.unpersist())
-      headC.foreach(_.unpersist())
-      simNewC.foreach(_.unpersist())
-      bloomBc.foreach(_.destroy())
+      counters ++ nd.counters ++ md.counters
+    } finally c.release()
+  }
+
+  /** ---- robots in effect for THIS epoch (J3): a staged update wins (and
+    * is committed with this epoch's snapshot, so it survives resume); else
+    * the versioned store table init committed (what every resume reads).
+    * Returns the robots rows, the delay floor, and the commit fragment.
+    */
+  private def robotsInEffect(m: store.Manifest,
+      staged: Option[Seq[(String, Long, Seq[String])]]): (DataFrame, Long, Commit) = {
+    val (df, floorMs, replace) = staged match {
+      case Some(rows) =>
+        val df = Sched.robotsDf(spark, rows)
+        (df, floorOf(rows), Map("robots" -> df))
+      case None =>
+        val paths = m.tables("robots")
+        val df = robotsCache.collect { case (p, d) if p == paths => d }.getOrElse {
+          val d = store.readTable(m, "robots").get
+          robotsCache = Some((paths, d)); d
+        }
+        (df, m.counters("robots_floor_ms"), Map.empty[String, DataFrame])
     }
+    (df, floorMs, Commit(replace = replace,
+      counters = Map("robots_floor_ms" -> floorMs)))
+  }
+
+  /** ---- schedule: W2 rank + T4 budget over the merged pending view;
+    * returns the ranked batch (cached: BATCH-sized after the budget cut,
+    * and both the fetch and the frontier transitions consume it — without
+    * the cache the second consumer recomputes the pending scan + window)
+    * and the delta log as read for it.
+    *
+    * Head fast path — the head invariant: a head of K rows/host built at
+    * epoch `he` still contains every host's true top-cut at epoch e iff
+    * K >= (e - he) * cut — each epoch consumes at most `cut` rows per
+    * host, rows only leave pending by being scheduled (so their
+    * transitions are in the delta), and scores never rise. When valid,
+    * scheduling reads O(hosts*K + delta) rows instead of the whole
+    * pending frontier; when stale or absent it falls back to the full
+    * merge-on-read view. Both sources contain the true per-host top-cut,
+    * so the window + budget cut yield identical batches. The check reads
+    * counters first and the table last: a permanently stale head must not
+    * pay a parquet schema read per epoch just to be discarded. `head_cut`
+    * is the budget cut the head was built under: per-host consumption
+    * bounds computed under one cut are meaningless under another, so any
+    * cut change invalidates the head until the next fold rebuilds it.
+    */
+  private def schedule(c: Ctx, robotsDf: DataFrame, floorMs: Long,
+      cut: Long): (DataFrame, Option[DataFrame]) = {
+    val headSrc = for {
+      h <- headMeta(c.m)
+      if scheduleFromHead && h.cut == cut && h.k >= (c.epoch - h.epoch) * cut
+      df <- store.readTable(c.m, "frontier_head")
+    } yield (df, h.epoch)
+    lastSchedSource = if (headSrc.isDefined) "head" else "full"
+    // head path: the head already resolves every delta row with
+    // seq <= head_epoch (a fold-built head post-dates the dropped log; a
+    // minor-refreshed head absorbed the folded run), so prune the delta
+    // scan to strictly newer rows — each delta file is one epoch, so
+    // parquet min/max stats on seq skip old files (and the whole folded
+    // run) at footer cost. The full-view fallback must NOT prune: the
+    // base pre-dates every delta row
+    val deltaAll = store.readTable(c.m, "frontier_delta")
+    val pending = FrontierLog.pending(
+        headSrc.fold(store.readTable(c.m, "frontier_base").get)(_._1),
+        headSrc.fold(deltaAll)(h => deltaAll.map(_.filter(col("seq") > h._2))))
+      .join(broadcast(robotsDf.select("host", "crawl_delay_ms")), Seq("host"), "left")
+      .withColumn("crawl_delay_ms", coalesce(col("crawl_delay_ms"), lit(defaultDelayMs)))
+    (c.keep(Sched.rankAndBudget(pending, epochBudgetMs, floorMs)), deltaAll)
+  }
+
+  /** ---- fetch (S1) — salted partitions, partition-local lineage. The
+    * full fetch output is made durable FIRST (the dir this commit will
+    * reference; a crash re-runs the deterministic fetch over the same
+    * batch into the same dir), then every consumer reads it column-pruned
+    * — transitions/counters never deserialize the spans. Returns the dir,
+    * the fetch table and its ok documents.
+    */
+  private def fetch(c: Ctx, ranked: DataFrame): (String, DataFrame, DataFrame) = {
+    val batch = Sched.fetchBatch(ranked, c.epoch, saltBuckets,
+      spark.sparkContext.defaultParallelism)
+    val dir = store.stagingDir("fetch_result")
+    val fetchedDs = FetchSim.run(batch, seed, nHosts).toDF()
+    fetchedDs.write.mode("overwrite").parquet(dir)
+    val fetched = spark.read.schema(fetchedDs.schema).parquet(dir)
+    (dir, fetched, fetched.filter(col("status") === "ok")
+      .select(col("canon_url").as("doc_id"), col("depth"), col("spans")))
+  }
+
+  /** ---- extract (S2/D2) + canon (X14) + robots filter (J3/F3): the
+    * distinct allowed candidates at their minimum discovery depth (cached:
+    * counted here, deduped next), and their count.
+    */
+  private def extract(c: Ctx, okDocs: DataFrame,
+      robotsDf: DataFrame): (DataFrame, Long) = {
+    val cand = Extract.canonCandidates(okDocs.select("doc_id", "spans"))
+    val candDepth = c.keep(Sched.allowed(cand, robotsDf, defaultDelayMs)
+      .select("canon_url", "host", "src_doc")
+      .join(okDocs.select(col("doc_id").as("src_doc"), col("depth")), Seq("src_doc"))
+      .groupBy("canon_url", "host")
+      .agg((min("depth") + 1).cast("int").as("depth")))
+    (candDepth, candDepth.count())
+  }
+
+  /** ---- dedup vs seen: Bloom prefilter (D3) + exact anti-join (J2) over
+    * the bucketed seen scan (the huge, append-only side arrives
+    * pre-partitioned by hash(canon_url) — no big-side Exchange). Segment
+    * merge runs on the executors (one final blob per segment reaches the
+    * driver). Returns the fresh frontier rows (cached: counted, emitted,
+    * appended to seen and to the delta).
+    */
+  private def dedup(c: Ctx, candDepth: DataFrame): DataFrame = {
+    val seen = store.readSeen(c.m.epoch)
+    val segTable = if (useBloom) store.readTable(c.m, "seen_bloom") else None
+    c.bloom =
+      if (bloomRouted) None
+      else segTable.map(df =>
+        Seen.broadcastSegments(spark,
+          Bloom.mergedSegments(df, bloomSegments, bloomBitsPerSegment)))
+    val unseen = segTable match {
+      case Some(segs) if bloomRouted =>
+        Seen.filterUnseenRouted(candDepth, "canon_url", seen, segs, bloomSegments)
+      case _ => Seen.filterUnseen(candDepth, "canon_url", seen, c.bloom)
+    }
+    c.keep(unseen
+      .withColumn("score", lit(1.0) / (lit(1.0) + col("depth")))
+      .withColumn("state", lit("pending"))
+      .withColumn("retry_count", lit(0))
+      .withColumn("discovered_epoch", lit(c.epoch))
+      .select(EpochDriver.RowCols.map(col): _*))
+  }
+
+  /** Frontier transitions of the scheduled rows (fetched ok → fetched;
+    * error → retry w/ score decay, dead at maxRetries — T5/T7); everything
+    * else rests untouched in base/older deltas. The inner join is
+    * batch-sized on both sides. One batch-sized pass over the
+    * post-transition states yields the fetched and error tallies (errors
+    * are exactly failed + still-pending).
+    */
+  private def outcomes(ranked: DataFrame,
+      fetched: DataFrame): (DataFrame, Long, Long) = {
+    val outcome = fetched.select(col("canon_url"), col("status").as("_status"))
+    val transitions = ranked.select(EpochDriver.RowCols.map(col): _*)
+      .join(outcome, Seq("canon_url"))
+      .withColumn("state",
+        when(col("_status") === "ok", lit("fetched"))
+          .when(col("_status") === "error" && col("retry_count") + 1 >= maxRetries,
+            lit("failed"))
+          .otherwise(col("state")))
+      .withColumn("score",
+        when(col("_status") === "error" && col("retry_count") + 1 < maxRetries,
+          col("score") * 0.5).otherwise(col("score")))
+      .withColumn("retry_count",
+        when(col("_status") === "error", col("retry_count") + 1)
+          .otherwise(col("retry_count")))
+      .drop("_status")
+    val states = transitions.groupBy("state").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def n(s: String) = states.getOrElse(s, 0L)
+    (transitions, n("fetched"), n("failed") + n("pending"))
+  }
+
+  /** ---- K1 record sink + K2 job-control message (kafka_producer.py
+    * send_crawling_completion semantics: count==0 ⇒ fail with reason, no
+    * wall clock — completed_at is virtual epoch time in KST).
+    */
+  private def sink(c: Ctx, fresh: DataFrame, nEmitted: Long): Unit =
+    sinkDir.foreach { d =>
+      graft.sinks.RecordSink.emit(
+        fresh.withColumn("epoch", lit(c.epoch)), "canon_url",
+        s"$d/frontier-records", tag = s"e${c.epoch}", bridgeUrl = sinkBridge)
+      val completedAt = java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0)
+        .plusMinutes(c.epoch).atOffset(java.time.ZoneOffset.ofHours(9))
+        .format(java.time.format.DateTimeFormatter.ofPattern(
+          "yyyy-MM-dd'T'HH:mm:ssxxx"))
+      val control = Seq((s"epoch_${c.epoch}",
+        if (nEmitted > 0) "done" else "fail",
+        "collection",
+        if (nEmitted > 0) null else "review count 0",
+        nEmitted, completedAt))
+        .toDF("job_id", "status", "step", "failure_reason",
+          "expected_count", "completed_at")
+      graft.sinks.RecordSink.emit(control, "job_id", s"$d/job-control",
+        tag = s"e${c.epoch}", bridgeUrl = sinkBridge)
+    }
+
+  /** Write `df` once into `table`'s staging dir and count it from the
+    * written footers (the fetch_result pattern: a separate count() action
+    * would execute the plan twice; a crash re-runs the deterministic plan
+    * into the same dir). A row-less dir is deleted — parquet cannot
+    * schema-infer it — and reported as None.
+    */
+  private def stage(table: String, df: DataFrame): Option[(String, Long)] = {
+    val dir = store.stagingDir(table)
+    df.write.mode("overwrite").parquet(dir)
+    val n = spark.read.parquet(dir).count()
+    if (n == 0) { store.deletePath(dir); None } else Some((dir, n))
+  }
+
+  /** ---- incremental near-dup over the epoch's fetched documents (the
+    * q49 steady-state shape as an ENGINE stage): reassemble each ok doc's
+    * text from its spans in offset order (the q43 formulation), simhash
+    * the batch with the production xxhash64/64 path, probe the persisted
+    * corpus signatures — candidate work O(batch × bucket occupancy),
+    * old-old pairs never generated — and append the batch's signatures so
+    * the next epoch probes this one too. Banding geometry is re-derived per
+    * epoch from the cumulative doc count (B is a pure cost knob, never a
+    * recall knob — NearDupSpec), so signatures are geometry-free and a
+    * growing corpus widens its own banding. sim_docs carries forward
+    * across empty epochs like delta_rows: a counter absent from one
+    * manifest would reset the cumulative count (and the derived banding
+    * geometry) on the next.
+    */
+  private def nearDup(c: Ctx, okDocs: DataFrame, nFetched: Long): Commit = {
+    val simDocs = c.m.counters.getOrElse("sim_docs", 0L) + nFetched
+    if (!nearDupDocs) Commit()
+    else if (nFetched == 0)
+      Commit(counters = Map("sim_docs" -> simDocs, "neardup_pairs" -> 0L))
+    else {
+      val batchText = okDocs
+        .select(col("doc_id"), explode(col("spans")).as("span"))
+        .groupBy("doc_id")
+        .agg(array_join(transform(array_sort(filter(
+            collect_list(struct(col("span.offset"), col("span.text"))),
+            x => x.getField("text") =!= "")),
+          x => x.getField("text")), " ").as("text"))
+      // TOTAL over the batch: explode drops a doc whose spans array is
+      // empty, so the reassembly alone would skip it — re-anchor on the
+      // fetched set and coalesce to "" so every fetched doc reaches the
+      // signature step (simhashTotal then assigns the empty-token
+      // signature 0L); the sim_docs counter and the corpus_sim row
+      // count stay equal BY CONSTRUCTION, not by corpus luck
+      val batchDocs = okDocs.select("doc_id")
+        .join(batchText, Seq("doc_id"), "left")
+        .na.fill("", Seq("text"))
+      // cached: the pairs probe and the commit write both consume the
+      // batch signatures
+      val simNew = c.keep(NearDup.simhashTotal(batchDocs, NearDup.XxHashBits,
+        NearDup.xxTokenHash))
+      val blocks = graft.functions.Banding.blocksFor(simDocs,
+        hashBits = NearDup.XxHashBits)
+      val pairs = stage("neardup_pairs", (store.readTable(c.m, "corpus_sim") match {
+        case Some(corpus) => NearDup.incrementalFromSimhash(
+          simNew, corpus.select("doc_id", "simhash"), blocks, NearDup.XxHashBits)
+        case None => NearDup.pairsFromSimhash(simNew, blocks, NearDup.XxHashBits)
+      }).withColumn("epoch", lit(c.epoch)))
+      // signature file sizing tracks the BATCH's row count: the cached
+      // plan carries the probe's shuffle partitioning, which at small
+      // batches would strew one near-empty file per partition into a
+      // table read every epoch
+      Commit(append = Map("corpus_sim" -> simNew.coalesce(filesFor(nFetched))),
+        appendPaths = pairs.map(p => "neardup_pairs" -> Seq(p._1)).toMap,
+        counters = Map("sim_docs" -> simDocs,
+          "neardup_pairs" -> pairs.fold(0L)(_._2)))
+    }
+  }
+
+  /** ---- media feature extraction over the epoch's fetched documents (the
+    * media half of the interleaved corpus, mirroring the near-dup stage's
+    * text half): each ok doc's media spans resolve their media_ref through
+    * the simulated media fetch and decode through the production JDK pixel
+    * path — REAL container bytes, REAL raster decode, luma-grid embedding
+    * — inside one mapPartitions (payload bytes live only inside the task;
+    * the table stores features, never payloads, so nothing raster-sized
+    * ever shuffles or persists). media_rows carries forward like sim_docs.
+    */
+  private def media(c: Ctx, okDocs: DataFrame, nFetched: Long): Commit =
+    if (!mediaDocs) Commit()
+    else {
+      val written = if (nFetched == 0) None else {
+        val refs = okDocs
+          .select(col("doc_id"), explode(col("spans")).as("span"))
+          .filter(col("span.kind") === "media" && col("span.media_ref") =!= "")
+          .select(col("doc_id"), col("span.media_ref").as("media_ref"),
+            col("span.offset").as("offset"))
+        val theSeed = seed
+        val feats = refs.as[(String, String, Int)].mapPartitions { it =>
+          // partition-local codec init (the extractFeatures posture)
+          java.lang.System.setProperty("java.awt.headless", "true")
+          javax.imageio.ImageIO.setUseCache(false)
+          it.map { case (doc, ref, off) =>
+            val payload = graft.fetch.MediaFetchSim.fetchBytes(ref, theSeed)
+            // shared decode-or-stub posture (incl. header-dims recovery
+            // for undecodable-but-headered bytes) — one implementation,
+            // so this stage and extractFeatures can never drift
+            val (w, h, emb, _) =
+              graft.operators.Multimodal.imageFeatures(payload)
+            (doc, ref, off, w, h, payload.length, emb)
+          }
+        }.toDF("doc_id", "media_ref", "offset", "width", "height",
+          "n_bytes", "embedding")
+        // repartition AFTER the decode, never coalesce: coalesce is
+        // narrow, so it would collapse the uncached synth+decode map
+        // itself to the output file count — at small batches ONE task
+        // doing every JPEG round-trip (measured: +51 s/6-epoch run).
+        // The shuffle moves only feature rows (~hundreds of bytes each);
+        // file sizing tracks the fetched-doc count (spans/doc is a
+        // small corpus constant, so ~1M-row files up to that factor)
+        stage("media_features", feats.repartition(filesFor(nFetched)))
+      }
+      Commit(appendPaths = written.map(w => "media_features" -> Seq(w._1)).toMap,
+        counters = Map("media_rows" -> (c.m.counters.getOrElse("media_rows", 0L) +
+          written.fold(0L)(_._2))))
+    }
+
+  /** ---- frontier update: the seen set + its Bloom segments and the
+    * frontier delta, committed as one of three shapes:
+    *  - PLAIN: append the delta (an all-empty epoch appends none: an empty
+    *    parquet dir at the head of the delta list would break schema
+    *    inference on read);
+    *  - MINOR fold: resolve the delta LOG into one run and refresh the head;
+    *  - MAJOR fold: rewrite the base, archive its terminals, rebuild the
+    *    head, fold the Bloom log, drop the delta log.
+    * Seen and Bloom are append-only: each epoch contributes only its fresh
+    * URLs; seen goes to the bucketed table (epoch-partitioned, idempotent
+    * overwrite — see SnapshotStore), Bloom readers OR-merge segments.
+    * Cumulative fold-cost counters (bytes written by major base rewrites
+    * and by minor delta resolves) carry forward: the evidence that minor
+    * folds let the major cadence stretch is their RATIO in a CLI A/B, read
+    * straight out of the final manifest.
+    */
+  private def frontierUpdate(c: Ctx, cut: Long, transitions: DataFrame,
+      fresh: DataFrame, deltaAll: Option[DataFrame], deltaRows: Long): Commit = {
+    val (m, epoch) = (c.m, c.epoch)
+    store.appendSeen(fresh.select("canon_url"), epoch)
+    val bloomNew = Bloom.buildSegments(fresh.select("canon_url"),
+      "canon_url", bloomSegments, bloomBitsPerSegment)
+    // deltas are plain parquet (state as a data column): appended dirs
+    // are read as one multi-root table, where hive-style partition
+    // inference would reject the multiple roots
+    val deltaDf = transitions.unionByName(fresh)
+      .withColumn("seq", lit(epoch))
+      .repartition(filesFor(deltaRows))
+    val emptyDelta = deltaRows == 0
+    val foldBytes = m.counters.view.filterKeys(k =>
+      k == "fold_base_bytes" || k == "fold_delta_bytes").toMap
+    // delta_rows: upper bound on the delta table's rows, carried for
+    // minor-fold file sizing only (a fold's repartition must track the
+    // run's magnitude, not a file-count constant). Major folds drop the
+    // log and the counter together
+    val deltaRowsBound = m.counters.getOrElse("delta_rows", 0L) + deltaRows
+    // a cut change PERMANENTLY invalidates a standing head, so the first
+    // epoch that runs under the new cut drops head + meta. Merely failing
+    // the scheduling check is not enough: epochs under a different cut
+    // consume up to THAT cut per host, so if the floor later reverted, the
+    // validity arithmetic would under-count the mismatched epochs'
+    // consumption and re-validate an over-consumed head
+    val standing = headMeta(m).filter(_.cut == cut)
+    // fold only when there is something to fold: new delta rows, or a log
+    // of more than one run (an empty epoch over an already-folded single
+    // run would rewrite identical bytes)
+    val minorFold = compactDeltaEvery > 0 && epoch % compactDeltaEvery == 0 &&
+      (!emptyDelta || m.tables.get("frontier_delta").exists(_.size > 1))
+    if (compactFrontierEvery > 0 && epoch % compactFrontierEvery == 0) {
+      val folded = FrontierLog.resolve(
+        if (emptyDelta) frontierAll(m) else frontierAll(m).unionByName(deltaDf))
+      // stage the fold once (state-partitioned, same dir the commit
+      // names), then derive the HEAD from the written bytes — the
+      // top-(R+1)*cut rows per host, the only rows the next R epochs of
+      // scheduling can possibly touch. Building it here rides the fold's
+      // amortization: one extra host-keyed top-k pass over the pending
+      // slice every R epochs buys every in-between epoch a head-sized
+      // scheduler read. The base rewrite + dropped delta log invalidate
+      // any older head, so nothing stands when none is built
+      val foldDir = store.stagingDir("frontier_base")
+      folded.write.mode("overwrite").partitionBy("state").parquet(foldDir)
+      // bytes this major fold REWROTE (measured before terminals rename
+      // out: the write cost was paid for them too)
+      val baseBytes = m.counters.getOrElse("fold_base_bytes", 0L) +
+        store.pathBytes(foldDir)
+      val archived = archiveTerminals(foldDir)
+      val meta = HeadMeta(epoch, (compactFrontierEvery.toLong + 1L) * cut, cut)
+      val slice = if (!scheduleFromHead) None else Some((Sched.headSlice(
+        spark.read.parquet(foldDir).filter(col("state") === "pending"),
+        meta.k), meta))
+      // the Bloom blob log folds here too: OR-merge every appended
+      // (epoch, segment) row plus this epoch's into one row per segment,
+      // so the per-epoch filter read merges O(segments + R) blobs, not
+      // O(epochs × segments) — OR is associative, so bit-identical
+      val bloomFolded = Bloom.foldSegments(store.readTable(m, "seen_bloom")
+        .fold(bloomNew)(_.select("segment_id", "bloom").unionByName(bloomNew)))
+      Commit(replace = Map("seen_bloom" -> bloomFolded),
+        replacePaths = Map("frontier_base" -> Seq(foldDir)),
+        appendPaths = archived,
+        counters = foldBytes + ("fold_base_bytes" -> baseBytes),
+        drop = Set("frontier_delta")) ++ headCommit(c, slice, None)
+    } else if (minorFold) {
+      // ---- MINOR fold: resolve the delta LOG into one run (latest row
+      // per key — view-identical, the same resolution the major fold
+      // would apply). Touches O(delta window) bytes; the base is NEVER
+      // read or written here — this is what lets the major O(pending)
+      // rewrite cadence stretch while the delta list and the scheduler
+      // head stay compact. The prior log is deltaAll, already read ONCE
+      // for this epoch's schedule
+      val allDelta = deltaAll.fold(deltaDf)(p =>
+        if (emptyDelta) p else p.unionByName(deltaDf))
+      val runDir = store.stagingDir("frontier_delta")
+      FrontierLog.resolve(allDelta).repartition(filesFor(deltaRowsBound))
+        .write.mode("overwrite").parquet(runDir)
+      val deltaBytes = m.counters.getOrElse("fold_delta_bytes", 0L) +
+        store.pathBytes(runDir)
+      // Head refresh: head' = top-K' per host of pending(head ∪ delta),
+      // K' = hk − (epoch − he)·cut (the budget not yet consumable since
+      // the head was built). Exactness: the head at `he` contained the
+      // true per-host top-hk; since then ≤ (epoch−he)·cut rows per host
+      // left pending (only scheduled rows transition) and every touched
+      // or fresh row is in the delta, so pending(head ∪ delta) ⊇ the
+      // true per-host top-K' — and its top-K' slice EQUALS the true
+      // top-K' (same total order as the scheduler). Re-dating the head
+      // to `epoch` with budget K' makes the standard validity check
+      // exact, and sweeps consumed rows out of storage. Skipped when
+      // K' < cut — such a head could never serve even the next epoch
+      // (and by the same arithmetic the standing head is stale for every
+      // later epoch too, so keeping its meta unchanged is harmless). The
+      // hard off switch skips refreshes too: a store resumed with the
+      // head path disabled must not keep paying the per-host window sort
+      // for a head no scheduler reads (meta is kept, so a later head-on
+      // resume re-validates against the true elapsed-epoch consumption)
+      val slice = for {
+        h <- standing if scheduleFromHead
+        kRem = h.k - (epoch - h.epoch) * cut
+        if kRem >= cut
+        df <- store.readTable(m, "frontier_head")
+      } yield (Sched.headSlice(FrontierLog.pendingResolved(df,
+        Some(allDelta.filter(col("seq") > h.epoch))), kRem),
+        HeadMeta(epoch, kRem, cut))
+      Commit(replacePaths = Map("frontier_delta" -> Seq(runDir)),
+        append = Map("seen_bloom" -> bloomNew),
+        counters = foldBytes + ("fold_delta_bytes" -> deltaBytes) +
+          ("delta_rows" -> deltaRowsBound)) ++ headCommit(c, slice, standing)
+    } else
+      Commit(append = Map("seen_bloom" -> bloomNew) ++
+          (if (emptyDelta) Map.empty else Map("frontier_delta" -> deltaDf)),
+        counters = foldBytes + ("delta_rows" -> deltaRowsBound)) ++
+        headCommit(c, None, standing)
+  }
+
+  /** ---- archive-by-rename: fetched/failed are ABSORBING (a URL enters the
+    * frontier exactly once — candidates are anti-joined against seen —
+    * and only pending rows are ever scheduled), so a fold's terminal
+    * partitions are immutable forever. MOVE them — an O(1) directory
+    * rename inside the uncommitted staging space, crash-safe by the same
+    * argument as every staged write — into the append-only
+    * frontier_archive table instead of carrying them through every later
+    * fold: fold I/O is O(pending wavefront + delta window), independent of
+    * crawl AGE. A draining fold (no pending rows left) keeps the terminals
+    * in the base, so the committed dir is never a row-less parquet root
+    * that later reads cannot schema-infer. Returns the appendPaths entry.
+    */
+  private def archiveTerminals(foldDir: String): Map[String, Seq[String]] =
+    if (!store.pathExists(s"$foldDir/state=pending")) Map.empty
+    else {
+      val arch = store.stagingDir("frontier_archive")
+      store.deletePath(arch) // clobber a crashed attempt's orphan
+      val moved = Seq("fetched", "failed")
+        .filter(st => store.pathExists(s"$foldDir/state=$st"))
+      moved.foreach(st =>
+        store.movePath(s"$foldDir/state=$st", s"$arch/state=$st"))
+      if (moved.isEmpty) Map.empty else Map("frontier_archive" -> Seq(arch))
+    }
+
+  /** ---- append-root consolidation: ONE pass over every append-rooted
+    * table (frontier_archive with its state= subdirs, corpus_sim,
+    * neardup_pairs, media_features), at most ONE swap commit. Over the
+    * cap, a table's newer roots' files are merge-moved (renames, zero
+    * rewrite) into its OLDEST root and the swap points the table at that
+    * one root; emptied roots leave the manifest at the swap and expire
+    * with the next sweep.
+    *
+    * The target being the PERMANENT head root makes every file move at
+    * most once over the table's lifetime: later appends land AFTER the
+    * head in the manifest list, so a consolidated file is never a move
+    * source again (a newest-root target would re-rename the ENTIRE
+    * history every cycle — O(crawl age) renames, and names growing a
+    * prefix each pass toward the filesystem's 255-char component limit).
+    * The r<i>- prefix disambiguates same-named files from different
+    * source roots within one pass; across passes the part files'
+    * write-job UUIDs already make names unique.
+    *
+    * Crash-safe by ordering: the epoch commit `mEpoch` references the old
+    * roots AND the head, renames keep each file in exactly one referenced
+    * location at every instant (multi-root reads stay complete and
+    * duplicate-free), and a crash mid-move leaves a still-over-cap list
+    * the next epoch's pass converges.
+    */
+  private def consolidate(mEpoch: store.Manifest): Unit = {
+    val swaps = EpochDriver.AppendRootTables.flatMap { case (t, subdirs) =>
+      val roots = mEpoch.tables.getOrElse(t, Seq.empty)
+      if (roots.size <= archiveMaxRoots) None
+      else {
+        roots.tail.zipWithIndex.foreach { case (root, i) =>
+          subdirs.foreach(sub => store.moveFilesInto(s"$root$sub",
+            s"${roots.head}$sub", s"r$i-"))
+        }
+        Some(t -> Seq(roots.head))
+      }
+    }
+    if (swaps.nonEmpty)
+      store.commit(mEpoch.epoch, replace = Map.empty, append = Map.empty,
+        counters = mEpoch.counters, replacePaths = swaps.toMap)
   }
 
   /** Run epochs until `maxEpochs` or an empty batch (exhausted frontier). */
@@ -1092,12 +916,10 @@ final class EpochDriver(
   }
 
   /** Append-only terminal-history archive (fetched/failed rows renamed out
-    * of the fold window — see the archive-by-rename block in runEpoch).
-    * Read per-root and unioned: each archived dir carries hive-style
-    * `state=` partition subdirs, and multi-root parquet reads reject hive
-    * inference. Archive roots number one per fold-with-terminals — bounded
-    * by crawl length / compaction cadence — and NOTHING on the epoch path
-    * reads them; only this full-history view does.
+    * of the fold window — see archiveTerminals). Read per-root and
+    * unioned: each archived dir carries hive-style `state=` partition
+    * subdirs, and multi-root parquet reads reject hive inference. NOTHING
+    * on the epoch path reads the archive; only this full-history view does.
     */
   private def archive(m: store.Manifest): Option[DataFrame] =
     m.tables.get("frontier_archive")
@@ -1132,18 +954,9 @@ final class EpochDriver(
 }
 
 object EpochDriver {
-  /** Version of the snapshot-store table layout. v1 = monolithic frontier
-    * replaced per epoch + separate docs/fetch_log appends; v2 =
-    * log-structured frontier (frontier_base + frontier_delta, FrontierLog)
-    * + single fetch_result lineage table. A v1 store has no
-    * frontier_base/fetch_result to read, so resume must refuse loudly.
-    *
-    * The terminal archive (frontier_archive) did NOT bump this version
-    * deliberately: a v2 store whose base still carries its full terminal
-    * history resumes CORRECTLY — the first fold renames that history into
-    * the archive (one rename per state, no rewrite) and later folds see
-    * only the live window, so old stores migrate themselves instead of
-    * refusing.
+  /** Version of the snapshot-store table layout: 2 = log-structured
+    * frontier (frontier_base + frontier_delta, FrontierLog) + single
+    * fetch_result lineage table. Resume refuses any other layout.
     */
   val StoreLayoutVersion = 2L
 
@@ -1154,4 +967,39 @@ object EpochDriver {
     * seen SET is identical under any fold schedule.
     */
   val SeenFullFoldPartitions = 16
+
+  /** A frontier row's columns, without the merge-on-read `seq`. */
+  private val RowCols: Seq[String] = FrontierLog.Cols.filterNot(_ == "seq")
+
+  /** Append-rooted tables and the partition subdirs inside each root
+    * ("" = flat table) that consolidation merge-moves.
+    */
+  private val AppendRootTables: Seq[(String, Seq[String])] = Seq(
+    "frontier_archive" -> Seq("/state=fetched", "/state=failed"),
+    "corpus_sim" -> Seq(""), "neardup_pairs" -> Seq(""),
+    "media_features" -> Seq(""))
+
+  /** A materialized scheduler head: built at `epoch` with `k` rows per
+    * host under budget cut `cut` (the manifest's head_epoch/head_k/head_cut).
+    */
+  private final case class HeadMeta(epoch: Long, k: Long, cut: Long) {
+    def counters: Map[String, Long] =
+      Map("head_epoch" -> epoch, "head_k" -> k, "head_cut" -> cut)
+  }
+
+  /** One commit's content, as SnapshotStore.commit takes it. Every epoch
+    * layer returns a fragment; `++` merges them (keys are disjoint across
+    * layers, except carried counters a later fragment updates).
+    */
+  private final case class Commit(
+      replace: Map[String, DataFrame] = Map.empty,
+      replacePaths: Map[String, Seq[String]] = Map.empty,
+      append: Map[String, DataFrame] = Map.empty,
+      appendPaths: Map[String, Seq[String]] = Map.empty,
+      counters: Map[String, Long] = Map.empty,
+      drop: Set[String] = Set.empty) {
+    def ++(o: Commit): Commit = Commit(replace ++ o.replace,
+      replacePaths ++ o.replacePaths, append ++ o.append,
+      appendPaths ++ o.appendPaths, counters ++ o.counters, drop ++ o.drop)
+  }
 }

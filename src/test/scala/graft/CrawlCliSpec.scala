@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The spark-submit precedence rule (Crawl.sessionDefaults): settings the
+/** The spark-submit precedence rule (SparkEntry.sessionDefaults, applied
+  * by the one session builder every entry point uses): settings the
   * deployer provided — spark-submit places `--master` and every `--conf`
   * into system properties before `main` runs — must NEVER be overridden by
   * the CLI's local defaults. Round 5 found the inverse bug live: an
@@ -12,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CrawlCliSpec extends AnyFunSuite {
 
-  private def keys(has: Set[String], cpus: String = "32"): Map[String, String] =
-    Crawl.sessionDefaults(has.contains, cpus).toMap
+  private def keys(has: Set[String], cpus: Int = 32): Map[String, String] =
+    SparkEntry.sessionDefaults(has.contains, cpus).toMap
 
   test("bare runMain (nothing provided): all four defaults apply") {
     val d = keys(Set.empty)
@@ -40,7 +41,7 @@ class CrawlCliSpec extends AnyFunSuite {
   }
 
   test("SPARK_GRAFT_CPUS drives both the local master and the partitions") {
-    val d = keys(Set.empty, cpus = "8")
+    val d = keys(Set.empty, cpus = 8)
     assert(d("spark.master") == "local[8]")
     assert(d("spark.sql.shuffle.partitions") == "8")
   }

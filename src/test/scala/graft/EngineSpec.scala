@@ -137,21 +137,27 @@ class EngineSpec extends SparkSpecBase {
     val a = newDriver(dir)
     a.init(seeds)
     a.runEpoch()
-    // simulate a store written before cfg_bloom_hash_version existed: the
-    // manifest's counters lack the key, which the driver must treat as
-    // hash v1 (the independently-computed second string hash) — probing a
-    // v1-built seen_bloom with v2 hashes would yield silent false
-    // negatives, so this resume has to fail loudly, not continue
+    // simulate a store written before a guard key existed: the manifest's
+    // counters lack the key. Every key guards semantics some older store
+    // did not share (a v1-hashed seen_bloom probed with v2 hashes yields
+    // silent false negatives; a store without cfg_neardup/cfg_media may
+    // have been crawled under either setting), so a resume has to fail
+    // loudly and name the key, not continue. Each key in turn, on a
+    // manifest that is otherwise the store's own
     val store = new SnapshotStore(dir, spark)
     val m = store.latest().get
-    val tables = m.tables.keys.map(t =>
-      t -> store.readTable(m, t).get.cache()).toMap
-    tables.values.foreach(_.count()) // materialize before re-commit
-    store.commit(m.epoch, tables, Map.empty,
-      m.counters - "cfg_bloom_hash_version")
-    val b = newDriver(dir)
-    val e = intercept[IllegalArgumentException](b.runEpoch())
-    assert(e.getMessage.contains("cfg_bloom_hash_version"))
+    val keys = m.counters.keys.filter(_.startsWith("cfg_")).toSeq.sorted
+    assert(keys.contains("cfg_bloom_hash_version") &&
+      keys.contains("cfg_neardup") && keys.contains("cfg_media"))
+    keys.foreach { k =>
+      store.commit(m.epoch, Map.empty, Map.empty, m.counters - k)
+      val e = intercept[IllegalArgumentException](newDriver(dir).runEpoch())
+      assert(e.getMessage.contains("resume config mismatch") &&
+        e.getMessage.contains(k), s"missing $k: ${e.getMessage}")
+    }
+    // the intact manifest still resumes
+    store.commit(m.epoch, Map.empty, Map.empty, m.counters)
+    assert(newDriver(dir).runEpoch()("epoch") == m.epoch + 1)
   }
 
   test("seen compaction: fewer partitions, identical set, and it SURVIVES a restart") {
@@ -351,12 +357,9 @@ class EngineSpec extends SparkSpecBase {
     // budget/delay — a visible scheduling change
     val updated = Sched.robotsFor((0 until nHosts).map(SimWeb.hostName), seed)
       .map { case (h, _, dis) => (h, 4000L, dis) }
-    // threshold pinned off: this test pins head-rebuild mechanics and
-    // must stay immune to any future cost-guard default
     def driver(dir: String) = new EpochDriver(spark,
       new SnapshotStore(dir, spark), seed, nHosts,
-      epochBudgetMs = budget, compactFrontierEvery = 2,
-      headMaxPendingFraction = Double.PositiveInfinity)
+      epochBudgetMs = budget, compactFrontierEvery = 2)
     // A: update staged, then KILLED and resumed by a fresh driver (whose
     // constructor generator still carries the ORIGINAL robots)
     val dirA = tmpDir(); val a1 = driver(dirA)
@@ -400,8 +403,7 @@ class EngineSpec extends SparkSpecBase {
     def driver(dir: String, head: Boolean) = new EpochDriver(spark,
       new SnapshotStore(dir, spark), seed, nHosts,
       epochBudgetMs = budget, compactFrontierEvery = 8,
-      scheduleFromHead = head,
-      headMaxPendingFraction = Double.PositiveInfinity)
+      scheduleFromHead = head)
     val dirA = tmpDir(); val a = driver(dirA, head = true)
     a.init(seeds); a.runEpoch()
     assert(a.lastSchedSource == "head", "test premise: head in use")
@@ -432,13 +434,10 @@ class EngineSpec extends SparkSpecBase {
     // budget cut GROWS (8000/100 = 80 rows/host); the old head (sized
     // under the old cut) can no longer bound per-host consumption
     val updated = orig.updated(0, (orig.head._1, 100L, orig.head._3))
-    // threshold pinned off: head-drop mechanics need the head actually
-    // in use regardless of any future cost-guard default
     def driver(dir: String, head: Boolean) = new EpochDriver(spark,
       new SnapshotStore(dir, spark), seed, nHosts,
       epochBudgetMs = budget, compactFrontierEvery = 2,
-      scheduleFromHead = head,
-      headMaxPendingFraction = Double.PositiveInfinity)
+      scheduleFromHead = head)
     val dirA = tmpDir(); val a = driver(dirA, head = true)
     a.init(seeds); a.runEpoch(); a.runEpoch()
     assert(a.lastSchedSource == "head", "test premise: head in use pre-update")
@@ -578,6 +577,31 @@ class EngineSpec extends SparkSpecBase {
     val resumed = nd(new SnapshotStore(dirA, spark), 1)
     assert(resumed.runEpoch() == b.runEpoch(),
       "resume over a consolidated signature store diverged")
+  }
+
+  test("a fold epoch with root consolidation writes at most two manifests") {
+    // one epoch commit, then ONE swap commit for every append-rooted table
+    // over the cap: with cap 1 and a major fold every 2 epochs, epoch 4's
+    // fold appends a second archive root while its signatures append a
+    // second corpus_sim root — both consolidate in the same pass
+    val dir = tmpDir(); val store = new SnapshotStore(dir, spark)
+    val d = new EpochDriver(spark, store, seed, nHosts, epochBudgetMs = budget,
+      compactFrontierEvery = 2, nearDupDocs = true, archiveMaxRoots = 1)
+    d.init(seeds)
+    (1 to 3).foreach(_ => d.runEpoch())
+    val before = store.latestVersion().get
+    assert(d.runEpoch()("fetched") > 0, "test premise: epoch 4 fetched")
+    val after = store.latestVersion().get
+    assert(after - before <= 2,
+      s"fold epoch wrote ${after - before} manifests, want at most 2")
+    // premise: the epoch commit left both tables over the cap, and the
+    // one swap brought both back to one root
+    val epochCommit = store.readManifest(before + 1)
+    Seq("frontier_archive", "corpus_sim").foreach { t =>
+      assert(epochCommit.tables.getOrElse(t, Seq.empty).size == 2,
+        s"test premise: $t not over the cap after the epoch commit")
+      assert(store.latest().get.tables(t).size == 1, s"$t not consolidated")
+    }
   }
 
   test("epoch-loop media features: one real-decode row per media span; crawl unperturbed; resume-identical and guarded") {

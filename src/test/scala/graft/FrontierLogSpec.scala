@@ -437,8 +437,8 @@ class FrontierLogSpec extends SparkSpecBase {
   }
 
   test("resume with the head off: minor folds neither rewrite nor re-date the head") {
-    // SPARK_GRAFT_SCHED_HEAD=0 is the hard off switch AND the A/B
-    // measurement knob: a head-on store resumed head-off must not keep
+    // scheduleFromHead = false is the hard off switch AND the A/B
+    // reference: a head-on store resumed head-off must not keep
     // paying the per-host window sort at every minor fold for a head no
     // scheduler reads — the head table and its meta stay frozen as the
     // head-on run left them (a later head-on resume then re-validates
@@ -465,91 +465,33 @@ class FrontierLogSpec extends SparkSpecBase {
       "head-off minor fold re-dated the head meta")
   }
 
-  test("head cost guard: an engaged threshold never builds a head, exact vs a head-off twin, pending_rows exact") {
-    // guard MECHANICS pin (the default is engage-always — BASELINE.md
-    // round 5 measured head-ON faster even at hosts*K ~50x pending, so
-    // the threshold is an operator knob, set explicitly here): hosts*K
-    // far above the pending set, fraction 0.5 ⇒ every build — init,
-    // major folds, minor folds — must be skipped while staying
-    // batch-exact against a head-disabled twin. 10 hosts, cut =
-    // 8000/floor >= 2 rows/host, K = 3*cut: hosts*K >= 60 vs ~40 pending
+  test("degenerate head geometry (hosts·K ≫ pending): exact vs a head-off twin") {
+    // the geometry least favourable to the head: 10 hosts, cut =
+    // 8000/floor >= 2 rows/host, K = 5*cut ⇒ hosts*K >= 100 vs ~40 pending
+    // seeds — the head holds nearly the whole pending set. Head-on must
+    // still be batch-exact against a head-disabled twin on every epoch's
+    // counters AND frontier view, through every commit path: plain (1, 3),
+    // minor fold (2: head refresh), major fold (4: head rebuild)
     val nHosts = 10
     val seeds = SimWeb.seedUrls(40, nHosts, seed)
-    val gDir = tmpDir()
-    val gStore = new SnapshotStore(gDir, spark)
-    // cadences chosen so four epochs hit all three commit paths with the
-    // counter carried through each: plain (1, 3), minor fold (2), major
-    // fold (4, footer-derived re-seed)
-    val g = new EpochDriver(spark, gStore, seed, nHosts,
+    def driver(head: Boolean) = new EpochDriver(spark,
+      new SnapshotStore(tmpDir(), spark), seed, nHosts,
       epochBudgetMs = 8000L, compactFrontierEvery = 4, compactDeltaEvery = 2,
-      headMaxPendingFraction = 0.5)
-    val f = new EpochDriver(spark, new SnapshotStore(tmpDir(), spark), seed,
-      nHosts, epochBudgetMs = 8000L, compactFrontierEvery = 4,
-      compactDeltaEvery = 2, scheduleFromHead = false)
-    g.init(seeds); f.init(seeds)
-    assert(gStore.latest().get.tables.get("frontier_head").isEmpty,
-      "guard did not skip the init head in the degenerate geometry")
-    (1 to 4).foreach { _ =>
-      val mg = g.runEpoch(); val mf = f.runEpoch()
-      assert(mg == mf, "guard-skipped head changed epoch counters")
-      assert(g.lastSchedSource == "full",
-        "no head was built, so scheduling must take the full-view path")
-      val man = gStore.latest().get
-      assert(man.tables.get("frontier_head").isEmpty &&
-        !man.counters.contains("head_epoch"),
-        "degenerate geometry committed a head anyway")
-      // pending_rows is EXACT by the state machine — against the actual
-      // merge-on-read view every epoch (covers fetched, failed at
-      // maxRetries, retries staying pending, and fresh emissions)
-      val actual = g.frontier().filter(col("state") === "pending").count()
-      assert(man.counters("pending_rows") == actual,
-        s"pending_rows=${man.counters("pending_rows")} but view has $actual")
+      scheduleFromHead = head)
+    val h = driver(head = true); val f = driver(head = false)
+    h.init(seeds); f.init(seeds)
+    val sources = scala.collection.mutable.ArrayBuffer.empty[String]
+    (1 to 5).foreach { e =>
+      assert(h.runEpoch() == f.runEpoch(), s"epoch $e: head changed counters")
+      sources += h.lastSchedSource
+      assert(h.frontier().collect().map(_.toSeq).toSet ==
+        f.frontier().collect().map(_.toSeq).toSet,
+        s"epoch $e: head changed the frontier view")
     }
-    assert(g.frontier().collect().map(_.toSeq).toSet ==
-      f.frontier().collect().map(_.toSeq).toSet,
-      "guard-skipped head changed the frontier view")
-    // the engaged side is pinned by the head tests above: their 4000-seed
-    // geometries run under the engage-always default and assert
-    // lastSchedSource == "head" throughout
-  }
-
-  test("legacy store without pending_rows: head engages as before, the next major fold re-seeds the counter") {
-    // a pre-counter store (round-4 layout) carries no pending_rows: plain
-    // commits must neither require nor invent it, an UNKNOWN count must
-    // engage the head (guard forall-on-None — the behavior every existing
-    // store was built under), and the next major fold re-seeds the counter
-    // from the folded base's footers so the guard turns exact from there
-    val nHosts = 20
-    val seeds = SimWeb.seedUrls(4000, nHosts, seed)
-    val dir = tmpDir()
-    val store = new SnapshotStore(dir, spark)
-    val d = new EpochDriver(spark, store, seed, nHosts,
-      epochBudgetMs = 2000L, compactFrontierEvery = 2)
-    d.init(seeds); d.runEpoch(); d.runEpoch()
-    // simulate the legacy manifest: strip pending_rows in place
-    val v = store.latestVersion().get
-    val mf = java.nio.file.Paths.get(dir, "manifest", s"v$v.json")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(java.nio.file.Files.readAllBytes(mf))
-    node.get("counters")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      .remove("pending_rows")
-    java.nio.file.Files.write(mf, mapper.writeValueAsBytes(node))
-    val d2 = new EpochDriver(spark, new SnapshotStore(dir, spark), seed,
-      nHosts, epochBudgetMs = 2000L, compactFrontierEvery = 2)
-    d2.runEpoch() // epoch 3, plain commit: no counter to carry, head in use
-    assert(d2.lastSchedSource == "head",
-      "legacy store (no pending_rows) must keep the head engaged")
-    val m3 = new SnapshotStore(dir, spark).latest().get
-    assert(!m3.counters.contains("pending_rows"),
-      "a plain commit cannot invent the counter it never had")
-    d2.runEpoch() // epoch 4, major fold: footer-derived re-seed
-    val m4 = new SnapshotStore(dir, spark).latest().get
-    val actual = d2.frontier().filter(col("state") === "pending").count()
-    assert(m4.counters.get("pending_rows").contains(actual),
-      s"major fold did not re-seed pending_rows (=${m4.counters.get("pending_rows")}, view $actual)")
-    assert(m4.tables.contains("frontier_head"),
-      "worthwhile geometry must still rebuild the head at the fold")
+    // the head is really in use here: the init head serves epochs 1-2,
+    // the minor-fold refresh and the major-fold rebuild the later ones
+    assert(sources.count(_ == "head") >= 3,
+      s"head fast path not engaged in the degenerate geometry: $sources")
   }
 
   test("an empty-head fold commits no row-less head table; next epoch survives on the full path") {

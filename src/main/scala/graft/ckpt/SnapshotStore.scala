@@ -9,6 +9,11 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Iceberg-style snapshot layer (SURVEY.md §7.2 constraint C1: no Iceberg
   * runtime jar ships in this sandbox, so the snapshot/manifest mechanics are
@@ -25,6 +30,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   root/manifest/v<N>.json     // immutable snapshot manifest
   *   root/manifest/LATEST        // current version number (atomic rename)
   *   root/data/<table>/v<N>/     // parquet written by snapshot N
+  *   root/data/seen/v<N>/        // snapshot N's seen slice, one file per
+  *                               //   bucket (`…_<bucket>.snappy.parquet`)
+  *   root/data/seen_fold/v<N>/   // a seen compaction staged by snapshot N
   * }}}
   *
   * Commit protocol (all-or-nothing, resume-exact — SURVEY §7.5):
@@ -34,8 +42,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * A crash before (3) leaves LATEST at the previous snapshot; orphan data
   * dirs are ignored because readers only follow manifest-referenced paths.
   */
-final class SnapshotStore(rootDir: String, spark: SparkSession,
-    seenBuckets: Int = 32) {
+final class SnapshotStore(rootDir: String, spark: SparkSession) {
+  import SnapshotStore.{SeenBuckets, SeenSchema}
   private val mapper = new ObjectMapper
   private val root = new HPath(rootDir)
   private val fc = FileContext.getFileContext(
@@ -176,196 +184,75 @@ final class SnapshotStore(rootDir: String, spark: SparkSession,
 
   // ------------------------------------------------ bucketed seen table
   //
-  // The URL-seen set is append-only and joined against EVERY epoch's
-  // candidates; storing it as plain parquet forces the anti-join to
-  // reshuffle the entire (10^10-row at target scale) table per epoch. It
-  // lives instead in a catalog-registered external parquet table bucketed
-  // by canon_url — the scan then reports HashPartitioning(canon_url,
-  // seenBuckets), so only the (small, per-epoch) candidate side shuffles.
-  // Epoch partitioning gives two more properties:
-  //  - resume exactness: each epoch writes via dynamic partition OVERWRITE
-  //    of its own epoch=<N> directory, so a crash between the seen append
-  //    and the manifest commit is healed by the re-run overwriting the
-  //    same partition — never duplicating it. Readers additionally gate on
-  //    epoch <= the manifest's committed epoch (partition-pruned), so
-  //    uncommitted partitions are invisible.
-  //  - log-structured appends: old epochs' files are never rewritten
-  //    (compaction = periodic rewrite into one low epoch, same table).
-  // The catalog entry is in-memory per session; reopening a store in a new
-  // JVM re-registers the table from the same LOCATION and recovers its
-  // partition list (the Iceberg-catalog analog under constraint C1).
+  // The URL-seen set is append-only and anti-joined against EVERY epoch's
+  // candidates; as plain parquet it would force the anti-join to reshuffle
+  // the entire (10^10-row at target scale) set per epoch. It is instead
+  // the manifest table `seen` whose files each hold ONE hash bucket of
+  // canon_url and carry Spark's bucket-file suffix, so its scan reports
+  // HashPartitioning(canon_url, SeenBuckets) and only the (small,
+  // per-epoch) candidate side shuffles. Visibility and crash safety are
+  // the manifest's, like every other table: an uncommitted slice or fold
+  // is an unreferenced staging dir that the re-run overwrites and
+  // expireUnreferenced reclaims. The bucket count is fixed by the store
+  // layout (cfg_store_layout), so a reader always uses the writer's count.
 
-  private val seenTable: String =
-    "graft_seen_" + Integer.toHexString(
-      new java.io.File(rootDir).getAbsolutePath.hashCode & 0x7fffffff)
-  private val seenLocation = new HPath(root, "data/seen_bucketed").toString
-  @volatile private var seenRegistered = false
-
-  private def ensureSeenTable(): Unit = if (!seenRegistered) synchronized {
-    if (!seenRegistered) {
-      // MSCK needs the location to exist; CREATE TABLE does not mkdir it
-      fc.mkdir(new HPath(seenLocation), FsPermission.getDirDefault, true)
-      spark.sql(
-        s"""CREATE TABLE IF NOT EXISTS $seenTable (canon_url STRING, epoch BIGINT)
-           |USING PARQUET PARTITIONED BY (epoch)
-           |CLUSTERED BY (canon_url) INTO $seenBuckets BUCKETS
-           |LOCATION '$seenLocation'""".stripMargin)
-      spark.sql(s"MSCK REPAIR TABLE $seenTable")
-      seenRegistered = true
-    }
-  }
-
-  /** Idempotently (over)write epoch `epoch`'s slice of the seen set. */
-  def appendSeen(urls: DataFrame, epoch: Long): Unit = {
-    ensureSeenTable()
-    // dynamic mode scopes the overwrite to the epoch partitions actually
-    // written (exactly one here) — the DataFrameWriter-level option of the
-    // same name is not honored by insertInto, only the session conf is
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "dynamic")
-    try urls
-      .select(org.apache.spark.sql.functions.col("canon_url"),
-        org.apache.spark.sql.functions.lit(epoch).as("epoch"))
-      .write.mode("overwrite")
-      .insertInto(seenTable)
-    finally spark.conf.set(key, prev)
-  }
-
-  /** The seen set as of committed epoch `maxEpoch` (bucketed scan; later,
-    * uncommitted epoch partitions are pruned out).
+  /** Write `urls`' canon_url column, one file per bucket, into this
+    * commit's `seen` staging dir; returns the dir for the caller's
+    * `commit(appendPaths = "seen" -> …)`. Slices are disjoint (each epoch
+    * appends only URLs the anti-join found unseen), so no dedup is needed.
     */
-  def readSeen(maxEpoch: Long): DataFrame = {
-    ensureSeenTable()
-    spark.table(seenTable)
-      .filter(org.apache.spark.sql.functions.col("epoch") <= maxEpoch)
-      .select("canon_url")
+  def appendSeen(urls: DataFrame): String = {
+    val dir = stagingDir("seen")
+    urls.select("canon_url").repartition(SeenBuckets, col("canon_url"))
+      .write.mode("overwrite").parquet(dir)
+    suffixBuckets(dir)
   }
 
-  /** Log-compaction of the seen table: fold the epoch partitions in
-    * (sinceExclusive, upTo] into the single partition
-    * epoch = sinceExclusive + 1, then drop the folded partitions AND
-    * physically delete their directories.
-    *
-    * GENERATIONAL by design (LSM-style): seen rows never change and each
-    * epoch's append is disjoint from everything before it (candidates are
-    * anti-joined against the set), so compaction is purely file-count
-    * management — it never needs to touch old data to be correct. A caller
-    * that folds only the last R epochs (`sinceExclusive = upTo - R`) pays
-    * O(R × batch) I/O per compaction and leaves every earlier generation's
-    * files untouched forever, where the old always-full fold re-wrote the
-    * ENTIRE set every cadence — O(crawl-so-far) I/O, growing linearly with
-    * crawl age exactly like the frontier fold this round also fixed. The
-    * default `sinceExclusive = -1` is the full fold (target epoch=0) — the
-    * rare tier-2 pass a driver runs when generation partitions themselves
-    * accumulate ([[graft.engine.EpochDriver]] triggers it by live-partition
-    * count, which bounds per-epoch scan overhead at O(generations) dirs
-    * with amortized full-rewrite cost O(total / generations)).
-    *
-    * The physical delete is required for the compaction to survive a
-    * restart: DROP PARTITION on an external table removes only catalog
-    * entries, and ensureSeenTable's MSCK REPAIR in the next JVM
-    * re-discovers any epoch=e directory still inside LOCATION — silently
-    * resurrecting the folded partitions (duplicate rows for
-    * seenSet()/count consumers and the scan-cost win lost). Once
-    * dropped+folded the files are referenced by nothing, so the delete is
-    * safe.
-    *
-    * Crash safety (additive fold — never an in-place overwrite): the fold
-    * is APPENDED into epoch=0 as new files; the pre-existing epoch=0 files
-    * are deleted only after the append job has committed, and every other
-    * source partition only after that. So every delete removes rows that
-    * already exist in durable fold files, and a crash at ANY step leaves
-    * only benign duplicate rows (seen is a SET under anti-join semantics;
-    * the next compaction pass removes them) — never a lost URL. An earlier
-    * formulation dynamic-partition-OVERWROTE epoch=0 in place, where a
-    * crash mid-commit could drop previously-seen URLs (they would re-enter
-    * the frontier). Residual window: like every Spark output commit on a
-    * non-transactional filesystem, a whole-MACHINE crash can lose fold
-    * bytes the OS had not yet flushed while the subsequent deletes
-    * survived — on local/HDFS deployments the ordering is preserved by the
-    * commit-then-delete sequencing above; object stores need the real
-    * Iceberg catalog this store stands in for (constraint C1).
+  /** Fold the seen dirs `dirs` into one (compaction is file-count
+    * management only: the set is unchanged). Staged under `seen_fold`, so
+    * it never shares a dir with the same commit's slice; returns the dir
+    * for the caller's `commit(replacePaths = "seen" -> …)`, after which
+    * expireUnreferenced deletes the folded dirs.
     */
-  def compactSeen(upTo: Long, sinceExclusive: Long = -1L): Unit = {
-    ensureSeenTable()
-    require(sinceExclusive < upTo, s"empty fold range ($sinceExclusive, $upTo]")
-    val target = sinceExclusive + 1L
-    // reclaim staging dirs stranded by a CRASHED earlier fold attempt
-    // before staging anew: later folds use a different v<upTo> name so
-    // would never reuse (or clean) them, and expireUnreferenced manages
-    // only v<N>-named table subdirectories — without this sweep each
-    // crashed compaction leaks one fold-window copy forever. Safe because
-    // the driver is single-flight (no concurrent fold can own one)
-    val dataDir = new HPath(root, "data")
-    if (fc.util.exists(dataDir))
-      fc.util.listStatus(dataDir).map(_.getPath)
-        .filter(_.getName.startsWith("seen_compact_v"))
-        .foreach(p => fc.delete(p, true))
-    val staged = new HPath(root, s"data/seen_compact_v$upTo").toString
-    // stage the distinct fold OUTSIDE the table first: the fold reads the
-    // very table it will append into, and staging breaks the read-write
-    // cycle before any table mutation starts. The range read is
-    // partition-pruned — a generational fold never scans older generations
-    spark.table(seenTable)
-      .filter(org.apache.spark.sql.functions.col("epoch") > sinceExclusive &&
-        org.apache.spark.sql.functions.col("epoch") <= upTo)
-      .select("canon_url")
-      .distinct().write.mode("overwrite").parquet(staged)
-    // a fold window with zero rows (every epoch in range emitted nothing —
-    // a draining crawl) stages a part-less dir that parquet cannot
-    // schema-infer, and there is nothing to fold anyway
-    val stagedHasFiles = fc.util.exists(new HPath(staged)) &&
-      fc.util.listStatus(new HPath(staged)).exists(st =>
-        st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-    if (!stagedHasFiles) {
-      fc.delete(new HPath(staged), true)
-      return
-    }
-    val tDir = new HPath(new HPath(seenLocation), s"epoch=$target")
-    val oldTargetFiles: Seq[HPath] =
-      if (fc.util.exists(tDir))
-        fc.util.listStatus(tDir).toSeq
-          .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith("."))
-          .map(_.getPath)
-      else Seq.empty
-    // additive append (mode=append, NOT the dynamic-overwrite appendSeen
-    // path): new fold files land beside the old target files with
-    // job-unique names, so nothing is replaced until the job has committed
-    spark.read.parquet(staged)
-      .select(org.apache.spark.sql.functions.col("canon_url"),
-        org.apache.spark.sql.functions.lit(target).as("epoch"))
-      .write.mode("append")
-      .insertInto(seenTable)
-    // the fold is durable and covers all of (sinceExclusive, upTo]: now
-    // retire sources
-    oldTargetFiles.foreach(f => fc.delete(f, false))
-    // drop only partitions that actually exist: iterating the range would
-    // re-issue an ALTER TABLE + delete per ALREADY-folded epoch on every
-    // pass — O(epochs²) cumulative driver round-trips over a long crawl
-    val live = spark.sql(s"SHOW PARTITIONS $seenTable").collect()
-      .map(_.getString(0).stripPrefix("epoch=").toLong)
-    live.filter(e => e > target && e <= upTo).foreach { e =>
-      spark.sql(s"ALTER TABLE $seenTable DROP IF EXISTS PARTITION (epoch=$e)")
-      fc.delete(new HPath(new HPath(seenLocation), s"epoch=$e"), true)
-    }
-    // readers gate on epoch <= the committed epoch, so the fold partition
-    // must never carry rows "from the future" of its own key — target is
-    // below every folded source by construction, and compaction runs only
-    // after the epoch's manifest commit, so visibility is unchanged
-    fc.delete(new HPath(staged), true)
-    ()
+  def compactSeen(dirs: Seq[String]): String = {
+    val dir = stagingDir("seen_fold")
+    spark.read.schema(SeenSchema).parquet(dirs: _*)
+      .repartition(SeenBuckets, col("canon_url"))
+      .write.mode("overwrite").parquet(dir)
+    suffixBuckets(dir)
   }
 
-  /** Count of live epoch partition directories (test/ops visibility for
-    * compaction effectiveness).
+  /** Rename each part file of a hash-partitioned write after its bucket:
+    * the hash partition id IS the bucket id, and Spark reads it from the
+    * name (`part-00007-<job>-c000_00007.snappy.parquet`).
     */
-  def seenPartitionCount(): Int = {
-    ensureSeenTable()
-    spark.sql(s"SHOW PARTITIONS $seenTable").count().toInt
+  private def suffixBuckets(dir: String): String = {
+    // FileSystem, not FileContext: on the local filesystem FileContext's
+    // rename stats both paths through a `stat` subprocess (~20 ms a file)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(new HPath(dir)).map(_.getPath)
+      .filter(_.getName.startsWith("part-")).foreach { p =>
+        val (stem, ext) = p.getName.splitAt(p.getName.indexOf('.'))
+        val bucket = stem.stripPrefix("part-").takeWhile(_.isDigit)
+        fs.rename(p, new HPath(p.getParent, s"${stem}_$bucket$ext"))
+      }
+    dir
   }
+
+  /** The seen set of manifest `m`, as a bucketed scan of its files. */
+  def readSeen(m: Manifest): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new InMemoryFileIndex(spark, m.tables.getOrElse("seen", Nil).map(new HPath(_)),
+        Map.empty, Some(SeenSchema)),
+      new StructType(), SeenSchema, Some(BucketSpec(SeenBuckets, Seq("canon_url"), Nil)),
+      new ParquetFileFormat, Map.empty)(spark))
+
+  /** The seen set as of committed epoch `epoch` (the newest manifest at or
+    * before it; versions whose data expired are gone, as with time travel).
+    */
+  def readSeen(epoch: Long): DataFrame =
+    readSeen(Iterator.iterate(latest().get)(p => readManifest(p.parent))
+      .find(_.epoch <= epoch).get)
 
   // ---- staging-space filesystem helpers (used by the frontier fold's
   // archive-by-rename: terminal partitions MOVE out of the staged fold dir
@@ -489,4 +376,11 @@ final class SnapshotStore(rootDir: String, spark: SparkSession,
     } finally out.close()
     fc.rename(tmp, target, Options.Rename.OVERWRITE)
   }
+}
+
+object SnapshotStore {
+  /** Hash buckets of the seen table (part of the store layout). */
+  val SeenBuckets = 32
+
+  private val SeenSchema = StructType(Seq(StructField("canon_url", StringType)))
 }

@@ -21,13 +21,13 @@ import graft.operators.{Bloom, Extract, NearDup, Sched, Seen, SegmentedBloom}
   * is resumable: state lives only in the snapshot store.
   *
   * runEpoch is a sequence of layer functions — robots in effect, schedule,
-  * fetch, extract, dedup, sink, near-dup, media, frontier update — each
+  * fetch, extract, dedup, sink, near-dup, media, seen, frontier update — each
   * taking the epoch's inputs and returning its outputs plus a [[Commit]]
   * fragment. The fragments merge into ONE epoch commit; at most one more
   * (the append-root swap, see [[consolidate]]) follows it.
   *
   * Per-epoch I/O is O(batch), never O(crawl): the seen set appends one
-  * epoch partition + Bloom segment per epoch (log-compacted by
+  * bucketed slice + Bloom segment per epoch (log-compacted by
   * compactSeen), the frontier appends state-transition deltas resolved
   * merge-on-read ([[FrontierLog]]) — nothing rewrites a crawl-sized table
   * inside an epoch — and between folds the scheduler READS a materialized
@@ -61,7 +61,7 @@ final class EpochDriver(
     // merged array fits anywhere (BASELINE.md). Pure execution strategy:
     // results are identical (EngineSpec), so not resume-guarded
     bloomRouted: Boolean = false,
-    // fold seen epoch partitions every N epochs (0 = off); purely a
+    // fold the seen table's slices every N epochs (0 = off); purely a
     // file-count/scan-cost optimization — set semantics are unchanged, so
     // it is NOT part of the resume-guarded config
     compactSeenEvery: Int = 0,
@@ -279,11 +279,9 @@ final class EpochDriver(
         lit("pending").as("state"), lit(0).as("retry_count"),
         lit(0L).as("discovered_epoch"), lit(0L).as("seq"))
     val seen = frontier.select("canon_url")
-    // bucketed seen append is idempotent per epoch (dynamic partition
-    // overwrite), so writing it before the manifest commit preserves
-    // all-or-nothing resume semantics: an uncommitted epoch partition is
-    // both invisible to readers (epoch gate) and overwritten on re-run
-    store.appendSeen(seen, 0L)
+    // the seed slice is staged like every epoch's: unreferenced (so
+    // invisible) until the init commit names it, overwritten on re-run
+    val seenDir = store.appendSeen(seen)
     val nSeeds = frontier.count()
     // the head exists from epoch 0 (same slice a fold would build): the
     // first fold-cadence window of epochs schedules from O(hosts·K) rows
@@ -303,7 +301,8 @@ final class EpochDriver(
           "seen_bloom" -> Bloom.buildSegments(seen, "canon_url", bloomSegments, bloomBitsPerSegment)),
         counters = cfg + ("seeds" -> nSeeds) + ("robots_floor_ms" -> floorMs) ++
           head.counters,
-        partitionedBy = Map("frontier_base" -> "state"))
+        partitionedBy = Map("frontier_base" -> "state"),
+        appendPaths = Map("seen" -> Seq(seenDir)))
     } finally c.release()
     ()
   }
@@ -364,29 +363,17 @@ final class EpochDriver(
       sink(c, fresh, nEmitted)
       val nd = nearDup(c, okDocs, nFetched)
       val md = media(c, okDocs, nFetched)
+      val seen = seenUpdate(c, fresh)
       val update = frontierUpdate(c, cut, transitions, fresh, deltaAll,
         nFetched + nErrors + nEmitted)
       // ---- the ONE epoch commit: every layer's fragment, all-or-nothing
       val all = Commit(append = Map("metrics" -> metricsDf),
         appendPaths = Map("fetch_result" -> Seq(fetchDir)),
-        counters = cfg ++ counters) ++ robotsCommit ++ nd ++ md ++ update
+        counters = cfg ++ counters) ++ robotsCommit ++ nd ++ md ++ seen ++ update
       val mEpoch = store.commit(c.epoch, all.replace, all.append, all.counters,
         appendPaths = all.appendPaths, replacePaths = all.replacePaths,
         drop = all.drop)
       consolidate(mEpoch)
-      // seen compaction is GENERATIONAL (tier-1: fold only this cadence
-      // window's partitions — O(R × batch) I/O, older generations never
-      // touched), with a rare tier-2 full fold when generation partitions
-      // themselves accumulate — amortized full-rewrite cost O(total /
-      // SeenFullFoldPartitions) instead of the old always-full fold's
-      // O(total) every cadence. Tier-2 also sweeps up any range a crashed
-      // compaction left unfolded (folds are file-count hygiene, never
-      // needed for correctness: appends are disjoint by the anti-join)
-      if (compactSeenEvery > 0 && c.epoch % compactSeenEvery == 0) {
-        if (store.seenPartitionCount() >= EpochDriver.SeenFullFoldPartitions)
-          store.compactSeen(c.epoch)
-        else store.compactSeen(c.epoch, c.epoch - compactSeenEvery)
-      }
       // the staged robots rows are durable in this epoch's snapshot now; a
       // failed commit leaves them staged so the retry still applies them.
       // Atomic compare-and-clear: an update staged WHILE this epoch ran
@@ -507,7 +494,7 @@ final class EpochDriver(
     * appended to seen and to the delta).
     */
   private def dedup(c: Ctx, candDepth: DataFrame): DataFrame = {
-    val seen = store.readSeen(c.m.epoch)
+    val seen = store.readSeen(c.m)
     val segTable = if (useBloom) store.readTable(c.m, "seen_bloom") else None
     c.bloom =
       if (bloomRouted) None
@@ -700,7 +687,27 @@ final class EpochDriver(
           written.fold(0L)(_._2))))
     }
 
-  /** ---- frontier update: the seen set + its Bloom segments and the
+  /** ---- seen: the epoch's fresh URLs as a bucketed slice (see
+    * SnapshotStore). Compaction is GENERATIONAL: on the cadence, tier 1
+    * folds only this cadence window's slices (the last R dirs, this
+    * epoch's included) — O(R × batch) I/O, older generations never
+    * touched; tier 2 folds every dir once the list reaches
+    * SeenFullFoldPartitions — amortized full-rewrite cost
+    * O(total / SeenFullFoldPartitions). The fold replaces the window in
+    * the epoch commit; expireUnreferenced deletes the folded dirs.
+    */
+  private def seenUpdate(c: Ctx, fresh: DataFrame): Commit = {
+    val slice = store.appendSeen(fresh)
+    val dirs = c.m.tables.getOrElse("seen", Nil) :+ slice
+    if (compactSeenEvery > 0 && c.epoch % compactSeenEvery == 0) {
+      val window = if (dirs.size >= EpochDriver.SeenFullFoldPartitions)
+        dirs.size else compactSeenEvery
+      val (older, folded) = dirs.splitAt(dirs.size - window)
+      Commit(replacePaths = Map("seen" -> (older :+ store.compactSeen(folded))))
+    } else Commit(appendPaths = Map("seen" -> Seq(slice)))
+  }
+
+  /** ---- frontier update: the seen set's Bloom segments and the
     * frontier delta, committed as one of three shapes:
     *  - PLAIN: append the delta (an all-empty epoch appends none: an empty
     *    parquet dir at the head of the delta list would break schema
@@ -708,9 +715,8 @@ final class EpochDriver(
     *  - MINOR fold: resolve the delta LOG into one run and refresh the head;
     *  - MAJOR fold: rewrite the base, archive its terminals, rebuild the
     *    head, fold the Bloom log, drop the delta log.
-    * Seen and Bloom are append-only: each epoch contributes only its fresh
-    * URLs; seen goes to the bucketed table (epoch-partitioned, idempotent
-    * overwrite — see SnapshotStore), Bloom readers OR-merge segments.
+    * Bloom is append-only: each epoch contributes only its fresh URLs,
+    * and readers OR-merge segments.
     * Cumulative fold-cost counters (bytes written by major base rewrites
     * and by minor delta resolves) carry forward: the evidence that minor
     * folds let the major cadence stretch is their RATIO in a CLI A/B, read
@@ -719,7 +725,6 @@ final class EpochDriver(
   private def frontierUpdate(c: Ctx, cut: Long, transitions: DataFrame,
       fresh: DataFrame, deltaAll: Option[DataFrame], deltaRows: Long): Commit = {
     val (m, epoch) = (c.m, c.epoch)
-    store.appendSeen(fresh.select("canon_url"), epoch)
     val bloomNew = Bloom.buildSegments(fresh.select("canon_url"),
       "canon_url", bloomSegments, bloomBitsPerSegment)
     // deltas are plain parquet (state as a data column): appended dirs
@@ -939,8 +944,7 @@ final class EpochDriver(
     val live = FrontierLog.resolve(frontierAll(m))
     archive(m).map(live.unionByName(_)).getOrElse(live).drop("seq")
   }
-  def seenSet(): DataFrame =
-    store.latest().map(m => store.readSeen(m.epoch)).get
+  def seenSet(): DataFrame = store.readSeen(store.latest().get)
   def fetchLog(): Option[DataFrame] =
     store.latest().flatMap(m => store.readTable(m, "fetch_result"))
       .map(_.select("epoch", "partition_id", "canon_url", "host", "rank",
@@ -954,15 +958,17 @@ final class EpochDriver(
 }
 
 object EpochDriver {
-  /** Version of the snapshot-store table layout: 2 = log-structured
+  /** Version of the snapshot-store table layout: 3 = log-structured
     * frontier (frontier_base + frontier_delta, FrontierLog) + single
-    * fetch_result lineage table. Resume refuses any other layout.
+    * fetch_result lineage table + the seen set as the manifest table
+    * `seen` in SnapshotStore.SeenBuckets buckets (2 kept it in a catalog
+    * table). Resume refuses any other layout.
     */
-  val StoreLayoutVersion = 2L
+  val StoreLayoutVersion = 3L
 
-  /** Live seen-partition count at which the per-cadence generational fold
-    * escalates to a full fold. Bounds the per-epoch bucketed-scan overhead
-    * at O(this many) partition dirs while keeping the full-rewrite cost
+  /** Seen dir count at which the per-cadence generational fold escalates
+    * to a full fold. Bounds the per-epoch bucketed-scan overhead at
+    * O(this many) dirs while keeping the full-rewrite cost
     * amortized to O(|seen| / this) per cadence. Pure execution knob — the
     * seen SET is identical under any fold schedule.
     */

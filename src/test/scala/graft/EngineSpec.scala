@@ -160,6 +160,20 @@ class EngineSpec extends SparkSpecBase {
     assert(newDriver(dir).runEpoch()("epoch") == m.epoch + 1)
   }
 
+  test("a store of the catalog seen layout (cfg_store_layout = 2) refuses to resume") {
+    val dir = tmpDir()
+    val a = newDriver(dir)
+    a.init(seeds)
+    a.runEpoch()
+    val store = new SnapshotStore(dir, spark)
+    val m = store.latest().get
+    store.commit(m.epoch, Map.empty, Map.empty,
+      m.counters + ("cfg_store_layout" -> 2L))
+    val e = intercept[IllegalArgumentException](newDriver(dir).runEpoch())
+    assert(e.getMessage.contains("resume config mismatch") &&
+      e.getMessage.contains("cfg_store_layout"), e.getMessage)
+  }
+
   test("seen compaction: fewer partitions, identical set, and it SURVIVES a restart") {
     val dirC = tmpDir()
     val c = new EpochDriver(spark, new SnapshotStore(dirC, spark), seed, nHosts,
@@ -177,91 +191,146 @@ class EngineSpec extends SparkSpecBase {
     assert(setC == setU)
 
     // generational fold at epoch 2: {1,2} → generation 1 (the seed
-    // partition 0 is an older generation and is never touched); epoch 3
-    // appended its own partition → {0, 1, 3}
+    // slice is an older generation and is never touched); epoch 3
+    // appended its own slice → {0, 1, 3}
     val storeC = new SnapshotStore(dirC, spark)
-    assert(storeC.seenPartitionCount() <= 3,
-      "compaction left folded epoch partitions behind")
+    assert(storeC.latest().get.tables("seen").size <= 3,
+      "compaction left folded slices behind")
 
-    // restart: drop the catalog entry (the in-memory-catalog analog of a
-    // new JVM) so a fresh store re-registers the table and MSCK-recovers
-    // partitions from the LOCATION — before the physical delete fix, the
-    // folded epoch dirs were re-discovered here and every seen row came
-    // back duplicated
-    val tbl = "graft_seen_" + Integer.toHexString(
-      new java.io.File(dirC).getAbsolutePath.hashCode & 0x7fffffff)
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    // restart: a fresh store + driver reads the seen set from the manifest
+    // alone — the folded slices are unreferenced, so never read back
     val c2 = new EpochDriver(spark, new SnapshotStore(dirC, spark), seed, nHosts,
       epochBudgetMs = budget, compactSeenEvery = 2)
     val seenRows = c2.seenSet().count()
     val seenDistinct = c2.seenSet().distinct().count()
     assert(seenRows == seenDistinct,
-      s"restart resurrected folded partitions: $seenRows rows vs $seenDistinct distinct")
+      s"restart resurrected folded slices: $seenRows rows vs $seenDistinct distinct")
     val m4 = c2.runEpoch() // epoch 4 — also fires compaction again
     assert(m4("epoch") == 4L)
   }
 
+  /** Data files (name -> bytes) of a manifest data dir. */
+  private def dataFiles(dir: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(new org.apache.hadoop.fs.Path(dir).toUri.getPath)
+    if (!java.nio.file.Files.exists(root)) Map.empty
+    else {
+      val s = java.nio.file.Files.list(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala
+          .filter(f => java.nio.file.Files.isRegularFile(f) &&
+            !f.getFileName.toString.startsWith("_") &&
+            !f.getFileName.toString.startsWith("."))
+          .map(f => f.getFileName.toString -> java.nio.file.Files.size(f))
+          .toMap
+      } finally s.close()
+    }
+  }
+
+  /** The `v<N>` dirs on disk under data/<table>, as "table/vN". */
+  private def versionDirs(dir: String, tables: String*): Set[String] =
+    tables.flatMap { t =>
+      val p = java.nio.file.Paths.get(dir, "data", t)
+      if (!java.nio.file.Files.exists(p)) Nil
+      else {
+        val s = java.nio.file.Files.list(p)
+        try {
+          import scala.jdk.CollectionConverters._
+          s.iterator().asScala.map(f => s"$t/${f.getFileName}").toList
+        } finally s.close()
+      }
+    }.toSet
+
   test("generational seen compaction: older generations never rewritten, set identical, full fold sweeps") {
     val dir = tmpDir()
     val store = new SnapshotStore(dir, spark)
-    import spark.implicits._
-    def urls(e: Int) = (0 until 20).map(i => s"https://g$e.example.com/p/$i")
-    (0 to 6).foreach(e => store.appendSeen(urls(e).toDF("canon_url"), e.toLong))
-    val all = (0 to 6).flatMap(urls).toSet
-    def files(part: Long): Map[String, Long] = {
-      val root = java.nio.file.Paths.get(dir, "data", "seen_bucketed",
-        s"epoch=$part")
-      if (!java.nio.file.Files.exists(root)) Map.empty
-      else {
-        val s = java.nio.file.Files.list(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala
-            .filter(f => java.nio.file.Files.isRegularFile(f) &&
-              !f.getFileName.toString.startsWith("_") &&
-              !f.getFileName.toString.startsWith("."))
-            .map(f => f.getFileName.toString -> java.nio.file.Files.size(f))
-            .toMap
-        } finally s.close()
-      }
+    val d = new EpochDriver(spark, store, seed, nHosts, epochBudgetMs = budget,
+      compactSeenEvery = 2)
+    d.init(seeds)
+    def gens() = store.latest().get.tables("seen")
+    // each generation's files as first committed
+    val first = scala.collection.mutable.Map.empty[String, Map[String, Long]]
+    val ms = (1 to 6).map { _ =>
+      val m = d.runEpoch()
+      store.expireUnreferenced()
+      gens().foreach(g => first.getOrElseUpdate(g, dataFiles(g)))
+      m
     }
-    def seenSet() = store.readSeen(6L).collect().map(_.getString(0)).toSet
-
-    val gen0 = files(0)
-    store.compactSeen(2, 0) // {1,2} → generation 1
-    val gen1 = files(1)
-    store.compactSeen(4, 2) // {3,4} → generation 3
-    val gen3 = files(3)
-    store.compactSeen(6, 4) // {5,6} → generation 5
+    // the seed slice plus one fold per cadence window: {0}, {1,2}, {3,4}, {5,6}
+    assert(gens().size == 4, s"generational folds left ${gens()}")
     // THE scale pin: a generational fold touches ONLY its own window —
     // every older generation's files are byte-identical afterwards
-    assert(files(0) == gen0, "fold rewrote the seed generation")
-    assert(files(1) == gen1, "fold rewrote generation 1")
-    assert(files(3) == gen3, "fold rewrote generation 3")
-    assert(store.seenPartitionCount() == 4, // {0, 1, 3, 5}
-      "generational folds left the wrong partition set")
-    assert(seenSet() == all, "generational folds changed the seen SET")
-    val rows = store.readSeen(6L).count()
-    assert(rows == all.size.toLong, s"duplicate rows after folds: $rows")
+    gens().foreach(g => assert(dataFiles(g) == first(g), s"fold rewrote $g"))
+    val all = d.seenSet().collect().map(_.getString(0)).toSet
+    val rows = store.readManifest(0L).counters("seeds") + ms.map(_("emitted")).sum
+    assert(all.size.toLong == rows, "generational folds changed the seen SET")
+    assert(d.seenSet().count() == rows, "duplicate rows after folds")
 
-    // tier-2: the full fold sweeps every generation into epoch=0
-    store.compactSeen(6)
-    assert(store.seenPartitionCount() == 1, "full fold left partitions")
-    assert(seenSet() == all, "full fold changed the seen SET")
-    assert(store.readSeen(6L).count() == all.size.toLong)
+    // tier-2: the full fold sweeps every generation into one dir
+    val m = store.latest().get
+    val full = store.compactSeen(m.tables("seen"))
+    store.commit(m.epoch, Map.empty, Map.empty, m.counters,
+      replacePaths = Map("seen" -> Seq(full)))
+    store.expireUnreferenced()
+    assert(gens() == Seq(full), "full fold left generations")
+    assert(versionDirs(dir, "seen", "seen_fold").size == 1,
+      "expire left folded generations on disk")
+    assert(d.seenSet().collect().map(_.getString(0)).toSet == all,
+      "full fold changed the seen SET")
+    assert(d.seenSet().count() == rows)
+  }
 
-    // a CRASHED earlier fold strands its staging dir (unique v<upTo> name —
-    // later folds would never reuse or clean it); the next fold must sweep
-    // it and still fold correctly
-    val debris = java.nio.file.Paths.get(dir, "data", "seen_compact_v99")
-    java.nio.file.Files.createDirectories(debris)
-    java.nio.file.Files.writeString(debris.resolve("part-junk.parquet"), "x")
-    store.appendSeen(urls(7).toDF("canon_url"), 7L)
-    store.compactSeen(7)
-    assert(!java.nio.file.Files.exists(debris),
-      "crashed fold's staging dir survived the next compaction")
-    assert(seenSet() ++ urls(7).toSet == all ++ urls(7).toSet)
-    assert(store.readSeen(7L).count() == (all ++ urls(7)).size.toLong)
+  /** A crashed epoch `crashAt` left `stage`'s uncommitted seen dirs at
+    * nextVersion (fed the URLs that epoch discovers); a fresh store and
+    * driver (seen compaction every `resumeEvery`) resume. Everything must
+    * equal an uninterrupted twin (compaction every 2), and expiry must
+    * leave no seen dir the manifest does not reference.
+    */
+  private def seenCrashResume(crashAt: Int, resumeEvery: Int)(
+      stage: (SnapshotStore, org.apache.spark.sql.DataFrame) => Unit): Unit = {
+    def driver(dir: String, every: Int) = new EpochDriver(spark,
+      new SnapshotStore(dir, spark), seed, nHosts, epochBudgetMs = budget,
+      compactSeenEvery = every)
+    val twin = driver(tmpDir(), 2)
+    twin.init(seeds)
+    val twinMs = (1 to 4).map(_ => twin.runEpoch())
+    val dir = tmpDir()
+    val a = driver(dir, 2)
+    a.init(seeds)
+    (1 until crashAt).foreach(_ => a.runEpoch())
+    val store = new SnapshotStore(dir, spark)
+    val crashed = twin.frontier()
+      .filter(col("discovered_epoch") === crashAt).select("canon_url")
+    assert(crashed.count() > 0L, "test premise: the crashed epoch discovers URLs")
+    stage(store, crashed)
+    val b = driver(dir, resumeEvery)
+    val ms = (crashAt to 4).map(_ => b.runEpoch())
+    assert(ms == twinMs.drop(crashAt - 1), "resumed counters differ from the twin")
+    def set(d: EpochDriver) = d.seenSet().collect().map(_.getString(0)).toSet
+    assert(set(b) == set(twin))
+    assert(b.seenSet().count() == set(b).size.toLong, "duplicate seen rows")
+    def view(d: EpochDriver) = d.frontier().collect().map(_.toSeq).toSet
+    assert(view(b) == view(twin))
+    store.expireUnreferenced()
+    val referenced = store.latest().get.tables("seen").map { p =>
+      val h = new org.apache.hadoop.fs.Path(p); s"${h.getParent.getName}/${h.getName}"
+    }.toSet
+    assert(versionDirs(dir, "seen", "seen_fold") == referenced,
+      "an uncommitted seen dir survived expiry")
+  }
+
+  test("crash window: an uncommitted seen slice is never read; resume equals an uninterrupted twin") {
+    seenCrashResume(crashAt = 3, resumeEvery = 2)((store, fresh) =>
+      store.appendSeen(fresh))
+  }
+
+  test("crash window: an uncommitted seen fold is never read; expiry reclaims it") {
+    // the crashed attempt was a fold epoch; the resume runs with seen
+    // compaction off (not resume-guarded), so nothing re-stages the fold dir
+    seenCrashResume(crashAt = 4, resumeEvery = 0) { (store, fresh) =>
+      val slice = store.appendSeen(fresh)
+      store.compactSeen(store.latest().get.tables("seen") :+ slice)
+    }
   }
 
   test("K1 sink: a losing concurrent attempt's batch files are never read back") {

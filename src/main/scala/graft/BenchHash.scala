@@ -43,8 +43,10 @@ object BenchHash {
       ()
     }
     // the round-4 baseline: md5 hashing + one ±1-vote sum() PER BIT (the
-    // formulation the packed-lane aggregation replaced) — timed so the
-    // artifact carries operator-path-vs-legacy directly
+    // explode/groupBy formulation the operator's per-row vote kernel
+    // replaced) — timed so the artifact carries operator-path-vs-legacy
+    // directly (the `*_packed_sec` keys keep their names and now time the
+    // per-row kernel)
     def runLegacy(): Unit = {
       import graft.functions.TextFns
       val toks = docs.select(col("doc_id"),

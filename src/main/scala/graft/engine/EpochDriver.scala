@@ -582,18 +582,20 @@ final class EpochDriver(
   }
 
   /** ---- incremental near-dup over the epoch's fetched documents (the
-    * q49 steady-state shape as an ENGINE stage): reassemble each ok doc's
-    * text from its spans in offset order (the q43 formulation), simhash
-    * the batch with the production xxhash64/64 path, probe the persisted
-    * corpus signatures — candidate work O(batch × bucket occupancy),
-    * old-old pairs never generated — and append the batch's signatures so
-    * the next epoch probes this one too. Banding geometry is re-derived per
-    * epoch from the cumulative doc count (B is a pure cost knob, never a
-    * recall knob — NearDupSpec), so signatures are geometry-free and a
-    * growing corpus widens its own banding. sim_docs carries forward
-    * across empty epochs like delta_rows: a counter absent from one
-    * manifest would reset the cumulative count (and the derived banding
-    * geometry) on the next.
+    * q49 steady-state shape as an ENGINE stage): each ok doc's text comes
+    * from its own spans in offset order (a per-row projection — a
+    * fetch_result row is one document), the batch is simhashed per row
+    * with the production xxhash64/64 path, its bands are probed by the
+    * persisted corpus signatures plus the batch itself (an empty corpus on
+    * the first epoch) — candidate work O(batch × bucket occupancy),
+    * old-old pairs never generated — and the batch's signatures are
+    * appended so the next epoch probes this one too. Banding geometry is
+    * re-derived per epoch from the cumulative doc count (B is a pure cost
+    * knob, never a recall knob — NearDupSpec), so signatures are
+    * geometry-free and a growing corpus widens its own banding. sim_docs
+    * carries forward across empty epochs like delta_rows: a counter absent
+    * from one manifest would reset the cumulative count (and the derived
+    * banding geometry) on the next.
     */
   private def nearDup(c: Ctx, okDocs: DataFrame, nFetched: Long): Commit = {
     val simDocs = c.m.counters.getOrElse("sim_docs", 0L) + nFetched
@@ -601,39 +603,26 @@ final class EpochDriver(
     else if (nFetched == 0)
       Commit(counters = Map("sim_docs" -> simDocs, "neardup_pairs" -> 0L))
     else {
-      val batchText = okDocs
-        .select(col("doc_id"), explode(col("spans")).as("span"))
-        .groupBy("doc_id")
-        .agg(array_join(transform(array_sort(filter(
-            collect_list(struct(col("span.offset"), col("span.text"))),
-            x => x.getField("text") =!= "")),
-          x => x.getField("text")), " ").as("text"))
-      // TOTAL over the batch: explode drops a doc whose spans array is
-      // empty, so the reassembly alone would skip it — re-anchor on the
-      // fetched set and coalesce to "" so every fetched doc reaches the
-      // signature step (simhashTotal then assigns the empty-token
-      // signature 0L); the sim_docs counter and the corpus_sim row
-      // count stay equal BY CONSTRUCTION, not by corpus luck
-      val batchDocs = okDocs.select("doc_id")
-        .join(batchText, Seq("doc_id"), "left")
-        .na.fill("", Seq("text"))
-      // cached: the pairs probe and the commit write both consume the
-      // batch signatures
-      val simNew = c.keep(NearDup.simhashTotal(batchDocs, NearDup.XxHashBits,
-        NearDup.xxTokenHash))
+      // TOTAL over the batch: one signature per fetched doc (a doc with no
+      // text signs 0), so the sim_docs counter and the corpus_sim row count
+      // stay equal BY CONSTRUCTION. Written once into this commit's
+      // corpus_sim dir and probed as a file scan (see incrementalFromSimhash
+      // for why not a cache)
+      val simDir = store.stagingDir("corpus_sim")
+      val sig = NearDup.simhashTotal(
+        okDocs.select(col("doc_id"), NearDup.spansText(col("spans")).as("text")),
+        NearDup.XxHashBits, NearDup.xxTokenHash)
+      sig.coalesce(filesFor(nFetched)).write.mode("overwrite").parquet(simDir)
+      val simNew = spark.read.schema(sig.schema).parquet(simDir)
       val blocks = graft.functions.Banding.blocksFor(simDocs,
         hashBits = NearDup.XxHashBits)
-      val pairs = stage("neardup_pairs", (store.readTable(c.m, "corpus_sim") match {
-        case Some(corpus) => NearDup.incrementalFromSimhash(
-          simNew, corpus.select("doc_id", "simhash"), blocks, NearDup.XxHashBits)
-        case None => NearDup.pairsFromSimhash(simNew, blocks, NearDup.XxHashBits)
-      }).withColumn("epoch", lit(c.epoch)))
-      // signature file sizing tracks the BATCH's row count: the cached
-      // plan carries the probe's shuffle partitioning, which at small
-      // batches would strew one near-empty file per partition into a
-      // table read every epoch
-      Commit(append = Map("corpus_sim" -> simNew.coalesce(filesFor(nFetched))),
-        appendPaths = pairs.map(p => "neardup_pairs" -> Seq(p._1)).toMap,
+      val corpus = store.readTable(c.m, "corpus_sim")
+        .fold(simNew.limit(0))(_.select("doc_id", "simhash"))
+      val pairs = stage("neardup_pairs", NearDup.incrementalFromSimhash(
+          simNew, corpus, blocks, NearDup.XxHashBits)
+        .withColumn("epoch", lit(c.epoch)))
+      Commit(appendPaths = Map("corpus_sim" -> Seq(simDir)) ++
+          pairs.map(p => "neardup_pairs" -> Seq(p._1)),
         counters = Map("sim_docs" -> simDocs,
           "neardup_pairs" -> pairs.fold(0L)(_._2)))
     }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis + fingerprinting functions for the training-data pipeline
   * surface (builder brief): token counting, quality scoring, language-ID
-  * heuristic, rolling-hash fingerprints, shingling and MinHash/SimHash
+  * heuristic, rolling-hash fingerprints, shingling and MinHash
   * components. Pure Column compositions (codegen'd, no UDFs) with exact
   * DuckDB-SQL equivalents for the oracle harness.
   *
@@ -126,25 +126,4 @@ object TextFns {
     array(minhashCoeffs(k).map { case (a, b) =>
       minhash(shingles(text, shingleK), a, b)
     }: _*)
-
-  /** SimHash over `bits` low bits (≤ 48 to keep the packed value positive in
-    * a long): per bit b, sum +1/-1 over distinct tokens according to bit b of
-    * the token hash; bit set when the sum is positive.
-    * Packed as Σ 2^b · [sum_b > 0].
-    */
-  def simhash(text: Column, bits: Int): Column = {
-    require(bits <= 48, "simhash bits must fit a positive long")
-    val hs = transform(array_distinct(tokens(text)), t => Canon.md5Long(t))
-    val perBit = (0 until bits).map { b =>
-      val mask = 1L << b
-      val vote = aggregate(hs, lit(0L),
-        (acc, h) => acc + when(pmod(shiftright(h, b), lit(2L)) === 1L, lit(1L))
-          .otherwise(lit(-1L)))
-      when(vote > 0, lit(mask)).otherwise(lit(0L))
-    }
-    perBit.reduce(_ + _)
-  }
-
-  /** Hamming distance between two packed simhash longs (≤48 bits). */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 }

@@ -40,75 +40,45 @@ object NearDup {
     */
   def xxTokenHash(c: Column): Column = xxhash64(c)
 
-  /** Lane geometry for the packed vote aggregation: 3 bit-counters of 21
-    * bits per 64-bit sum. Bounds: a document may carry up to 2^21 (~2M)
-    * DISTINCT tokens before a lane overflows into its neighbor — a ~20 MB+
-    * pathological document; the web corpus this engine crawls caps pages
-    * far below that.
+  /** The text of one fetched document from its own `spans` array: the
+    * non-empty span texts in offset order, joined by single spaces (the
+    * q43 formulation). One document is one row, so this is a per-row
+    * projection: no explode, no regroup. A doc with no text span (media
+    * only, or no spans) yields "" and a null array yields null; both sign
+    * 0 under [[simhashTotal]].
     */
-  private val LaneBits = 21
-  private val LanesPerPack = 3
+  def spansText(spans: Column): Column =
+    array_join(transform(array_sort(filter(
+        transform(spans, s => struct(s.getField("offset").as("offset"),
+          s.getField("text").as("text"))),
+        x => x.getField("text") =!= "")),
+      x => x.getField("text")), " ")
 
-  /** (doc_id, simhash) over a (doc_id, text) corpus — SimHash packed long
-    * over `hashBits` informative bits of `tokenHash`, computed by the
-    * explode/groupBy formulation (scales linearly; no 60-way expression
-    * blowup). Defaults are the oracle-parity md5/60 geometry; the
-    * production entry points pass xxhash64/64.
-    *
-    * The per-bit majority votes aggregate PACKED: bit b's 0/1 count rides
-    * lane (b mod 3) of packed sum ⌊b/3⌋ — ⌈bits/3⌉ sum() buffers instead of
-    * one per bit, with no branch per (token, bit). Exact: lanes are wide
-    * enough that counts never carry across (LaneBits above), and the old
-    * ±1 vote `sum(bit ? 1 : -1) > 0` is algebraically `2·count(bit) > n`.
-    * The final pack is a sum of disjoint-bit terms — disjoint bits never
-    * carry, so the sum is the bitwise OR even when bit 63's term is
-    * negative.
+  /** (doc_id, simhash) over a (doc_id, text) corpus: the per-row
+    * [[graft.plans.SimhashVote]] kernel over the doc's distinct token
+    * hashes, `hashBits` informative bits of `tokenHash`. Only docs with at
+    * least one token get a row (the oracle-parity contract behind
+    * q25/q44/q46/q49, whose DuckDB mirror groups exploded tokens). Defaults
+    * are the oracle-parity md5/60 geometry; the production entry points
+    * pass xxhash64/64.
     */
   def simhash(docs: DataFrame, hashBits: Int = SimhashBits,
-      tokenHash: Column => Column = Canon.md5Long): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"),
-        explode(array_distinct(TextFns.tokens(col("text")))).as("tok"))
-      .select(col("doc_id"), tokenHash(col("tok")).as("h"))
-    val nPacks = (hashBits + LanesPerPack - 1) / LanesPerPack
-    val packs = (0 until nPacks).map { p =>
-      val terms = (0 until LanesPerPack).flatMap { lane =>
-        val b = p * LanesPerPack + lane
-        // arithmetic shiftright replicates the sign bit; &1 still reads
-        // bit 63 correctly (two's complement)
-        if (b < hashBits)
-          Some(shiftleft(shiftright(col("h"), b).bitwiseAND(lit(1L)),
-            lane * LaneBits))
-        else None
-      }
-      sum(terms.reduce(_ + _)).as(s"p$p")
-    }
-    val aggCols = packs :+ count(lit(1)).as("n")
-    toks.groupBy("doc_id")
-      .agg(aggCols.head, aggCols.tail: _*)
-      .select(col("doc_id"),
-        (0 until hashBits).map { b =>
-          val s = shiftright(col(s"p${b / LanesPerPack}"),
-              (b % LanesPerPack) * LaneBits)
-            .bitwiseAND(lit((1L << LaneBits) - 1))
-          when(s * 2 > col("n"), lit(1L << b)).otherwise(lit(0L))
-        }.reduce(_ + _).as("simhash"))
-  }
+      tokenHash: Column => Column = Canon.md5Long): DataFrame =
+    simhashTotal(docs.filter(size(TextFns.tokens(col("text"))) > 0),
+      hashBits, tokenHash)
 
-  /** [[simhash]] made TOTAL over the input: a doc whose text yields zero
-    * tokens (empty / whitespace-only — explode emits no rows for it, so
-    * the groupBy never sees the doc) gets the empty-token-set signature 0L,
-    * which IS the majority vote over zero tokens (every bit count is 0,
-    * never a strict majority). One output row per input doc, always — the
-    * contract a persisted signature table needs (`corpus_sim` row count ==
-    * docs ingested), and degenerate empty duplicates still pair with each
-    * other at hd 0 instead of silently vanishing from the candidate space.
+  /** [[simhash]] made TOTAL over the input: one output row per input doc,
+    * always — the contract a persisted signature table needs (`corpus_sim`
+    * row count == docs ingested). A doc whose text yields zero tokens
+    * (empty, whitespace-only or null) gets the empty-token-set signature
+    * 0L, which IS the majority vote over zero tokens, so degenerate empty
+    * duplicates still pair with each other at hd 0.
     */
   def simhashTotal(docs: DataFrame, hashBits: Int = XxHashBits,
       tokenHash: Column => Column = xxTokenHash): DataFrame =
-    docs.select("doc_id")
-      .join(simhash(docs, hashBits, tokenHash), Seq("doc_id"), "left")
-      .na.fill(0L, Seq("simhash"))
+    docs.select(col("doc_id"), coalesce(graft.plans.SimhashVote(
+        transform(array_distinct(TextFns.tokens(col("text"))), tokenHash),
+        hashBits), lit(0L)).as("simhash"))
 
   /** All doc pairs within hamming distance ≤ [[Banding.HD]] over a corpus
     * of (doc_id, text) rows, blocked at the B that [[Banding.blocksFor]]
@@ -134,10 +104,10 @@ object NearDup {
     * Returns every (doc_a, doc_b, hd ≤ [[Banding.HD]]) pair with at least
     * one side in the new batch — output-identical to
     * `pairs(corpus ∪ new)` filtered to pairs touching the batch
-    * (NearDupSpec pins the equality) — while the banded join probes only
-    * NEW-side groups against the full band table, so per-increment
-    * candidate work is O(|new| × bucket occupancy), independent of how
-    * many old-old pairs exist.
+    * (NearDupSpec pins the equality) — while only the batch's bands are
+    * ever a join's build side, so per-increment candidate work is
+    * O(|new| × bucket occupancy), independent of how many old-old pairs
+    * exist.
     */
   def pairsIncremental(newDocs: DataFrame, corpusSim: DataFrame,
       expectedDocs: Long,
@@ -146,80 +116,59 @@ object NearDup {
     incrementalFromSimhash(simhash(newDocs, hashBits, tokenHash), corpusSim,
       Banding.blocksFor(expectedDocs, hashBits = hashBits), hashBits)
 
-  /** [[pairsIncremental]] over precomputed signatures. Same group-collapse
-    * + banded-candidate + verify-once-per-group-pair shape as
-    * [[pairsFromSimhash]], with two deltas: groups carry an any-new-member
-    * flag, and the candidate join is bandsNEW × bandsALL instead of a full
-    * self-join (new-new group pairs arrive twice and collapse in the
-    * DISTINCT; old-old group pairs are never generated). Expansion keeps
-    * only doc pairs touching a new doc, so exact-duplicate groups that mix
-    * old and new members emit their new-touching intra pairs and nothing
-    * else.
+  /** [[pairsIncremental]] over precomputed signatures: ONE probe of the
+    * batch's bands by the bands of `corpusSim ∪ simNew` (HERO-style: only
+    * the new side is ever built; old-old pairs are never generated).
+    *
+    *  - Band keys are computed on the fly (a narrow projection of each
+    *    side), so no band table is persisted and a change of `blocks`
+    *    needs no rebuild.
+    *  - The equi-join on (band_id, band_key) has no hint: the planner
+    *    broadcasts the batch side when it fits under
+    *    `spark.sql.autoBroadcastJoinThreshold` (the corpus side then
+    *    streams through without an Exchange) and shuffles both otherwise.
+    *    The planner sizes both sides from their sources, so pass the batch
+    *    as a file scan: a cache that fills during the query changes its
+    *    size estimate, and AQE then re-plans to broadcast corpus ∪ batch.
+    *  - A candidate is verified with `bit_count` and emitted only from the
+    *    LOWEST band on which both keys agree, so each pair comes out once
+    *    with no DISTINCT; exact duplicates (hd 0) are ordinary candidates,
+    *    so no group collapse or intra-group self-join is needed.
+    *  - A new–new pair meets twice (each side probes the other); only the
+    *    probe with the smaller id emits it.
+    *
+    * Output: (doc_a, doc_b, hd), doc_a < doc_b, no duplicate rows.
     */
   def incrementalFromSimhash(simNew: DataFrame, corpusSim: DataFrame,
       blocks: Int, hashBits: Int = SimhashBits): DataFrame = {
-    val bounds = Banding.blockBounds(blocks, hashBits)
-    val subsets = Banding.blockSubsets(blocks)
-    def blk(bi: Int): Column = {
-      val (st, w) = bounds(bi)
-      shiftright(col("simhash"), st).bitwiseAND(lit((1L << w) - 1))
-    }
-    val keyExprs = subsets.map { sub =>
-      sub.tail.foldLeft(blk(sub.head)) { (acc, bi) =>
-        shiftleft(acc, bounds(bi)._2).bitwiseOR(blk(bi))
-      }
-    }
-    val all = simNew.select(col("doc_id"), col("simhash"),
-        lit(true).as("is_new"))
-      .unionByName(corpusSim.select(col("doc_id"), col("simhash"),
-        lit(false).as("is_new")))
-    val g = all.groupBy("simhash")
-      .agg(min("doc_id").as("gid"), max("is_new").as("g_new"))
-    val md = all.join(g.select("simhash", "gid"), Seq("simhash"))
-      .select(col("doc_id"), col("gid"), col("is_new"))
-    val bands = g.select(col("gid"), col("simhash"), col("g_new"),
-      posexplode(array(keyExprs: _*)).as(Seq("band_id", "band_key")))
-    val gp = bands.filter(col("g_new")).as("x").join(bands.as("y"),
-        col("x.band_id") === col("y.band_id") &&
-          col("x.band_key") === col("y.band_key") &&
-          col("x.gid") =!= col("y.gid"))
-      .select(least(col("x.gid"), col("y.gid")).as("ga"),
-        greatest(col("x.gid"), col("y.gid")).as("gb"),
-        bit_count(col("x.simhash").bitwiseXOR(col("y.simhash")))
-          .cast("int").as("hd"))
-      .filter(col("hd") <= Banding.HD)
-      .distinct()
-    val cross = gp
-      .join(md.as("ma"), col("ga") === col("ma.gid"))
-      .select(col("ma.doc_id").as("da"), col("ma.is_new").as("na"),
-        col("gb"), col("hd"))
-      .join(md.as("mb"), col("gb") === col("mb.gid"))
-      .filter(col("na") || col("mb.is_new"))
-      .select(least(col("da"), col("mb.doc_id")).as("doc_a"),
-        greatest(col("da"), col("mb.doc_id")).as("doc_b"), col("hd"))
-    // intra pairs can only qualify inside groups holding ≥1 new member, so
-    // BOTH self-join sides pre-restrict to g_new groups — an old-only
-    // exact-duplicate group (the corpus's boilerplate clusters) must never
-    // enumerate its |group|²/2 pairs just to discard them; the residual
-    // (is_new ∨ is_new) then prunes old-old pairs within MIXED groups
-    val mdNew = md.join(g.filter(col("g_new")).select("gid"), Seq("gid"))
-    val intra = mdNew.as("u").join(mdNew.as("v"),
-        col("u.gid") === col("v.gid") &&
-          col("u.doc_id") < col("v.doc_id") &&
-          (col("u.is_new") || col("v.is_new")))
-      .select(col("u.doc_id").as("doc_a"), col("v.doc_id").as("doc_b"),
-        lit(0).as("hd"))
-    cross.unionAll(intra)
+    val masks = tableMasks(blocks, hashBits)
+    val batch = simNew.select("doc_id", "simhash")
+    val probe = bands(corpusSim.select(col("doc_id"), col("simhash"),
+        lit(false).as("is_new"))
+      .unionByName(batch.withColumn("is_new", lit(true))), masks)
+    val diff = col("p.simhash").bitwiseXOR(col("b.simhash"))
+    // the lowest table whose key the pair shares; the candidate from any
+    // other table is the same pair again
+    val firstShared = coalesce(masks.zipWithIndex.map { case (m, t) =>
+      when(diff.bitwiseAND(lit(m)) === 0L, lit(t)) }: _*)
+    probe.as("p").join(bands(batch, masks).as("b"),
+        col("p.band_id") === col("b.band_id") &&
+          col("p.band_key") === col("b.band_key") &&
+          (!col("p.is_new") || col("p.doc_id") < col("b.doc_id")))
+      .filter(bit_count(diff) <= Banding.HD && col("p.band_id") === firstShared)
+      .select(least(col("p.doc_id"), col("b.doc_id")).as("doc_a"),
+        greatest(col("p.doc_id"), col("b.doc_id")).as("doc_b"),
+        bit_count(diff).cast("int").as("hd"))
   }
 
   /** The generalized Manku construction over a precomputed (doc_id,
     * simhash) frame: split the hash into `blocks` near-equal contiguous
     * blocks, key one candidate table per (blocks−HD)-subset on that
-    * subset's packed block values, self-join each table on key equality,
-    * verify with the cheap bit_count, and deduplicate across tables.
-    * Candidate generation is EXACT for hd ≤ HD by pigeonhole (≤ HD
-    * differing bits touch ≤ HD blocks, leaving ≥ blocks−HD intact — one
-    * full table key agrees). See [[Banding]] for the occupancy math.
+    * subset's block bits, self-join each table on key equality, verify
+    * with the cheap bit_count, and deduplicate across tables. Candidate
+    * generation is EXACT for hd ≤ HD by pigeonhole (≤ HD differing bits
+    * touch ≤ HD blocks, leaving ≥ blocks−HD intact — one full table key
+    * agrees). See [[Banding]] for the occupancy math.
     *
     * Scale shape: docs sharing the exact simhash collapse into one group
     * first (banding + pair-gen + verify run per distinct hash; intra-group
@@ -229,22 +178,10 @@ object NearDup {
     */
   def pairsFromSimhash(sim: DataFrame, blocks: Int,
       hashBits: Int = SimhashBits): DataFrame = {
-    val bounds = Banding.blockBounds(blocks, hashBits)
-    val subsets = Banding.blockSubsets(blocks)
-    def blk(bi: Int): Column = {
-      val (st, w) = bounds(bi)
-      shiftright(col("simhash"), st).bitwiseAND(lit((1L << w) - 1))
-    }
-    val keyExprs = subsets.map { sub =>
-      sub.tail.foldLeft(blk(sub.head)) { (acc, bi) =>
-        shiftleft(acc, bounds(bi)._2).bitwiseOR(blk(bi))
-      }
-    }
     val g = sim.groupBy("simhash").agg(min("doc_id").as("gid"))
     val md = sim.join(g, Seq("simhash")).select(col("doc_id"), col("gid"))
-    val bands = g.select(col("gid"), col("simhash"),
-      posexplode(array(keyExprs: _*)).as(Seq("band_id", "band_key")))
-    val gp = bands.as("x").join(bands.as("y"),
+    val bs = bands(g, tableMasks(blocks, hashBits))
+    val gp = bs.as("x").join(bs.as("y"),
         col("x.band_id") === col("y.band_id") &&
           col("x.band_key") === col("y.band_key") &&
           col("x.gid") < col("y.gid"))
@@ -265,4 +202,22 @@ object NearDup {
         lit(0).as("hd"))
     cross.unionAll(intra)
   }
+
+  /** One bit mask per Manku table: the union of its (blocks−HD)-subset's
+    * blocks (table order of [[Banding.blockSubsets]]). Two hashes agree on
+    * table t's key iff their XOR has no bit inside mask t, so `simhash &
+    * mask` is the table key itself.
+    */
+  private def tableMasks(blocks: Int, hashBits: Int): Seq[Long] = {
+    val bounds = Banding.blockBounds(blocks, hashBits)
+    Banding.blockSubsets(blocks).map(_.map { bi =>
+      val (st, w) = bounds(bi)
+      ((1L << w) - 1) << st
+    }.reduce(_ | _))
+  }
+
+  /** `sim` with one row per table: (…, band_id, band_key). */
+  private def bands(sim: DataFrame, masks: Seq[Long]): DataFrame =
+    sim.select(col("*"), posexplode(array(masks.map(m =>
+      col("simhash").bitwiseAND(lit(m))): _*)).as(Seq("band_id", "band_key")))
 }

@@ -258,7 +258,7 @@ object QueriesText {
   // never silently diverge on the hash geometry
   val SIMHASH_BITS: Int = graft.operators.NearDup.SimhashBits
 
-  /** (doc_id, simhash) — the operator's linear explode/groupBy SimHash
+  /** (doc_id, simhash) — the operator's per-row SimHash vote
     * ([[graft.operators.NearDup.simhash]]) over the documents table.
     * Shared by q25 and the q44/q46 near-dup scans.
     */
@@ -341,8 +341,8 @@ object QueriesText {
 
   private val q44 = Q("q44_dedup_simhash_pairs",
     // the operator's B=4 instance: blockBounds(4, 60) = four 15-bit blocks
-    // and C(4,1)=4 single-block tables — byte-identical keys and band ids
-    // to the plain 4x15-band formulation this query originally hand-rolled
+    // and C(4,1)=4 single-block tables — the same band ids and the same
+    // key equalities as the plain 4x15-band formulation of the oracle
     (s, dir) => graft.operators.NearDup
       .pairsFromSimhash(simhashDf(s, dir), SIM_BANDS)
       .orderBy("doc_a", "doc_b"),
@@ -355,10 +355,11 @@ object QueriesText {
   /** q49 — the INCREMENTAL near-dup path ([[graft.operators.NearDup
     * .incrementalFromSimhash]]): the steady-state 100 TB operation is "dedup
     * this ingest batch against the standing corpus", not q44's full-corpus
-    * recompute — the banded join probes only new-side groups against the
-    * band table, so per-increment candidate work is O(batch × occupancy),
-    * independent of how many old-old pairs exist. Here the documents table
-    * splits deterministically (doc_id % 4 = 0 → the "new" batch; the rest's
+    * recompute — the banded join builds only the batch's bands and probes
+    * them with corpus ∪ batch, so per-increment candidate work is
+    * O(batch × occupancy), independent of how many old-old pairs exist.
+    * Here the documents table splits deterministically
+    * (doc_id % 4 = 0 → the "new" batch; the rest's
     * signatures are PERSISTED once as a write-once fixture and read back —
     * the same shape a production ingest has, where the corpus signature
     * table is committed state, so the query's cost is genuinely

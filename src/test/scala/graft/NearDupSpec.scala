@@ -2,6 +2,7 @@ package graft
 
 import graft.functions.Banding
 import graft.operators.NearDup
+import org.apache.spark.sql.functions._
 
 /** The near-dup OPERATOR (round-3 verdict item 5): one call with a
   * runtime-derived block count must reproduce the oracle-checked fixed-B
@@ -166,5 +167,140 @@ class NearDupSpec extends SparkSpecBase {
     val viaOp = NearDup.simhash(docs)
       .collect().map(r => (r.get(0), r.getLong(1))).toMap
     assert(viaOp == viaQuery)
+  }
+
+  /** Unordered pairs within hd ≤ HD touching `isNew`, by brute force. */
+  private def bruteForce(sigs: Seq[(Long, Long)], isNew: Long => Boolean): Set[Seq[Any]] =
+    (for {
+      (a, ha) <- sigs; (b, hb) <- sigs
+      if a < b && (isNew(a) || isNew(b))
+      hd = java.lang.Long.bitCount(ha ^ hb) if hd <= Banding.HD
+    } yield Seq[Any](a, b, hd)).toSet
+
+  test("incremental probe: every pair kind, at B = 4, 5, 6 and under the shuffle plan") {
+    import spark.implicits._
+    // block boundaries of the 64-bit geometry at B = 4, 5 and 6: flips that
+    // straddle them put hd 1-3 pairs across blocks (and hd 4 just outside)
+    val cuts = Seq(4, 5, 6).flatMap(b => Banding.blockBounds(b, 64).map(_._1))
+      .filter(_ > 0).distinct.sorted
+    val rnd = new scala.util.Random(11)
+    val bases = Seq.fill(12)(rnd.nextLong())
+    def flip(h: Long, bits: Set[Int]) = bits.foldLeft(h)((x, b) => x ^ (1L << b))
+    val variants = bases.zipWithIndex.flatMap { case (h, i) =>
+      val s = cuts(i % cuts.size); val t = cuts((i + 4) % cuts.size)
+      Seq(Set.empty[Int], Set(s), Set(s - 1, s), Set(s - 1, s, t),
+        Set(s - 1, s, t - 1, t)).map(flip(h, _))
+    }
+    // an exact-dup cluster of 5 (old and new members) and 4 empty-token
+    // docs (signature 0) on both sides
+    val hashes = variants ++ Seq.fill(4)(bases.head) ++ Seq.fill(4)(0L)
+    val sigs = hashes.zipWithIndex.map { case (h, i) => (i.toLong, h) }
+    val isNew = (id: Long) => id % 3 == 1
+    val expected = bruteForce(sigs, isNew)
+    val kinds = expected.map(p => (p(2), isNew(p(0).asInstanceOf[Long]) &&
+      isNew(p(1).asInstanceOf[Long])))
+    assert((0 to 3).forall(hd => kinds.exists(_._1 == hd)),
+      s"test premise: pairs at every hd 0-3, got $kinds")
+    assert(kinds.exists(_._2) && kinds.exists(!_._2),
+      "test premise: both new-new and old-new pairs")
+    assert(sigs.exists { case (a, ha) => sigs.exists { case (b, hb) =>
+        a < b && java.lang.Long.bitCount(ha ^ hb) == Banding.HD + 1 } },
+      "test premise: hd 4 pairs exist to be excluded")
+    val all = sigs.toDF("doc_id", "simhash")
+    val simNew = all.filter(col("doc_id") % 3 === 1)
+    val corpus = all.filter(col("doc_id") % 3 =!= 1)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().map(_.toSeq).toSeq
+    def check(blocks: Int): Unit = {
+      val inc = rows(NearDup.incrementalFromSimhash(simNew, corpus, blocks, 64))
+      assert(inc.size == inc.toSet.size, s"B=$blocks: duplicate rows")
+      assert(inc.forall(p => p(0).asInstanceOf[Long] < p(1).asInstanceOf[Long]))
+      val full = rows(NearDup.pairsFromSimhash(all, blocks, 64)).toSet
+        .filter(p => isNew(p(0).asInstanceOf[Long]) || isNew(p(1).asInstanceOf[Long]))
+      assert(full == expected, s"B=$blocks: full construction disagrees")
+      assert(inc.toSet == expected, s"B=$blocks: incremental=${inc.toSet -- expected} " +
+        s"missing=${expected -- inc.toSet}")
+    }
+    Seq(4, 5, 6).foreach(check)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val shuffled = NearDup.incrementalFromSimhash(simNew, corpus, 5, 64)
+      shuffled.collect()
+      assert(!planNodes(shuffled.queryExecution.executedPlan).exists(_.isInstanceOf[
+        org.apache.spark.sql.execution.joins.BroadcastHashJoinExec]),
+        "test premise: the shuffle plan ran")
+      check(5)
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Every node of an executed plan, through AQE wrappers and stages. */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => q +: planNodes(q.plan)
+      case _ => p +: p.children.flatMap(planNodes)
+    }
+  }
+
+  test("incremental probe plan: the engine-sized batch is broadcast, the corpus scan never shuffles") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val tmp = java.nio.file.Files.createTempDirectory("graft-neardup").toString
+    // an ingest epoch's shape: ~1.4k fetched docs against a few thousand
+    // committed signatures, both signature sets read from parquet as the
+    // engine does
+    def docs(from: Long, n: Long) = spark.range(from, from + n)
+      .select(concat(lit("https://h.example/"), col("id")).as("doc_id"),
+        concat_ws(" ", transform(sequence(lit(0), lit(39)),
+          i => concat(lit("w"), pmod(col("id") * 31 + i * 7, lit(5000))))).as("text"))
+    NearDup.simhashTotal(docs(0, 3000)).write.parquet(s"$tmp/corpus_sim")
+    NearDup.simhashTotal(docs(3000, 1400)).write.parquet(s"$tmp/batch")
+    val out = NearDup.incrementalFromSimhash(spark.read.parquet(s"$tmp/batch"),
+      spark.read.parquet(s"$tmp/corpus_sim"), Banding.blocksFor(4400), 64)
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    val nodes = planNodes(plan)
+    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      s"no broadcast join:\n$plan")
+    // no Exchange holds the corpus scan below it (the batch is scanned
+    // twice: as probe rows, and under the broadcast exchange)
+    def isCorpusScan(p: SparkPlan) = p match {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.getName == "corpus_sim")
+      case _ => false
+    }
+    assert(nodes.exists(isCorpusScan), s"no corpus scan:\n$plan")
+    assert(!nodes.exists {
+      case e: Exchange => planNodes(e).exists(isCorpusScan)
+      case _ => false
+    }, s"the corpus scan sits under an Exchange:\n$plan")
+  }
+
+  test("vote kernel: generated and interpreted paths equal the ±1 vote") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val arrays: Seq[Seq[Option[Long]]] = Seq(Seq.empty) ++ Seq.fill(40)(
+      Seq.fill(rnd.nextInt(9))(Some(rnd.nextLong()))) :+ Seq(Some(1L), None, Some(3L))
+    // a null hash counts in n and votes against every bit
+    def pm1(hs: Seq[Option[Long]], bits: Int): Long = (0 until bits).map { b =>
+      val votes = hs.map(h => if (h.exists(x => ((x >>> b) & 1L) == 1L)) 1 else -1).sum
+      if (votes > 0) 1L << b else 0L
+    }.sum
+    val df = arrays.zipWithIndex.map { case (a, i) => (i, a) }.toDF("i", "hs")
+    def run(): Map[Int, (Long, Long)] = df.select(col("i"),
+        graft.plans.SimhashVote(col("hs"), 64), graft.plans.SimhashVote(col("hs"), 60))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val want = arrays.indices.map(i => i -> ((pm1(arrays(i), 64), pm1(arrays(i), 60)))).toMap
+    assert(run() == want, "generated path")
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val prior = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), "false"); spark.conf.set(keys(1), "NO_CODEGEN")
+    try assert(run() == want, "interpreted path")
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 }

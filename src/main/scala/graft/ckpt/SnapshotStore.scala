@@ -1,12 +1,11 @@
 package graft.ckpt
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.EnumSet
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path => HPath}
+import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
@@ -32,8 +31,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *   root/manifest/v<N>.json     // immutable snapshot manifest
   *   root/manifest/LATEST        // current version number (atomic rename)
   *   root/data/<table>/v<N>/     // parquet written by snapshot N
-  *   root/data/seen/v<N>/        // snapshot N's seen slice, one file per
-  *                               //   bucket (`…_<bucket>.snappy.parquet`)
+  *   root/data/seen/v<N>/        // snapshot N's seen slice, at most one
+  *                               //   file per bucket of the manifest's
+  *                               //   `seen_buckets` (`…_<bucket>.snappy.parquet`)
   *   root/data/seen_fold/v<N>/   // a seen compaction staged by snapshot N
   * }}}
   *
@@ -46,7 +46,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * dirs are ignored because readers only follow manifest-referenced paths.
   */
 final class SnapshotStore(rootDir: String, spark: SparkSession) {
-  import SnapshotStore.{SeenBuckets, SeenSchema}
+  import SnapshotStore.SeenSchema
   private val mapper = new ObjectMapper
   private val root = new HPath(rootDir)
   private val fc = FileContext.getFileContext(
@@ -58,10 +58,15 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
   private val manifestDir = new HPath(root, "manifest")
   fc.mkdir(manifestDir, FsPermission.getDirDefault, true)
 
+  /** One snapshot. `seenBuckets` is the seen table's hash bucket count:
+    * fixed by the store's first commit and carried by every later one, so
+    * every seen file of the store was written with the same count.
+    */
   final case class Manifest(
       version: Long,
       parent: Long,
       epoch: Long,
+      seenBuckets: Int,
       tables: Map[String, Seq[String]],
       counters: Map[String, Long])
 
@@ -85,8 +90,11 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     val counters = node.get("counters").properties().asScala.map { e =>
       e.getKey -> e.getValue.asLong()
     }.toMap
+    val buckets = node.get("seen_buckets")
+    require(buckets != null, s"snapshot v$v has no seen_buckets: a store " +
+      "written before the seen bucket count was recorded cannot be opened")
     Manifest(node.get("version").asLong(), node.get("parent").asLong(),
-      node.get("epoch").asLong(), tables, counters)
+      node.get("epoch").asLong(), buckets.asInt(), tables, counters)
   }
 
   def readTable(m: Manifest, table: String): Option[DataFrame] =
@@ -170,12 +178,13 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     val carried = parent.map(_.tables).getOrElse(Map.empty)
       .filter { case (t, _) => !touched.contains(t) }
     val m = Manifest(v, parent.map(_.version).getOrElse(-1L), epoch,
-      carried ++ replaced ++ appended, counters)
+      seenBuckets(parent), carried ++ replaced ++ appended, counters)
 
     val node: ObjectNode = mapper.createObjectNode()
     node.put("version", m.version)
     node.put("parent", m.parent)
     node.put("epoch", m.epoch)
+    node.put("seen_buckets", m.seenBuckets)
     val tn = node.putObject("tables")
     m.tables.foreach { case (t, ps) =>
       val a = tn.putArray(t); ps.foreach(a.add)
@@ -204,12 +213,19 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
   // the entire (10^10-row at target scale) set per epoch. It is instead
   // the manifest table `seen` whose files each hold ONE hash bucket of
   // canon_url and carry Spark's bucket-file suffix, so its scan reports
-  // HashPartitioning(canon_url, SeenBuckets) and only the (small,
+  // HashPartitioning(canon_url, seenBuckets) and only the (small,
   // per-epoch) candidate side shuffles. Visibility and crash safety are
   // the manifest's, like every other table: an uncommitted slice or fold
   // is an unreferenced staging dir that the re-run overwrites and
-  // expireUnreferenced reclaims. The bucket count is fixed by the store
-  // layout (cfg_store_layout), so a reader always uses the writer's count.
+  // expireUnreferenced reclaims.
+  //
+  // The bucket count is the width of the creating session's exchanges
+  // (spark.sql.shuffle.partitions), so the anti-join's output, and every
+  // post-dedup stage and file write that consumes it, runs one task per
+  // core. The store's first
+  // commit records it in the manifest and every later commit carries it:
+  // readers and writers use the manifest's count, never the session's, so
+  // a store resumed at another width keeps the count its files carry.
 
   /** Write `urls`' canon_url column, one file per bucket, into this
     * commit's `seen` staging dir; returns the dir for the caller's
@@ -218,7 +234,7 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     */
   def appendSeen(urls: DataFrame): String = {
     val dir = stagingDir("seen")
-    urls.select("canon_url").repartition(SeenBuckets, col("canon_url"))
+    urls.select("canon_url").repartition(seenBuckets(latest()), col("canon_url"))
       .write.mode("overwrite").parquet(dir)
     suffixBuckets(dir)
   }
@@ -232,10 +248,16 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
   def compactSeen(dirs: Seq[String]): String = {
     val dir = stagingDir("seen_fold")
     spark.read.schema(SeenSchema).parquet(dirs: _*)
-      .repartition(SeenBuckets, col("canon_url"))
+      .repartition(seenBuckets(latest()), col("canon_url"))
       .write.mode("overwrite").parquet(dir)
     suffixBuckets(dir)
   }
+
+  /** The bucket count a commit on top of `parent` records: the parent's,
+    * or for the store's first commit the session's shuffle width.
+    */
+  private def seenBuckets(parent: Option[Manifest]): Int =
+    parent.fold(spark.conf.get("spark.sql.shuffle.partitions").toInt)(_.seenBuckets)
 
   /** Rename each part file of a hash-partitioned write after its bucket:
     * the hash partition id IS the bucket id, and Spark reads it from the
@@ -256,7 +278,7 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     spark.baseRelationToDataFrame(HadoopFsRelation(
       new InMemoryFileIndex(spark, m.tables.getOrElse("seen", Nil).map(new HPath(_)),
         Map.empty, Some(SeenSchema)),
-      new StructType(), SeenSchema, Some(BucketSpec(SeenBuckets, Seq("canon_url"), Nil)),
+      new StructType(), SeenSchema, Some(BucketSpec(m.seenBuckets, Seq("canon_url"), Nil)),
       new ParquetFileFormat, Map.empty)(spark))
 
   /** The seen set as of committed epoch `epoch` (the newest manifest at or
@@ -380,8 +402,9 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     */
   private def syncedTemp(target: HPath, content: String): HPath = {
     val tmp = new HPath(target.getParent, target.getName + ".tmp")
-    val out = fc.create(tmp,
-      EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+    // FileSystem, not FileContext: FileContext.create sets the file mode,
+    // which on the local filesystem without native code forks a `chmod`
+    val out = fs.create(tmp, true)
     try {
       out.write(content.getBytes(UTF_8))
       out.hflush()
@@ -400,8 +423,5 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
 }
 
 object SnapshotStore {
-  /** Hash buckets of the seen table (part of the store layout). */
-  val SeenBuckets = 32
-
   private val SeenSchema = StructType(Seq(StructField("canon_url", StringType)))
 }

@@ -947,13 +947,15 @@ final class EpochDriver(
 }
 
 object EpochDriver {
-  /** Version of the snapshot-store table layout: 3 = log-structured
+  /** Version of the snapshot-store table layout: 4 = log-structured
     * frontier (frontier_base + frontier_delta, FrontierLog) + single
     * fetch_result lineage table + the seen set as the manifest table
-    * `seen` in SnapshotStore.SeenBuckets buckets (2 kept it in a catalog
-    * table). Resume refuses any other layout.
+    * `seen`, hash-bucketed by the count its manifest records
+    * (`seen_buckets`, the creating session's shuffle width). 3 used a
+    * fixed 32 buckets and no recorded count; 2 kept the seen set in a
+    * catalog table. Resume refuses any other layout.
     */
-  val StoreLayoutVersion = 3L
+  val StoreLayoutVersion = 4L
 
   /** Seen dir count at which the per-cadence generational fold escalates
     * to a full fold. Bounds the per-epoch bucketed-scan overhead at

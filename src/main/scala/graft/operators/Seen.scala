@@ -251,9 +251,12 @@ object Seen {
     * is already hash-bucketed on canon_url (SeenBucketSpec pins the
     * no-Exchange scan), so per partition the build side is |seen|/P rows —
     * a hash table per task is exactly what partition sizing already
-    * budgets for, at the bench geometry and at 10^10 URLs alike (P grows
-    * with the table; the routed path below takes over past the broadcast
-    * ceiling). Anti/outer semantics and results are identical either way.
+    * budgets for, at the bench geometry and at 10^10 URLs alike (P is the
+    * store's bucket count, recorded at its first commit from the creating
+    * session's shuffle width, so a store created on a cluster-sized session
+    * gets cluster-sized buckets; the routed path below takes over past the
+    * broadcast ceiling). Anti/outer semantics and results are identical
+    * either way.
     */
   def filterUnseen(candidates: DataFrame, urlCol: String, seen: DataFrame,
       bloom: Option[org.apache.spark.broadcast.Broadcast[SegmentedBloom]]): DataFrame =

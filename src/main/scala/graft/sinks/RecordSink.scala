@@ -1,10 +1,8 @@
 package graft.sinks
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.EnumSet
 
-import org.apache.hadoop.fs.{CreateFlag, FileContext, Options, Path => HPath}
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
@@ -97,8 +95,11 @@ object RecordSink {
         val pid = tc.partitionId()
         val attempt = tc.taskAttemptId()
         val dir = new HPath(topicDir)
-        val fc = FileContext.getFileContext(dir.toUri, hadoopConf.value)
-        fc.mkdir(dir, FsPermission.getDirDefault, true)
+        // FileSystem, not FileContext: on the local filesystem without
+        // native code FileContext's create forks a `chmod` and its rename
+        // forks `stat`s, tens of ms per batch against well under one
+        val fs = dir.getFileSystem(hadoopConf.value)
+        fs.mkdirs(dir)
         // the bridge "connection" amortizes ACROSS tasks, not per task: the
         // shared per-JVM client (bridgeClient above — R3 taken one step
         // further, since the client is stateless between requests)
@@ -128,9 +129,14 @@ object RecordSink {
           // commits exactly one attempt's set per partition
           val target = new HPath(dir, s"batch-$tag-p$pid-a$attempt-$batchNo.json")
           val tmp = new HPath(dir, s".batch-$tag-p$pid-a$attempt-$batchNo.json.tmp")
-          val out = fc.create(tmp, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+          val out = fs.create(tmp, true)
           try out.write(body.getBytes(UTF_8)) finally out.close()
-          fc.rename(tmp, target, Options.Rename.OVERWRITE)
+          // a re-run in a new application (attempt ids restart) may reuse a
+          // name a crashed run left behind: replace it (FileSystem.rename
+          // does not overwrite, and reports failure by returning false)
+          fs.delete(target, false)
+          if (!fs.rename(tmp, target))
+            throw new java.io.IOException(s"rename $tmp -> $target failed")
           // over the wire AFTER the durable rename: a POST failure fails
           // the task and the retry re-publishes the same attempt-disjoint
           // file and re-POSTs — at-least-once on the bridge, exactly-once
@@ -164,15 +170,18 @@ object RecordSink {
       (0 until n).map(i => s"batch-$tag-p$pid-a$attempt-$i.json")
     }.sorted
     val dir = new HPath(topicDir)
-    val fc = FileContext.getFileContext(dir.toUri,
-      spark.sparkContext.hadoopConfiguration)
-    fc.mkdir(dir, FsPermission.getDirDefault, true)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dir.getFileSystem(conf)
+    fs.mkdirs(dir)
     val body = files.map(jsonString).mkString("{\"files\":[", ",", "]}")
     val target = new HPath(dir, s"manifest-$tag.json")
     val tmp = new HPath(dir, s".manifest-$tag.json.tmp")
-    val out = fc.create(tmp, EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE))
+    val out = fs.create(tmp, true)
     try out.write(body.getBytes(UTF_8)) finally out.close()
-    fc.rename(tmp, target, Options.Rename.OVERWRITE)
+    // the manifest replaces its predecessor atomically: readers see the old
+    // list or the new one, never neither
+    FileContext.getFileContext(dir.toUri, conf)
+      .rename(tmp, target, Options.Rename.OVERWRITE)
   }
 
   private def jsonString(s: String): String =

@@ -160,18 +160,34 @@ class EngineSpec extends SparkSpecBase {
     assert(newDriver(dir).runEpoch()("epoch") == m.epoch + 1)
   }
 
-  test("a store of the catalog seen layout (cfg_store_layout = 2) refuses to resume") {
+  test("a store of layout 2 or 3, or one without seen_buckets, refuses to resume") {
     val dir = tmpDir()
     val a = newDriver(dir)
     a.init(seeds)
     a.runEpoch()
     val store = new SnapshotStore(dir, spark)
     val m = store.latest().get
-    store.commit(m.epoch, Map.empty, Map.empty,
-      m.counters + ("cfg_store_layout" -> 2L))
+    // 2 kept the seen set in a catalog table, 3 in a fixed 32 buckets
+    Seq(2L, 3L).foreach { layout =>
+      store.commit(m.epoch, Map.empty, Map.empty,
+        m.counters + ("cfg_store_layout" -> layout))
+      val e = intercept[IllegalArgumentException](newDriver(dir).runEpoch())
+      assert(e.getMessage.contains("resume config mismatch") &&
+        e.getMessage.contains("cfg_store_layout"), e.getMessage)
+    }
+    // an otherwise intact manifest with the bucket count stripped (and its
+    // checksum file dropped, so the read reaches the manifest's content)
+    val v = store.commit(m.epoch, Map.empty, Map.empty, m.counters).version
+    val manifestDir = java.nio.file.Paths.get(dir, "manifest")
+    val json = manifestDir.resolve(s"v$v.json").toFile
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    val node = mapper.readTree(json)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("seen_buckets")
+    mapper.writeValue(json, node)
+    java.nio.file.Files.deleteIfExists(manifestDir.resolve(s".v$v.json.crc"))
     val e = intercept[IllegalArgumentException](newDriver(dir).runEpoch())
-    assert(e.getMessage.contains("resume config mismatch") &&
-      e.getMessage.contains("cfg_store_layout"), e.getMessage)
+    assert(e.getMessage.contains("seen_buckets"), e.getMessage)
   }
 
   test("seen compaction: fewer partitions, identical set, and it SURVIVES a restart") {

@@ -24,12 +24,6 @@ import graft.gen.SimWeb
   * window), base untouched — the regime for stretching `compactEvery`
   * 10-100× at the north-rule geometry (e.g. compactEvery=32 minorEvery=4
   * vs the old compactEvery=4: same counters, 1/8th the base-rewrite bytes).
-  *
-  * SPARK_GRAFT_BLOOM_ROUTED=1 switches the seen-set prefilter to the
-  * segment-ROUTED probe (no merged Bloom broadcast anywhere — the
-  * ≳10^10.5-URL geometry, operators/Seen.filterUnseenRouted). Counters are
-  * byte-identical to the broadcast path (EngineSpec pins this); the knob
-  * is pure execution strategy.
   */
 object Crawl {
 
@@ -52,7 +46,6 @@ object Crawl {
       epochBudgetMs = budgetMs, compactSeenEvery = compactEvery,
       compactFrontierEvery = compactEvery,
       compactDeltaEvery = minorEvery,
-      bloomRouted = sys.env.get("SPARK_GRAFT_BLOOM_ROUTED").contains("1"),
       // SPARK_GRAFT_NEARDUP=1: near-dup each epoch's fetched docs against
       // the persisted corpus signatures (corpus_sim) and append the batch's
       // signatures — the steady-state training-data ingest shape. Resume-

@@ -7,12 +7,12 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types._
 
 /** Iceberg-style snapshot layer (SURVEY.md §7.2 constraint C1: no Iceberg
   * runtime jar ships in this sandbox, so the snapshot/manifest mechanics are
@@ -30,23 +30,34 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * {{{
   *   root/manifest/v<N>.json     // immutable snapshot manifest
   *   root/manifest/LATEST        // current version number (atomic rename)
-  *   root/data/<table>/v<N>/     // parquet written by snapshot N
+  *   root/data/<table>/v<N>/     // parquet staged for snapshot N
   *   root/data/seen/v<N>/        // snapshot N's seen slice, at most one
   *                               //   file per bucket of the manifest's
   *                               //   `seen_buckets` (`…_<bucket>.snappy.parquet`)
   *   root/data/seen_fold/v<N>/   // a seen compaction staged by snapshot N
   * }}}
   *
+  * Manifest (`v<N>.json`): `version`, `parent`, `epoch`, `seen_buckets`,
+  * `tables` (table → its data dirs), `schemas` (table → the schema its
+  * files carry, as compact `StructType.json`) and `counters`. Readers take
+  * every table's schema from the manifest, so a read lists its dirs on the
+  * driver and runs no Spark job, and a zero-row or file-less dir reads
+  * back as an empty table. A manifest without `schemas` refuses to open.
+  *
   * Commit protocol (all-or-nothing, resume-exact — SURVEY §7.5):
-  *  1. write each table's parquet under data/<table>/v<N>/
-  *  2. write manifest to a temp file, hsync, rename to v<N>.json (over a
-  *     stale one a crashed attempt left)
+  *  1. [[stage]] each table's parquet once under data/<table>/v<N>/; the
+  *     write itself reports its schema, rows and bytes
+  *  2. [[commit]] the staged entries: the new table → dirs and table →
+  *     schema maps (a staged schema must equal the committed one) go to a
+  *     temp file, hsync, rename to v<N>.json (over a stale one a crashed
+  *     attempt left)
   *  3. write + rename LATEST pointing at N
   * A crash before (3) leaves LATEST at the previous snapshot; orphan data
-  * dirs are ignored because readers only follow manifest-referenced paths.
+  * dirs are ignored because readers only follow manifest-referenced paths,
+  * and the re-run stages into the same dirs.
   */
 final class SnapshotStore(rootDir: String, spark: SparkSession) {
-  import SnapshotStore.SeenSchema
+  import SnapshotStore.{SeenSchema, Staged}
   private val mapper = new ObjectMapper
   private val root = new HPath(rootDir)
   private val fc = FileContext.getFileContext(
@@ -61,6 +72,7 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
   /** One snapshot. `seenBuckets` is the seen table's hash bucket count:
     * fixed by the store's first commit and carried by every later one, so
     * every seen file of the store was written with the same count.
+    * `schemas` holds each table's schema, as its files were written.
     */
   final case class Manifest(
       version: Long,
@@ -68,6 +80,7 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
       epoch: Long,
       seenBuckets: Int,
       tables: Map[String, Seq[String]],
+      schemas: Map[String, StructType],
       counters: Map[String, Long])
 
   private def readString(p: HPath): String = {
@@ -84,101 +97,103 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
 
   def readManifest(v: Long): Manifest = {
     val node = mapper.readTree(readString(new HPath(manifestDir, s"v$v.json")))
-    val tables = node.get("tables").properties().asScala.map { e =>
-      e.getKey -> e.getValue.elements().asScala.map(_.asText()).toSeq
-    }.toMap
-    val counters = node.get("counters").properties().asScala.map { e =>
-      e.getKey -> e.getValue.asLong()
-    }.toMap
-    val buckets = node.get("seen_buckets")
-    require(buckets != null, s"snapshot v$v has no seen_buckets: a store " +
-      "written before the seen bucket count was recorded cannot be opened")
+    def field(key: String) = {
+      val n = node.get(key)
+      require(n != null, s"snapshot v$v has no $key: a store written " +
+        s"before $key was recorded cannot be opened")
+      n
+    }
+    def entries(key: String) = field(key).properties().asScala.map(e =>
+      e.getKey -> e.getValue).toMap
     Manifest(node.get("version").asLong(), node.get("parent").asLong(),
-      node.get("epoch").asLong(), buckets.asInt(), tables, counters)
+      node.get("epoch").asLong(), field("seen_buckets").asInt(),
+      entries("tables").map { case (t, a) => t -> a.elements().asScala.map(_.asText()).toSeq },
+      entries("schemas").map { case (t, j) =>
+        t -> DataType.fromJson(j.asText()).asInstanceOf[StructType] },
+      entries("counters").map { case (k, x) => k -> x.asLong() })
   }
 
-  def readTable(m: Manifest, table: String): Option[DataFrame] =
-    m.tables.get(table).filter(_.nonEmpty).map(ps => spark.read.parquet(ps: _*))
-
-  /** Does `dir` (recursively) hold at least one data file? Root
-    * consolidation drains source roots by rename BEFORE the manifest swap
-    * commits, so a crash in that window leaves a referenced-but-file-less
-    * root until the next pass converges it; PER-ROOT readers (hive-
-    * partitioned tables reject multi-root inference, so frontier_archive
-    * reads one root at a time) must skip such roots instead of failing
-    * parquet schema inference on them. Cost: one listing per subdir —
-    * roots hold at most a couple of state= dirs.
+  /** `table` as of manifest `m`, read with its recorded schema: the dirs
+    * are listed on the driver, and no Spark job runs.
     */
-  def hasDataFiles(dir: String): Boolean = {
-    def rec(h: HPath): Boolean =
-      fc.util.listStatus(h).exists { st =>
-        if (st.isFile)
-          !st.getPath.getName.startsWith("_") &&
-            !st.getPath.getName.startsWith(".")
-        else rec(st.getPath)
-      }
-    val p = new HPath(dir)
-    fc.util.exists(p) && rec(p)
-  }
+  def readTable(m: Manifest, table: String): Option[DataFrame] =
+    m.tables.get(table).map(read(m.schemas(table), _))
+
+  /** Parquet `dirs` read with `schema` (no dirs: an empty table). Each
+    * dir is its own scan: hive-style partition discovery (the frontier's
+    * `state=` dirs) rejects a read whose dirs are different roots.
+    */
+  def read(schema: StructType, dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+    else dirs.map(spark.read.schema(schema).parquet(_)).reduce(_.unionByName(_))
+
+  /** A staged write, read back from its dir. */
+  def read(s: Staged): DataFrame = read(s.schema, Seq(s.dir))
 
   /** The version the NEXT commit will get (single-writer store), and the
-    * data directory that commit would assign to `table`. Callers that must
-    * make a table's bytes durable BEFORE building downstream results (the
-    * epoch driver writes each epoch's fetch output once and re-reads it
-    * columnar instead of caching it) write there directly and pass the dir
-    * through `commit(appendPaths = …)`; a crash before the manifest commit
-    * leaves an orphan dir that the deterministic re-run overwrites.
+    * data directory that commit would assign to `table`. A crash before
+    * the manifest commit leaves an orphan dir that the deterministic
+    * re-run overwrites.
     */
   def nextVersion(): Long = latestVersion().map(_ + 1).getOrElse(0L)
   def stagingDir(table: String): String =
     new HPath(root, s"data/$table/v${nextVersion()}").toString
 
-  /** Commit a new snapshot. `replace` tables point only at this commit's
-    * files; `append` tables carry the parent's file list forward plus the
-    * new files (metrics / fetch lineage accumulate this way without
-    * rewriting history); `appendPaths` appends directories the caller
-    * already wrote (see [[stagingDir]]); `drop` removes a table's lineage
-    * from the manifest entirely (compaction folds an append-table's
-    * content into a replace-table and drops the log). Parent tables not
-    * named by any of these carry forward unchanged — a commit pays I/O
-    * only for what it touches. Tables named in `partitionedBy` are written
-    * with hive-style partition dirs so predicates on the partition column
-    * prune whole directories at read time (e.g. the frontier by `state`:
-    * the scheduler's state='pending' scan never touches fetched/failed
-    * files).
+  /** The one table write: `df` once into the next commit's dir for
+    * `table` (data/<table>/v<N>; hive-style `partitionBy` dirs when given,
+    * so predicates on that column prune whole directories at read time —
+    * e.g. the frontier's `state`). The row count is observed in the
+    * write's own tasks, and the bytes come from the filesystem's summary
+    * of the written dir, so neither re-reads the output. Callers that derive
+    * further results from the written bytes read them back with [[read]].
     */
-  def commit(epoch: Long, replace: Map[String, DataFrame],
-      append: Map[String, DataFrame], counters: Map[String, Long],
-      partitionedBy: Map[String, String] = Map.empty,
-      appendPaths: Map[String, Seq[String]] = Map.empty,
-      replacePaths: Map[String, Seq[String]] = Map.empty,
+  def stage(table: String, df: DataFrame,
+      partitionBy: Option[String] = None): Staged = {
+    val dir = stagingDir(table)
+    val rows = Observation()
+    val w = df.observe(rows, count(lit(1)).as("rows")).write.mode("overwrite")
+    partitionBy.fold(w)(w.partitionBy(_)).parquet(dir)
+    Staged(dir, SnapshotStore.normalized(df.schema),
+      rows.get("rows").asInstanceOf[Long],
+      fs.getContentSummary(new HPath(dir)).getLength)
+  }
+
+  /** The dirs `m` commits for `table`, as entries a later commit can name
+    * again (a fold's untouched generations, a consolidation's surviving
+    * root): they write nothing, so rows and bytes are 0.
+    */
+  def committed(m: Manifest, table: String): Seq[Staged] =
+    m.tables(table).map(Staged(_, m.schemas(table), 0L, 0L))
+
+  /** Commit a new snapshot. `replace` tables point only at the given
+    * entries; `append` tables carry the parent's dirs forward plus the
+    * staged one (metrics / fetch lineage accumulate this way without
+    * rewriting history); `drop` removes a table from the manifest entirely
+    * (a fold drops the delta log it resolved). Parent tables not named
+    * carry forward unchanged — a commit pays I/O only for what it touches.
+    * Every entry's schema must equal the table's committed schema: the
+    * manifest records one schema per table, and readers apply it to all of
+    * the table's dirs.
+    */
+  def commit(epoch: Long, replace: Map[String, Seq[Staged]],
+      append: Map[String, Staged], counters: Map[String, Long],
       drop: Set[String] = Set.empty): Manifest = {
     val parent = latest()
     val v = parent.map(_.version + 1).getOrElse(0L)
-
-    def write(table: String, df: DataFrame): String = {
-      val dir = new HPath(root, s"data/$table/v$v").toString
-      val w = df.write.mode("overwrite")
-      partitionedBy.get(table).fold(w)(c => w.partitionBy(c)).parquet(dir)
-      dir
+    val prev = parent.fold(Map.empty[String, Seq[String]])(_.tables)
+    val prevSchemas = parent.fold(Map.empty[String, StructType])(_.schemas)
+    val staged = replace ++ append.map { case (t, s) => t -> Seq(s) }
+    val schemas = staged.map { case (t, ss) =>
+      val s = (prevSchemas.get(t) ++ ss.map(_.schema)).toSeq.distinct
+      require(s.size == 1, s"table $t: staged schemas ${s.map(_.simpleString)
+        .mkString(" / ")} differ from its committed schema")
+      t -> s.head
     }
-
-    // replacePaths: like `replace` but for directories the caller already
-    // wrote via [[stagingDir]] — lets a caller materialize a table once and
-    // derive further commit content from the written bytes instead of
-    // recomputing the plan per consumer
-    val replaced = replace.map { case (t, df) => t -> Seq(write(t, df)) } ++
-      replacePaths
-    def prevOf(t: String): Seq[String] =
-      parent.flatMap(_.tables.get(t)).getOrElse(Seq.empty)
-    val appended = append.map { case (t, df) => t -> (prevOf(t) :+ write(t, df)) } ++
-      appendPaths.map { case (t, dirs) => t -> (prevOf(t) ++ dirs) }
-    val touched = replace.keySet ++ append.keySet ++ appendPaths.keySet ++
-      replacePaths.keySet ++ drop
-    val carried = parent.map(_.tables).getOrElse(Map.empty)
-      .filter { case (t, _) => !touched.contains(t) }
     val m = Manifest(v, parent.map(_.version).getOrElse(-1L), epoch,
-      seenBuckets(parent), carried ++ replaced ++ appended, counters)
+      seenBuckets(parent),
+      prev -- drop ++ replace.map { case (t, ss) => t -> ss.map(_.dir) } ++
+        append.map { case (t, s) => t -> (prev.getOrElse(t, Nil) :+ s.dir) },
+      prevSchemas -- drop ++ schemas, counters)
 
     val node: ObjectNode = mapper.createObjectNode()
     node.put("version", m.version)
@@ -189,6 +204,8 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     m.tables.foreach { case (t, ps) =>
       val a = tn.putArray(t); ps.foreach(a.add)
     }
+    val sn = node.putObject("schemas")
+    m.schemas.foreach { case (t, s) => sn.put(t, s.json) }
     val cn = node.putObject("counters")
     m.counters.foreach { case (k, x) => cn.put(k, x) }
 
@@ -227,31 +244,22 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
   // readers and writers use the manifest's count, never the session's, so
   // a store resumed at another width keeps the count its files carry.
 
-  /** Write `urls`' canon_url column, one file per bucket, into this
-    * commit's `seen` staging dir; returns the dir for the caller's
-    * `commit(appendPaths = "seen" -> …)`. Slices are disjoint (each epoch
-    * appends only URLs the anti-join found unseen), so no dedup is needed.
+  /** Stage `urls`' canon_url column, one file per bucket, into this
+    * commit's `seen` dir, for the caller's `commit(append = "seen" -> …)`.
+    * Slices are disjoint (each epoch appends only URLs the anti-join found
+    * unseen), so no dedup is needed.
     */
-  def appendSeen(urls: DataFrame): String = {
-    val dir = stagingDir("seen")
-    urls.select("canon_url").repartition(seenBuckets(latest()), col("canon_url"))
-      .write.mode("overwrite").parquet(dir)
-    suffixBuckets(dir)
-  }
+  def appendSeen(urls: DataFrame): Staged = suffixBuckets(stage("seen",
+    urls.select("canon_url").repartition(seenBuckets(latest()), col("canon_url"))))
 
   /** Fold the seen dirs `dirs` into one (compaction is file-count
     * management only: the set is unchanged). Staged under `seen_fold`, so
-    * it never shares a dir with the same commit's slice; returns the dir
-    * for the caller's `commit(replacePaths = "seen" -> …)`, after which
+    * it never shares a dir with the same commit's slice; the caller's
+    * `commit(replace = "seen" -> …)` names it, after which
     * expireUnreferenced deletes the folded dirs.
     */
-  def compactSeen(dirs: Seq[String]): String = {
-    val dir = stagingDir("seen_fold")
-    spark.read.schema(SeenSchema).parquet(dirs: _*)
-      .repartition(seenBuckets(latest()), col("canon_url"))
-      .write.mode("overwrite").parquet(dir)
-    suffixBuckets(dir)
-  }
+  def compactSeen(dirs: Seq[String]): Staged = suffixBuckets(stage("seen_fold",
+    read(SeenSchema, dirs).repartition(seenBuckets(latest()), col("canon_url"))))
 
   /** The bucket count a commit on top of `parent` records: the parent's,
     * or for the store's first commit the session's shuffle width.
@@ -263,14 +271,14 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     * the hash partition id IS the bucket id, and Spark reads it from the
     * name (`part-00007-<job>-c000_00007.snappy.parquet`).
     */
-  private def suffixBuckets(dir: String): String = {
-    fs.listStatus(new HPath(dir)).map(_.getPath)
+  private def suffixBuckets(s: Staged): Staged = {
+    fs.listStatus(new HPath(s.dir)).map(_.getPath)
       .filter(_.getName.startsWith("part-")).foreach { p =>
         val (stem, ext) = p.getName.splitAt(p.getName.indexOf('.'))
         val bucket = stem.stripPrefix("part-").takeWhile(_.isDigit)
         rename(p, new HPath(p.getParent, s"${stem}_$bucket$ext"))
       }
-    dir
+    s
   }
 
   /** The seen set of manifest `m`, as a bucketed scan of its files. */
@@ -294,25 +302,6 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
   // attempt leaves only orphan staging dirs the re-run clobbers)
 
   def pathExists(p: String): Boolean = fc.util.exists(new HPath(p))
-
-  /** Total bytes of regular files under `p` (recursive) — fold-cost
-    * accounting for the compaction counters (ops visibility: the CLI A/B
-    * that justifies a fold cadence reads these out of the manifest).
-    */
-  def pathBytes(p: String): Long = {
-    val hp = new HPath(p)
-    if (!fc.util.exists(hp)) 0L
-    else {
-      def walk(d: HPath): Long =
-        fc.util.listStatus(d).map { st =>
-          if (st.isDirectory) walk(st.getPath)
-          else if (st.getPath.getName.startsWith("_") ||
-            st.getPath.getName.startsWith(".")) 0L
-          else st.getLen
-        }.sum
-      walk(hp)
-    }
-  }
 
   def deletePath(p: String): Unit = {
     val hp = new HPath(p)
@@ -424,4 +413,20 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
 
 object SnapshotStore {
   private val SeenSchema = StructType(Seq(StructField("canon_url", StringType)))
+
+  /** One table write for a commit: its dir, the schema its files carry,
+    * and the rows and bytes the write produced.
+    */
+  final case class Staged(dir: String, schema: StructType, rows: Long, bytes: Long)
+
+  /** `t` as parquet reads it back: nullable throughout and without field
+    * metadata, so equal writes record equal schemas.
+    */
+  private def normalized(t: StructType): StructType = nullable(t).asInstanceOf[StructType]
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => StructField(f.name, nullable(f.dataType))))
+    case a: ArrayType => ArrayType(nullable(a.elementType))
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType))
+    case other => other
+  }
 }

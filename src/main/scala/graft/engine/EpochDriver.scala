@@ -6,6 +6,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ckpt.SnapshotStore
+import graft.ckpt.SnapshotStore.Staged
 import graft.fetch.FetchSim
 import graft.functions.Canon
 import graft.operators.{Bloom, Extract, NearDup, Sched, Seen, SegmentedBloom}
@@ -56,11 +57,6 @@ final class EpochDriver(
     bloomSegments: Int = 8,
     bloomBitsPerSegment: Int = 1 << 16,
     useBloom: Boolean = true,
-    // route the Bloom probe by segment (filterUnseenRouted) instead of
-    // broadcasting the merged filter — the ≥10^10.5-URL geometry where no
-    // merged array fits anywhere (BASELINE.md). Pure execution strategy:
-    // results are identical (EngineSpec), so not resume-guarded
-    bloomRouted: Boolean = false,
     // fold the seen table's slices every N epochs (0 = off); purely a
     // file-count/scan-cost optimization — set semantics are unchanged, so
     // it is NOT part of the resume-guarded config
@@ -190,11 +186,6 @@ final class EpochDriver(
   private val stagedRobots =
     new java.util.concurrent.atomic.AtomicReference[
       Option[Seq[(String, Long, Seq[String])]]](None)
-  // per-driver read-through cache of the committed robots table, keyed on
-  // the manifest's path list: the table is tiny but joined twice per epoch,
-  // and re-reading identical bytes every epoch would pay footer costs for
-  // nothing. Invalidation is exact — a robots replacement changes the paths
-  @volatile private var robotsCache: Option[(Seq[String], DataFrame)] = None
 
   /** Which source the last runEpoch scheduled from ("head" | "full") —
     * test/ops visibility for the head fast path.
@@ -238,21 +229,21 @@ final class EpochDriver(
 
   /** The one head decision every commit path takes, as a commit fragment:
     *  - REPLACE with `slice` (a freshly built or refreshed head, re-dated to
-    *    this epoch) when one was built and is non-empty;
+    *    this epoch, staged once) when its write produced rows;
     *  - KEEP the `standing` head's table and meta when nothing was built
     *    and the standing head is still meaningful;
-    *  - DROP head table + meta otherwise. A drained slice must not commit:
-    *    a row-less parquet dir breaks schema inference, and pending rows
-    *    may still exist below the original cut — later epochs take the
-    *    exact full-view path until a fold rebuilds the head.
-    * The slice is cached: the emptiness probe and the committed write both
-    * consume it, and uncached the per-host window would run twice.
+    *  - DROP head table + meta otherwise: pending rows may still exist
+    *    below the original cut of a drained slice, so later epochs take
+    *    the exact full-view path until a fold rebuilds the head (the
+    *    row-less staged dir stays unreferenced and expires).
     */
-  private def headCommit(c: Ctx, slice: Option[(DataFrame, HeadMeta)],
+  private def headCommit(slice: Option[(DataFrame, HeadMeta)],
       standing: Option[HeadMeta]): Commit =
-    slice.map { case (df, meta) => (c.keep(df), meta) } match {
-      case Some((df, meta)) if !df.isEmpty =>
-        Commit(replace = Map("frontier_head" -> df), counters = meta.counters)
+    slice.map { case (df, meta) =>
+      (store.stage("frontier_head", df.select(FrontierLog.Cols.map(col): _*)), meta)
+    } match {
+      case Some((head, meta)) if head.rows > 0 =>
+        Commit(replace = Map("frontier_head" -> Seq(head)), counters = meta.counters)
       case None if standing.isDefined => Commit(counters = standing.get.counters)
       case _ => Commit(drop = Set("frontier_head"))
     }
@@ -278,32 +269,27 @@ final class EpochDriver(
         lit(0).as("depth"), lit(1.0).as("score"),
         lit("pending").as("state"), lit(0).as("retry_count"),
         lit(0L).as("discovered_epoch"), lit(0L).as("seq"))
-    val seen = frontier.select("canon_url")
-    // the seed slice is staged like every epoch's: unreferenced (so
-    // invisible) until the init commit names it, overwritten on re-run
-    val seenDir = store.appendSeen(seen)
-    val nSeeds = frontier.count()
+    // the seed frontier is staged once and every other init table derives
+    // from the written bytes; like every staged dir it stays unreferenced
+    // (so invisible) until the init commit names it, overwritten on re-run
+    val base = store.stage("frontier_base", frontier, Some("state"))
+    val seen = store.read(base).select("canon_url")
+    val seenSlice = store.appendSeen(seen)
     // the head exists from epoch 0 (same slice a fold would build): the
     // first fold-cadence window of epochs schedules from O(hosts·K) rows
     // too, instead of scanning the full seed frontier until the first fold
     val cut = Sched.budgetCut(epochBudgetMs, floorMs)
     val meta = HeadMeta(0L, (compactFrontierEvery.toLong + 1L) * cut, cut)
-    val c = new Ctx(None) // init builds on no manifest; only its cache is used
-    try {
-      val head = headCommit(c,
-        if (scheduleFromHead && compactFrontierEvery > 0 && meta.k > 0)
-          Some((Sched.headSlice(frontier, meta.k), meta))
-        else None, None)
-      store.commit(0L,
-        replace = Map("frontier_base" -> frontier, "robots" -> robots) ++
-          head.replace,
-        append = Map(
-          "seen_bloom" -> Bloom.buildSegments(seen, "canon_url", bloomSegments, bloomBitsPerSegment)),
-        counters = cfg + ("seeds" -> nSeeds) + ("robots_floor_ms" -> floorMs) ++
-          head.counters,
-        partitionedBy = Map("frontier_base" -> "state"),
-        appendPaths = Map("seen" -> Seq(seenDir)))
-    } finally c.release()
+    val head = headCommit(
+      if (scheduleFromHead && compactFrontierEvery > 0 && meta.k > 0)
+        Some((Sched.headSlice(store.read(base), meta.k), meta))
+      else None, None)
+    val all = head ++ Commit(
+      replace = Map("frontier_base" -> Seq(base), "robots" -> Seq(store.stage("robots", robots))),
+      append = Map("seen" -> seenSlice, "seen_bloom" -> store.stage("seen_bloom",
+        Bloom.buildSegments(seen, "canon_url", bloomSegments, bloomBitsPerSegment))),
+      counters = cfg + ("seeds" -> base.rows) + ("robots_floor_ms" -> floorMs))
+    store.commit(0L, all.replace, all.append, all.counters)
     ()
   }
 
@@ -321,13 +307,12 @@ final class EpochDriver(
     }
   }
 
-  /** One epoch's inputs (`m` = the manifest it builds on; None at init),
-    * plus the caches and Bloom broadcast it holds — released in
-    * runEpoch's finally block so a failed commit (retried by the caller)
-    * cannot leak them, and so filter blobs never accumulate across epochs.
+  /** One epoch's inputs (`m` = the manifest it builds on), plus the caches
+    * and Bloom broadcast it holds — released in runEpoch's finally block
+    * so a failed commit (retried by the caller) cannot leak them, and so
+    * filter blobs never accumulate across epochs.
     */
-  private final class Ctx(parent: Option[store.Manifest]) {
-    def m: store.Manifest = parent.get
+  private final class Ctx(val m: store.Manifest) {
     def epoch: Long = m.epoch + 1
     private val held = ArrayBuffer.empty[DataFrame]
     var bloom: Option[Broadcast[SegmentedBloom]] = None
@@ -339,13 +324,13 @@ final class EpochDriver(
   def runEpoch(): Map[String, Long] = {
     val m = store.latest().getOrElse(sys.error("store not initialized"))
     requireCfgMatch(m.counters)
-    val c = new Ctx(Some(m))
+    val c = new Ctx(m)
     val staged = stagedRobots.get()
     try {
       val (robotsDf, floorMs, robotsCommit) = robotsInEffect(m, staged)
       val cut = Sched.budgetCut(epochBudgetMs, floorMs)
       val (ranked, deltaAll) = schedule(c, robotsDf, floorMs, cut)
-      val (fetchDir, fetched, okDocs) = fetch(c, ranked)
+      val (fetchResult, fetched, okDocs) = fetch(c, ranked)
       val (candDepth, nDiscovered) = extract(c, okDocs, robotsDf)
       val fresh = dedup(c, candDepth)
       val (transitions, nFetched, nErrors) = outcomes(ranked, fetched)
@@ -367,12 +352,11 @@ final class EpochDriver(
       val update = frontierUpdate(c, cut, transitions, fresh, deltaAll,
         nFetched + nErrors + nEmitted)
       // ---- the ONE epoch commit: every layer's fragment, all-or-nothing
-      val all = Commit(append = Map("metrics" -> metricsDf),
-        appendPaths = Map("fetch_result" -> Seq(fetchDir)),
+      val all = Commit(append = Map("metrics" -> store.stage("metrics", metricsDf),
+          "fetch_result" -> fetchResult),
         counters = cfg ++ counters) ++ robotsCommit ++ nd ++ md ++ seen ++ update
       val mEpoch = store.commit(c.epoch, all.replace, all.append, all.counters,
-        appendPaths = all.appendPaths, replacePaths = all.replacePaths,
-        drop = all.drop)
+        all.drop)
       consolidate(mEpoch)
       // the staged robots rows are durable in this epoch's snapshot now; a
       // failed commit leaves them staged so the retry still applies them.
@@ -395,14 +379,10 @@ final class EpochDriver(
     val (df, floorMs, replace) = staged match {
       case Some(rows) =>
         val df = Sched.robotsDf(spark, rows)
-        (df, floorOf(rows), Map("robots" -> df))
+        (df, floorOf(rows), Map("robots" -> Seq(store.stage("robots", df))))
       case None =>
-        val paths = m.tables("robots")
-        val df = robotsCache.collect { case (p, d) if p == paths => d }.getOrElse {
-          val d = store.readTable(m, "robots").get
-          robotsCache = Some((paths, d)); d
-        }
-        (df, m.counters("robots_floor_ms"), Map.empty[String, DataFrame])
+        (store.readTable(m, "robots").get, m.counters("robots_floor_ms"),
+          Map.empty[String, Seq[Staged]])
     }
     (df, floorMs, Commit(replace = replace,
       counters = Map("robots_floor_ms" -> floorMs)))
@@ -423,8 +403,8 @@ final class EpochDriver(
     * pending frontier; when stale or absent it falls back to the full
     * merge-on-read view. Both sources contain the true per-host top-cut,
     * so the window + budget cut yield identical batches. The check reads
-    * counters first and the table last: a permanently stale head must not
-    * pay a parquet schema read per epoch just to be discarded. `head_cut`
+    * counters first and the table last: a permanently stale head is
+    * discarded without listing its dir. `head_cut`
     * is the budget cut the head was built under: per-host consumption
     * bounds computed under one cut are meaningless under another, so any
     * cut change invalidates the head until the next fold rebuilds it.
@@ -454,20 +434,18 @@ final class EpochDriver(
   }
 
   /** ---- fetch (S1) — salted partitions, partition-local lineage. The
-    * full fetch output is made durable FIRST (the dir this commit will
+    * full fetch output is staged FIRST (the dir this commit will
     * reference; a crash re-runs the deterministic fetch over the same
     * batch into the same dir), then every consumer reads it column-pruned
-    * — transitions/counters never deserialize the spans. Returns the dir,
-    * the fetch table and its ok documents.
+    * — transitions/counters never deserialize the spans. Returns the
+    * staged write, the fetch table and its ok documents.
     */
-  private def fetch(c: Ctx, ranked: DataFrame): (String, DataFrame, DataFrame) = {
+  private def fetch(c: Ctx, ranked: DataFrame): (Staged, DataFrame, DataFrame) = {
     val batch = Sched.fetchBatch(ranked, c.epoch, saltBuckets,
       spark.sparkContext.defaultParallelism)
-    val dir = store.stagingDir("fetch_result")
-    val fetchedDs = FetchSim.run(batch, seed, nHosts).toDF()
-    fetchedDs.write.mode("overwrite").parquet(dir)
-    val fetched = spark.read.schema(fetchedDs.schema).parquet(dir)
-    (dir, fetched, fetched.filter(col("status") === "ok")
+    val staged = store.stage("fetch_result", FetchSim.run(batch, seed, nHosts).toDF())
+    val fetched = store.read(staged)
+    (staged, fetched, fetched.filter(col("status") === "ok")
       .select(col("canon_url").as("doc_id"), col("depth"), col("spans")))
   }
 
@@ -494,19 +472,12 @@ final class EpochDriver(
     * appended to seen and to the delta).
     */
   private def dedup(c: Ctx, candDepth: DataFrame): DataFrame = {
-    val seen = store.readSeen(c.m)
-    val segTable = if (useBloom) store.readTable(c.m, "seen_bloom") else None
     c.bloom =
-      if (bloomRouted) None
-      else segTable.map(df =>
+      if (useBloom) store.readTable(c.m, "seen_bloom").map(df =>
         Seen.broadcastSegments(spark,
           Bloom.mergedSegments(df, bloomSegments, bloomBitsPerSegment)))
-    val unseen = segTable match {
-      case Some(segs) if bloomRouted =>
-        Seen.filterUnseenRouted(candDepth, "canon_url", seen, segs, bloomSegments)
-      case _ => Seen.filterUnseen(candDepth, "canon_url", seen, c.bloom)
-    }
-    c.keep(unseen
+      else None
+    c.keep(Seen.filterUnseen(candDepth, "canon_url", store.readSeen(c.m), c.bloom)
       .withColumn("score", lit(1.0) / (lit(1.0) + col("depth")))
       .withColumn("state", lit("pending"))
       .withColumn("retry_count", lit(0))
@@ -568,19 +539,6 @@ final class EpochDriver(
         tag = s"e${c.epoch}", bridgeUrl = sinkBridge)
     }
 
-  /** Write `df` once into `table`'s staging dir and count it from the
-    * written footers (the fetch_result pattern: a separate count() action
-    * would execute the plan twice; a crash re-runs the deterministic plan
-    * into the same dir). A row-less dir is deleted — parquet cannot
-    * schema-infer it — and reported as None.
-    */
-  private def stage(table: String, df: DataFrame): Option[(String, Long)] = {
-    val dir = store.stagingDir(table)
-    df.write.mode("overwrite").parquet(dir)
-    val n = spark.read.parquet(dir).count()
-    if (n == 0) { store.deletePath(dir); None } else Some((dir, n))
-  }
-
   /** ---- incremental near-dup over the epoch's fetched documents (the
     * q49 steady-state shape as an ENGINE stage): each ok doc's text comes
     * from its own spans in offset order (a per-row projection — a
@@ -597,36 +555,28 @@ final class EpochDriver(
     * from one manifest would reset the cumulative count (and the derived
     * banding geometry) on the next.
     */
-  private def nearDup(c: Ctx, okDocs: DataFrame, nFetched: Long): Commit = {
-    val simDocs = c.m.counters.getOrElse("sim_docs", 0L) + nFetched
+  private def nearDup(c: Ctx, okDocs: DataFrame, nFetched: Long): Commit =
     if (!nearDupDocs) Commit()
-    else if (nFetched == 0)
-      Commit(counters = Map("sim_docs" -> simDocs, "neardup_pairs" -> 0L))
     else {
+      val simDocs = c.m.counters.getOrElse("sim_docs", 0L) + nFetched
       // TOTAL over the batch: one signature per fetched doc (a doc with no
       // text signs 0), so the sim_docs counter and the corpus_sim row count
-      // stay equal BY CONSTRUCTION. Written once into this commit's
-      // corpus_sim dir and probed as a file scan (see incrementalFromSimhash
-      // for why not a cache)
-      val simDir = store.stagingDir("corpus_sim")
-      val sig = NearDup.simhashTotal(
+      // stay equal BY CONSTRUCTION. Staged into this commit's corpus_sim
+      // dir and probed as a file scan (see incrementalFromSimhash for why
+      // not a cache) against the committed corpus dirs, none on the first
+      // epoch
+      val sim = store.stage("corpus_sim", NearDup.simhashTotal(
         okDocs.select(col("doc_id"), NearDup.spansText(col("spans")).as("text")),
-        NearDup.XxHashBits, NearDup.xxTokenHash)
-      sig.coalesce(filesFor(nFetched)).write.mode("overwrite").parquet(simDir)
-      val simNew = spark.read.schema(sig.schema).parquet(simDir)
+        NearDup.XxHashBits, NearDup.xxTokenHash).coalesce(filesFor(nFetched)))
       val blocks = graft.functions.Banding.blocksFor(simDocs,
         hashBits = NearDup.XxHashBits)
-      val corpus = store.readTable(c.m, "corpus_sim")
-        .fold(simNew.limit(0))(_.select("doc_id", "simhash"))
-      val pairs = stage("neardup_pairs", NearDup.incrementalFromSimhash(
-          simNew, corpus, blocks, NearDup.XxHashBits)
+      val pairs = store.stage("neardup_pairs", NearDup.incrementalFromSimhash(
+          store.read(sim), store.read(sim.schema, c.m.tables.getOrElse("corpus_sim", Nil)),
+          blocks, NearDup.XxHashBits)
         .withColumn("epoch", lit(c.epoch)))
-      Commit(appendPaths = Map("corpus_sim" -> Seq(simDir)) ++
-          pairs.map(p => "neardup_pairs" -> Seq(p._1)),
-        counters = Map("sim_docs" -> simDocs,
-          "neardup_pairs" -> pairs.fold(0L)(_._2)))
+      Commit(append = Map("corpus_sim" -> sim, "neardup_pairs" -> pairs),
+        counters = Map("sim_docs" -> simDocs, "neardup_pairs" -> pairs.rows))
     }
-  }
 
   /** ---- media feature extraction over the epoch's fetched documents (the
     * media half of the interleaved corpus, mirroring the near-dup stage's
@@ -640,40 +590,38 @@ final class EpochDriver(
   private def media(c: Ctx, okDocs: DataFrame, nFetched: Long): Commit =
     if (!mediaDocs) Commit()
     else {
-      val written = if (nFetched == 0) None else {
-        val refs = okDocs
-          .select(col("doc_id"), explode(col("spans")).as("span"))
-          .filter(col("span.kind") === "media" && col("span.media_ref") =!= "")
-          .select(col("doc_id"), col("span.media_ref").as("media_ref"),
-            col("span.offset").as("offset"))
-        val theSeed = seed
-        val feats = refs.as[(String, String, Int)].mapPartitions { it =>
-          // partition-local codec init (the extractFeatures posture)
-          java.lang.System.setProperty("java.awt.headless", "true")
-          javax.imageio.ImageIO.setUseCache(false)
-          it.map { case (doc, ref, off) =>
-            val payload = graft.fetch.MediaFetchSim.fetchBytes(ref, theSeed)
-            // shared decode-or-stub posture (incl. header-dims recovery
-            // for undecodable-but-headered bytes) — one implementation,
-            // so this stage and extractFeatures can never drift
-            val (w, h, emb, _) =
-              graft.operators.Multimodal.imageFeatures(payload)
-            (doc, ref, off, w, h, payload.length, emb)
-          }
-        }.toDF("doc_id", "media_ref", "offset", "width", "height",
-          "n_bytes", "embedding")
-        // repartition AFTER the decode, never coalesce: coalesce is
-        // narrow, so it would collapse the uncached synth+decode map
-        // itself to the output file count — at small batches ONE task
-        // doing every JPEG round-trip (measured: +51 s/6-epoch run).
-        // The shuffle moves only feature rows (~hundreds of bytes each);
-        // file sizing tracks the fetched-doc count (spans/doc is a
-        // small corpus constant, so ~1M-row files up to that factor)
-        stage("media_features", feats.repartition(filesFor(nFetched)))
-      }
-      Commit(appendPaths = written.map(w => "media_features" -> Seq(w._1)).toMap,
-        counters = Map("media_rows" -> (c.m.counters.getOrElse("media_rows", 0L) +
-          written.fold(0L)(_._2))))
+      val refs = okDocs
+        .select(col("doc_id"), explode(col("spans")).as("span"))
+        .filter(col("span.kind") === "media" && col("span.media_ref") =!= "")
+        .select(col("doc_id"), col("span.media_ref").as("media_ref"),
+          col("span.offset").as("offset"))
+      val theSeed = seed
+      val feats = refs.as[(String, String, Int)].mapPartitions { it =>
+        // partition-local codec init (the extractFeatures posture)
+        java.lang.System.setProperty("java.awt.headless", "true")
+        javax.imageio.ImageIO.setUseCache(false)
+        it.map { case (doc, ref, off) =>
+          val payload = graft.fetch.MediaFetchSim.fetchBytes(ref, theSeed)
+          // shared decode-or-stub posture (incl. header-dims recovery
+          // for undecodable-but-headered bytes) — one implementation,
+          // so this stage and extractFeatures can never drift
+          val (w, h, emb, _) =
+            graft.operators.Multimodal.imageFeatures(payload)
+          (doc, ref, off, w, h, payload.length, emb)
+        }
+      }.toDF("doc_id", "media_ref", "offset", "width", "height",
+        "n_bytes", "embedding")
+      // repartition AFTER the decode, never coalesce: coalesce is
+      // narrow, so it would collapse the uncached synth+decode map
+      // itself to the output file count — at small batches ONE task
+      // doing every JPEG round-trip (measured: +51 s/6-epoch run).
+      // The shuffle moves only feature rows (~hundreds of bytes each);
+      // file sizing tracks the fetched-doc count (spans/doc is a
+      // small corpus constant, so ~1M-row files up to that factor)
+      val written = store.stage("media_features", feats.repartition(filesFor(nFetched)))
+      Commit(append = Map("media_features" -> written),
+        counters = Map("media_rows" ->
+          (c.m.counters.getOrElse("media_rows", 0L) + written.rows)))
     }
 
   /** ---- seen: the epoch's fresh URLs as a bucketed slice (see
@@ -687,20 +635,18 @@ final class EpochDriver(
     */
   private def seenUpdate(c: Ctx, fresh: DataFrame): Commit = {
     val slice = store.appendSeen(fresh)
-    val dirs = c.m.tables.getOrElse("seen", Nil) :+ slice
+    val gens = store.committed(c.m, "seen") :+ slice
     if (compactSeenEvery > 0 && c.epoch % compactSeenEvery == 0) {
-      val window = if (dirs.size >= EpochDriver.SeenFullFoldPartitions)
-        dirs.size else compactSeenEvery
-      val (older, folded) = dirs.splitAt(dirs.size - window)
-      Commit(replacePaths = Map("seen" -> (older :+ store.compactSeen(folded))))
-    } else Commit(appendPaths = Map("seen" -> Seq(slice)))
+      val window = if (gens.size >= EpochDriver.SeenFullFoldPartitions)
+        gens.size else compactSeenEvery
+      val (older, folded) = gens.splitAt(gens.size - window)
+      Commit(replace = Map("seen" -> (older :+ store.compactSeen(folded.map(_.dir)))))
+    } else Commit(append = Map("seen" -> slice))
   }
 
   /** ---- frontier update: the seen set's Bloom segments and the
     * frontier delta, committed as one of three shapes:
-    *  - PLAIN: append the delta (an all-empty epoch appends none: an empty
-    *    parquet dir at the head of the delta list would break schema
-    *    inference on read);
+    *  - PLAIN: append the delta (zero rows in an all-empty epoch);
     *  - MINOR fold: resolve the delta LOG into one run and refresh the head;
     *  - MAJOR fold: rewrite the base, archive its terminals, rebuild the
     *    head, fold the Bloom log, drop the delta log.
@@ -716,13 +662,11 @@ final class EpochDriver(
     val (m, epoch) = (c.m, c.epoch)
     val bloomNew = Bloom.buildSegments(fresh.select("canon_url"),
       "canon_url", bloomSegments, bloomBitsPerSegment)
-    // deltas are plain parquet (state as a data column): appended dirs
-    // are read as one multi-root table, where hive-style partition
-    // inference would reject the multiple roots
+    // deltas are plain parquet (state as a data column): a fold resolves
+    // the log by key, and no delta read prunes by state
     val deltaDf = transitions.unionByName(fresh)
       .withColumn("seq", lit(epoch))
       .repartition(filesFor(deltaRows))
-    val emptyDelta = deltaRows == 0
     val foldBytes = m.counters.view.filterKeys(k =>
       k == "fold_base_bytes" || k == "fold_delta_bytes").toMap
     // delta_rows: upper bound on the delta table's rows, carried for
@@ -741,11 +685,9 @@ final class EpochDriver(
     // of more than one run (an empty epoch over an already-folded single
     // run would rewrite identical bytes)
     val minorFold = compactDeltaEvery > 0 && epoch % compactDeltaEvery == 0 &&
-      (!emptyDelta || m.tables.get("frontier_delta").exists(_.size > 1))
+      (deltaRows > 0 || m.tables.get("frontier_delta").exists(_.size > 1))
     if (compactFrontierEvery > 0 && epoch % compactFrontierEvery == 0) {
-      val folded = FrontierLog.resolve(
-        if (emptyDelta) frontierAll(m) else frontierAll(m).unionByName(deltaDf))
-      // stage the fold once (state-partitioned, same dir the commit
+      // stage the fold once (state-partitioned, the dir the commit
       // names), then derive the HEAD from the written bytes — the
       // top-(R+1)*cut rows per host, the only rows the next R epochs of
       // scheduling can possibly touch. Building it here rides the fold's
@@ -753,28 +695,26 @@ final class EpochDriver(
       // slice every R epochs buys every in-between epoch a head-sized
       // scheduler read. The base rewrite + dropped delta log invalidate
       // any older head, so nothing stands when none is built
-      val foldDir = store.stagingDir("frontier_base")
-      folded.write.mode("overwrite").partitionBy("state").parquet(foldDir)
-      // bytes this major fold REWROTE (measured before terminals rename
+      val base = store.stage("frontier_base",
+        FrontierLog.resolve(frontierAll(m).unionByName(deltaDf)), Some("state"))
+      // bytes this major fold REWROTE (the write, before terminals rename
       // out: the write cost was paid for them too)
-      val baseBytes = m.counters.getOrElse("fold_base_bytes", 0L) +
-        store.pathBytes(foldDir)
-      val archived = archiveTerminals(foldDir)
+      val baseBytes = m.counters.getOrElse("fold_base_bytes", 0L) + base.bytes
+      val archived = archiveTerminals(base)
       val meta = HeadMeta(epoch, (compactFrontierEvery.toLong + 1L) * cut, cut)
       val slice = if (!scheduleFromHead) None else Some((Sched.headSlice(
-        spark.read.parquet(foldDir).filter(col("state") === "pending"),
-        meta.k), meta))
+        store.read(base).filter(col("state") === "pending"), meta.k), meta))
       // the Bloom blob log folds here too: OR-merge every appended
       // (epoch, segment) row plus this epoch's into one row per segment,
       // so the per-epoch filter read merges O(segments + R) blobs, not
       // O(epochs × segments) — OR is associative, so bit-identical
-      val bloomFolded = Bloom.foldSegments(store.readTable(m, "seen_bloom")
-        .fold(bloomNew)(_.select("segment_id", "bloom").unionByName(bloomNew)))
-      Commit(replace = Map("seen_bloom" -> bloomFolded),
-        replacePaths = Map("frontier_base" -> Seq(foldDir)),
-        appendPaths = archived,
+      val bloomFolded = store.stage("seen_bloom", Bloom.foldSegments(
+        store.readTable(m, "seen_bloom").get.unionByName(bloomNew)))
+      Commit(replace = Map("seen_bloom" -> Seq(bloomFolded),
+          "frontier_base" -> Seq(base)),
+        append = archived,
         counters = foldBytes + ("fold_base_bytes" -> baseBytes),
-        drop = Set("frontier_delta")) ++ headCommit(c, slice, None)
+        drop = Set("frontier_delta")) ++ headCommit(slice, None)
     } else if (minorFold) {
       // ---- MINOR fold: resolve the delta LOG into one run (latest row
       // per key — view-identical, the same resolution the major fold
@@ -783,13 +723,10 @@ final class EpochDriver(
       // rewrite cadence stretch while the delta list and the scheduler
       // head stay compact. The prior log is deltaAll, already read ONCE
       // for this epoch's schedule
-      val allDelta = deltaAll.fold(deltaDf)(p =>
-        if (emptyDelta) p else p.unionByName(deltaDf))
-      val runDir = store.stagingDir("frontier_delta")
-      FrontierLog.resolve(allDelta).repartition(filesFor(deltaRowsBound))
-        .write.mode("overwrite").parquet(runDir)
-      val deltaBytes = m.counters.getOrElse("fold_delta_bytes", 0L) +
-        store.pathBytes(runDir)
+      val allDelta = deltaAll.fold(deltaDf)(_.unionByName(deltaDf))
+      val run = store.stage("frontier_delta",
+        FrontierLog.resolve(allDelta).repartition(filesFor(deltaRowsBound)))
+      val deltaBytes = m.counters.getOrElse("fold_delta_bytes", 0L) + run.bytes
       // Head refresh: head' = top-K' per host of pending(head ∪ delta),
       // K' = hk − (epoch − he)·cut (the budget not yet consumable since
       // the head was built). Exactness: the head at `he` contained the
@@ -815,15 +752,15 @@ final class EpochDriver(
       } yield (Sched.headSlice(FrontierLog.pendingResolved(df,
         Some(allDelta.filter(col("seq") > h.epoch))), kRem),
         HeadMeta(epoch, kRem, cut))
-      Commit(replacePaths = Map("frontier_delta" -> Seq(runDir)),
-        append = Map("seen_bloom" -> bloomNew),
+      Commit(replace = Map("frontier_delta" -> Seq(run)),
+        append = Map("seen_bloom" -> store.stage("seen_bloom", bloomNew)),
         counters = foldBytes + ("fold_delta_bytes" -> deltaBytes) +
-          ("delta_rows" -> deltaRowsBound)) ++ headCommit(c, slice, standing)
+          ("delta_rows" -> deltaRowsBound)) ++ headCommit(slice, standing)
     } else
-      Commit(append = Map("seen_bloom" -> bloomNew) ++
-          (if (emptyDelta) Map.empty else Map("frontier_delta" -> deltaDf)),
+      Commit(append = Map("seen_bloom" -> store.stage("seen_bloom", bloomNew),
+          "frontier_delta" -> store.stage("frontier_delta", deltaDf)),
         counters = foldBytes + ("delta_rows" -> deltaRowsBound)) ++
-        headCommit(c, None, standing)
+        headCommit(None, standing)
   }
 
   /** ---- archive-by-rename: fetched/failed are ABSORBING (a URL enters the
@@ -834,21 +771,20 @@ final class EpochDriver(
     * argument as every staged write — into the append-only
     * frontier_archive table instead of carrying them through every later
     * fold: fold I/O is O(pending wavefront + delta window), independent of
-    * crawl AGE. A draining fold (no pending rows left) keeps the terminals
-    * in the base, so the committed dir is never a row-less parquet root
-    * that later reads cannot schema-infer. Returns the appendPaths entry.
+    * crawl AGE. A draining fold (no pending rows left) archives them too
+    * and commits a row-less base. Returns the append entry, if any rows
+    * moved.
     */
-  private def archiveTerminals(foldDir: String): Map[String, Seq[String]] =
-    if (!store.pathExists(s"$foldDir/state=pending")) Map.empty
-    else {
-      val arch = store.stagingDir("frontier_archive")
-      store.deletePath(arch) // clobber a crashed attempt's orphan
-      val moved = Seq("fetched", "failed")
-        .filter(st => store.pathExists(s"$foldDir/state=$st"))
-      moved.foreach(st =>
-        store.movePath(s"$foldDir/state=$st", s"$arch/state=$st"))
-      if (moved.isEmpty) Map.empty else Map("frontier_archive" -> Seq(arch))
-    }
+  private def archiveTerminals(base: Staged): Map[String, Staged] = {
+    val arch = store.stagingDir("frontier_archive")
+    store.deletePath(arch) // clobber a crashed attempt's orphan
+    val moved = Seq("fetched", "failed")
+      .filter(st => store.pathExists(s"${base.dir}/state=$st"))
+    moved.foreach(st =>
+      store.movePath(s"${base.dir}/state=$st", s"$arch/state=$st"))
+    if (moved.isEmpty) Map.empty
+    else Map("frontier_archive" -> Staged(arch, base.schema, 0L, 0L))
+  }
 
   /** ---- append-root consolidation: ONE pass over every append-rooted
     * table (frontier_archive with its state= subdirs, corpus_sim,
@@ -883,12 +819,12 @@ final class EpochDriver(
           subdirs.foreach(sub => store.moveFilesInto(s"$root$sub",
             s"${roots.head}$sub", s"r$i-"))
         }
-        Some(t -> Seq(roots.head))
+        Some(t -> store.committed(mEpoch, t).take(1))
       }
     }
     if (swaps.nonEmpty)
-      store.commit(mEpoch.epoch, replace = Map.empty, append = Map.empty,
-        counters = mEpoch.counters, replacePaths = swaps.toMap)
+      store.commit(mEpoch.epoch, replace = swaps.toMap, append = Map.empty,
+        counters = mEpoch.counters)
   }
 
   /** Run epochs until `maxEpochs` or an empty batch (exhausted frontier). */
@@ -909,29 +845,19 @@ final class EpochDriver(
     out.toSeq
   }
 
-  /** Append-only terminal-history archive (fetched/failed rows renamed out
-    * of the fold window — see archiveTerminals). Read per-root and
-    * unioned: each archived dir carries hive-style `state=` partition
-    * subdirs, and multi-root parquet reads reject hive inference. NOTHING
-    * on the epoch path reads the archive; only this full-history view does.
-    */
-  private def archive(m: store.Manifest): Option[DataFrame] =
-    m.tables.get("frontier_archive")
-      // a crash between a consolidation pass's renames and its swap commit
-      // leaves a fully-drained root still referenced; reading it per-root
-      // would fail schema inference on a file-less directory
-      .map(_.filter(store.hasDataFiles)).filter(_.nonEmpty).map(_.map(p =>
-        spark.read.parquet(p).select(FrontierLog.Cols.map(col): _*))
-      .reduce(_.unionByName(_)))
-
   // ---- readers used by tests/metrics (merge-on-read views)
   def frontier(): DataFrame = {
     val m = store.latest().get
-    // archive keys are disjoint from the live window (terminal states are
+    // the append-only terminal-history archive (see archiveTerminals):
+    // its keys are disjoint from the live window (terminal states are
     // absorbing and a URL enters the frontier once), so the union needs no
-    // resolve over the archive — the view stays O(live) in shuffle work
+    // resolve over the archive — the view stays O(live) in shuffle work.
+    // NOTHING on the epoch path reads the archive; only this view does. A
+    // root a crashed consolidation pass drained before its swap commit
+    // reads as an empty dir
     val live = FrontierLog.resolve(frontierAll(m))
-    archive(m).map(live.unionByName(_)).getOrElse(live).drop("seq")
+    store.readTable(m, "frontier_archive").fold(live)(live.unionByName(_))
+      .drop("seq")
   }
   def seenSet(): DataFrame = store.readSeen(store.latest().get)
   def fetchLog(): Option[DataFrame] =
@@ -947,15 +873,16 @@ final class EpochDriver(
 }
 
 object EpochDriver {
-  /** Version of the snapshot-store table layout: 4 = log-structured
+  /** Version of the snapshot-store table layout: 5 = log-structured
     * frontier (frontier_base + frontier_delta, FrontierLog) + single
     * fetch_result lineage table + the seen set as the manifest table
     * `seen`, hash-bucketed by the count its manifest records
-    * (`seen_buckets`, the creating session's shuffle width). 3 used a
-    * fixed 32 buckets and no recorded count; 2 kept the seen set in a
-    * catalog table. Resume refuses any other layout.
+    * (`seen_buckets`, the creating session's shuffle width) + every
+    * table's schema in the manifest (`schemas`). 4 recorded no schemas;
+    * 3 used a fixed 32 buckets and no recorded count; 2 kept the seen set
+    * in a catalog table. Resume refuses any other layout.
     */
-  val StoreLayoutVersion = 4L
+  val StoreLayoutVersion = 5L
 
   /** Seen dir count at which the per-cadence generational fold escalates
     * to a full fold. Bounds the per-epoch bucketed-scan overhead at
@@ -984,19 +911,16 @@ object EpochDriver {
       Map("head_epoch" -> epoch, "head_k" -> k, "head_cut" -> cut)
   }
 
-  /** One commit's content, as SnapshotStore.commit takes it. Every epoch
-    * layer returns a fragment; `++` merges them (keys are disjoint across
-    * layers, except carried counters a later fragment updates).
+  /** One commit's staged content, as SnapshotStore.commit takes it. Every
+    * epoch layer returns a fragment; `++` merges them (keys are disjoint
+    * across layers, except carried counters a later fragment updates).
     */
   private final case class Commit(
-      replace: Map[String, DataFrame] = Map.empty,
-      replacePaths: Map[String, Seq[String]] = Map.empty,
-      append: Map[String, DataFrame] = Map.empty,
-      appendPaths: Map[String, Seq[String]] = Map.empty,
+      replace: Map[String, Seq[Staged]] = Map.empty,
+      append: Map[String, Staged] = Map.empty,
       counters: Map[String, Long] = Map.empty,
       drop: Set[String] = Set.empty) {
     def ++(o: Commit): Commit = Commit(replace ++ o.replace,
-      replacePaths ++ o.replacePaths, append ++ o.append,
-      appendPaths ++ o.appendPaths, counters ++ o.counters, drop ++ o.drop)
+      append ++ o.append, counters ++ o.counters, drop ++ o.drop)
   }
 }

@@ -172,10 +172,11 @@ object Bloom {
     * BASELINE.md): 10 bits/URL ≈ 12.5 GB of filter across, say, 1024
     * segments (~12 MB each). Driver transient footprint is the final 12.5
     * GB ONCE (vs E× that before); the subsequent torrent broadcast ships
-    * each executor one copy. Past ~executor-memory/3 the next step is
-    * segment-routed probing (co-partition candidates by segment_id and open
-    * only the local segment per partition) — same table layout, no merged
-    * broadcast at all.
+    * each executor one copy. Past ~executor-memory/3 the next step would
+    * be segment-routed probing (co-partition candidates by segment_id and
+    * open only the local segment per partition) — same table layout, no
+    * merged broadcast at all; a routed probe built earlier lost to the
+    * broadcast at every geometry a 15 GB box fits, so none is kept.
     */
   def mergedSegments(segDf: DataFrame, segments: Int, mBits: Int, k: Int = 5): Array[Filter] = {
     val spark = segDf.sparkSession
@@ -254,9 +255,8 @@ object Seen {
     * budgets for, at the bench geometry and at 10^10 URLs alike (P is the
     * store's bucket count, recorded at its first commit from the creating
     * session's shuffle width, so a store created on a cluster-sized session
-    * gets cluster-sized buckets; the routed path below takes over past the
-    * broadcast ceiling). Anti/outer semantics and results are identical
-    * either way.
+    * gets cluster-sized buckets). Anti/outer semantics and results are
+    * identical either way.
     */
   def filterUnseen(candidates: DataFrame, urlCol: String, seen: DataFrame,
       bloom: Option[org.apache.spark.broadcast.Broadcast[SegmentedBloom]]): DataFrame =
@@ -282,52 +282,4 @@ object Seen {
           .filter(col("_in_seen").isNull)
           .drop("_seen_url", "_in_seen")
     }
-
-  /** Segment-ROUTED Bloom probe — the scale path past the broadcast's
-    * ceiling (BASELINE.md geometry: ≳10^10.5 URLs at 10 bits/URL the
-    * merged filter is ≳30-60 GB and must stop shipping to every executor).
-    * No merged array exists ANYWHERE here: candidates are co-grouped with
-    * the per-segment blobs on segment_id (the same md5-prefix hash that
-    * routes the build), so each task deserializes exactly ONE segment and
-    * streams its candidate urls through it. Bloom-positive ("maybe seen")
-    * urls then RESTRICT the seen side of the exact anti-join via
-    * left_semi — the 10^10-row seen table shrinks to ~|maybe| rows before
-    * the anti-join runs, and the bucketed seen scan means that semi join
-    * shuffles only the (small) maybe set.
-    *
-    * Exactness: identical to the broadcast path and to a plain anti-join —
-    * a "definitely new" url cannot be in the seen set (no false
-    * negatives, BloomSpec), so dropping it from the seen restriction
-    * never loses a match; a segment with no blob (never built) treats all
-    * its urls as "maybe", which only costs, never corrupts.
-    */
-  def filterUnseenRouted(candidates: DataFrame, urlCol: String,
-      seen: DataFrame, segDf: DataFrame, segments: Int): DataFrame = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    // one shuffle of the epoch×segment blobs, OR-merged INSIDE the cogroup
-    // function: a reduceGroups pre-merge would shuffle the merged blobs a
-    // second time just to co-partition them with the candidates — at the
-    // 10^10-URL geometry that second pass moves the full ~multi-GB filter
-    // set again for no benefit
-    val blobs = segDf.select(col("segment_id"), col("bloom"))
-      .as[(Long, Array[Byte])]
-      .groupByKey(_._1)
-    val urls = candidates.select(col(urlCol)).distinct().as[String]
-      .groupByKey(u =>
-        graft.functions.CanonJvm.md5Long(u) % segments.toLong)
-    val maybe = urls.cogroup(blobs) { (_, us, bs) =>
-      bs.map(_._2).reduceOption(Bloom.orBlobs)
-        .map(Bloom.Filter.deserialize) match {
-        case Some(f) => us.filter(f.mightContain)
-        case None => us
-      }
-    }.toDF(urlCol)
-    val seenMaybe = seen
-      .join(maybe.withColumnRenamed(urlCol, "canon_url"),
-        Seq("canon_url"), "left_semi")
-    candidates.join(
-      seenMaybe.withColumnRenamed("canon_url", urlCol).select(urlCol),
-      Seq(urlCol), "left_anti")
-  }
 }

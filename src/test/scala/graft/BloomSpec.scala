@@ -84,17 +84,14 @@ class BloomSpec extends SparkSpecBase {
     }
   }
 
-  test("segment-routed probe equals exact anti-join and the broadcast path") {
+  test("broadcast probe over a multi-epoch segment log equals the exact anti-join") {
     import spark.implicits._
     val seen = (0 until 500).map(i => s"https://h${i % 7}.com/p/$i").toDF("canon_url")
     val cand = (250 until 750).map(i => s"https://h${i % 7}.com/p/$i").toDF("canon_url")
-    // two epoch appends — the routed path must OR-merge per segment itself
+    // two epoch appends — the merge must OR them per segment
     val segDf = Seq(
       Bloom.buildSegments(seen.limit(300), "canon_url", 4, m, k),
       Bloom.buildSegments(seen, "canon_url", 4, m, k)).reduce(_ unionAll _)
-    val routed = graft.operators.Seen
-      .filterUnseenRouted(cand, "canon_url", seen, segDf, 4)
-      .collect().map(_.getString(0)).toSet
     val exact = graft.operators.Seen
       .filterUnseen(cand, "canon_url", seen, None)
       .collect().map(_.getString(0)).toSet
@@ -104,7 +101,6 @@ class BloomSpec extends SparkSpecBase {
       .filterUnseen(cand, "canon_url", seen, Some(bc))
       .collect().map(_.getString(0)).toSet
     bc.destroy()
-    assert(routed === exact)
     assert(viaBroadcast === exact)
     assert(exact.size === 250)
   }

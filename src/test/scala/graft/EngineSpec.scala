@@ -23,10 +23,9 @@ class EngineSpec extends SparkSpecBase {
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft-engine").toString
 
-  private def newDriver(dir: String, useBloom: Boolean = true,
-      bloomRouted: Boolean = false) =
+  private def newDriver(dir: String, useBloom: Boolean = true) =
     new EpochDriver(spark, new SnapshotStore(dir, spark), seed, nHosts,
-      epochBudgetMs = budget, useBloom = useBloom, bloomRouted = bloomRouted)
+      epochBudgetMs = budget, useBloom = useBloom)
 
   private def seeds = SimWeb.seedUrls(40, nHosts, seed)
 
@@ -76,24 +75,19 @@ class EngineSpec extends SparkSpecBase {
     }
   }
 
-  test("bloom prefilter does not change results (broadcast, routed, and off)") {
+  test("bloom prefilter does not change results (broadcast and off)") {
     val d1 = newDriver(tmpDir(), useBloom = true)
     val d2 = newDriver(tmpDir(), useBloom = false)
-    val d3 = newDriver(tmpDir(), bloomRouted = true)
-    d1.init(seeds); d2.init(seeds); d3.init(seeds)
-    // multi-epoch, per-epoch counters byte-identical across all three
-    // execution strategies (the routed path is what Crawl's
-    // SPARK_GRAFT_BLOOM_ROUTED=1 runs end-to-end)
+    d1.init(seeds); d2.init(seeds)
+    // multi-epoch, per-epoch counters byte-identical across both
+    // execution strategies
     (1 to 2).foreach { _ =>
-      val m1 = d1.runEpoch(); val m2 = d2.runEpoch(); val m3 = d3.runEpoch()
+      val m1 = d1.runEpoch(); val m2 = d2.runEpoch()
       assert(m1 == m2, s"bloom-off counters diverged: $m1 vs $m2")
-      assert(m3 == m2, s"routed counters diverged: $m3 vs $m2")
     }
     val s1 = d1.seenSet().collect().map(_.getString(0)).toSet
     val s2 = d2.seenSet().collect().map(_.getString(0)).toSet
-    val s3 = d3.seenSet().collect().map(_.getString(0)).toSet
     assert(s1 == s2)
-    assert(s3 == s2)
   }
 
   test("resume from snapshot equals an uninterrupted run") {
@@ -160,34 +154,41 @@ class EngineSpec extends SparkSpecBase {
     assert(newDriver(dir).runEpoch()("epoch") == m.epoch + 1)
   }
 
-  test("a store of layout 2 or 3, or one without seen_buckets, refuses to resume") {
+  test("a store of layout 2, 3 or 4, or without seen_buckets or schemas, cannot resume") {
     val dir = tmpDir()
     val a = newDriver(dir)
     a.init(seeds)
     a.runEpoch()
     val store = new SnapshotStore(dir, spark)
     val m = store.latest().get
-    // 2 kept the seen set in a catalog table, 3 in a fixed 32 buckets
-    Seq(2L, 3L).foreach { layout =>
+    // 2 kept the seen set in a catalog table, 3 in a fixed 32 buckets, 4
+    // recorded no table schemas
+    Seq(2L, 3L, 4L).foreach { layout =>
       store.commit(m.epoch, Map.empty, Map.empty,
         m.counters + ("cfg_store_layout" -> layout))
       val e = intercept[IllegalArgumentException](newDriver(dir).runEpoch())
       assert(e.getMessage.contains("resume config mismatch") &&
         e.getMessage.contains("cfg_store_layout"), e.getMessage)
     }
-    // an otherwise intact manifest with the bucket count stripped (and its
-    // checksum file dropped, so the read reaches the manifest's content)
+    // an otherwise intact manifest with one key stripped (and its checksum
+    // file dropped, so the read reaches the manifest's content); the intact
+    // bytes go back after each check
     val v = store.commit(m.epoch, Map.empty, Map.empty, m.counters).version
     val manifestDir = java.nio.file.Paths.get(dir, "manifest")
-    val json = manifestDir.resolve(s"v$v.json").toFile
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
-    val node = mapper.readTree(json)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.remove("seen_buckets")
-    mapper.writeValue(json, node)
+    val json = manifestDir.resolve(s"v$v.json")
     java.nio.file.Files.deleteIfExists(manifestDir.resolve(s".v$v.json.crc"))
-    val e = intercept[IllegalArgumentException](newDriver(dir).runEpoch())
-    assert(e.getMessage.contains("seen_buckets"), e.getMessage)
+    val intact = java.nio.file.Files.readAllBytes(json)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper
+    Seq("seen_buckets", "schemas").foreach { key =>
+      val node = mapper.readTree(intact)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      node.remove(key)
+      mapper.writeValue(json.toFile, node)
+      val e = intercept[IllegalArgumentException](newDriver(dir).runEpoch())
+      assert(e.getMessage.contains(key), e.getMessage)
+      java.nio.file.Files.write(json, intact)
+    }
+    assert(newDriver(dir).runEpoch()("epoch") == m.epoch + 1)
   }
 
   test("seen compaction: fewer partitions, identical set, and it SURVIVES a restart") {
@@ -285,10 +286,9 @@ class EngineSpec extends SparkSpecBase {
     // tier-2: the full fold sweeps every generation into one dir
     val m = store.latest().get
     val full = store.compactSeen(m.tables("seen"))
-    store.commit(m.epoch, Map.empty, Map.empty, m.counters,
-      replacePaths = Map("seen" -> Seq(full)))
+    store.commit(m.epoch, Map("seen" -> Seq(full)), Map.empty, m.counters)
     store.expireUnreferenced()
-    assert(gens() == Seq(full), "full fold left generations")
+    assert(gens() == Seq(full.dir), "full fold left generations")
     assert(versionDirs(dir, "seen", "seen_fold").size == 1,
       "expire left folded generations on disk")
     assert(d.seenSet().collect().map(_.getString(0)).toSet == all,
@@ -345,7 +345,7 @@ class EngineSpec extends SparkSpecBase {
     // compaction off (not resume-guarded), so nothing re-stages the fold dir
     seenCrashResume(crashAt = 4, resumeEvery = 0) { (store, fresh) =>
       val slice = store.appendSeen(fresh)
-      store.compactSeen(store.latest().get.tables("seen") :+ slice)
+      store.compactSeen(store.latest().get.tables("seen") :+ slice.dir)
     }
   }
 
@@ -439,13 +439,15 @@ class EngineSpec extends SparkSpecBase {
     import spark.implicits._
     val dir = tmpDir()
     val store = new SnapshotStore(dir, spark)
-    store.commit(0, Map("t" -> Seq(1L).toDF("x")), Map.empty, Map("c" -> 0L))
+    store.commit(0, Map("t" -> Seq(store.stage("t", Seq(1L).toDF("x")))), Map.empty,
+      Map("c" -> 0L))
     // a crashed attempt got its manifest onto v1.json but never moved
     // LATEST: the file is invisible, and the retry must replace it
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(dir, "manifest", "v1.json"), "{stale")
     assert(store.latest().get.version == 0L, "test premise: stale v1 invisible")
-    val m = store.commit(1, Map("t" -> Seq(2L).toDF("x")), Map.empty, Map("c" -> 1L))
+    val m = store.commit(1, Map("t" -> Seq(store.stage("t", Seq(2L).toDF("x")))),
+      Map.empty, Map("c" -> 1L))
     val reader = new SnapshotStore(dir, spark)
     val back = reader.latest().get
     assert((back.version, back.parent, back.epoch, back.tables, back.counters) ==

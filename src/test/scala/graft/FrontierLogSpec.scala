@@ -512,4 +512,46 @@ class FrontierLogSpec extends SparkSpecBase {
       "absent head must fall back to the full pending view")
     assert(m2("epoch") == 2L && m2("fetched") == 0L)
   }
+
+  test("a draining major fold equals a folds-off twin every epoch, to exhaustion") {
+    // two epochs of ordinary discovery, then every host disallows "/": no
+    // candidate passes the robots filter, so the pending frontier drains.
+    // A major fold every epoch makes the last fetching epoch a fold with
+    // no pending row left (it archives every terminal row and commits a
+    // row-less base), and the exhausted epoch after it folds that
+    // row-less base again
+    val nHosts = 10
+    val seeds = SimWeb.seedUrls(40, nHosts, seed)
+    val closed = graft.operators.Sched.robotsFor(
+      (0 until nHosts).map(SimWeb.hostName), seed)
+      .map { case (h, delay, dis) => (h, delay, dis :+ "/") }
+    val store = new SnapshotStore(tmpDir(), spark)
+    val folds = new EpochDriver(spark, store, seed, nHosts,
+      epochBudgetMs = 8000L, compactFrontierEvery = 1, compactSeenEvery = 2)
+    val twin = new EpochDriver(spark, new SnapshotStore(tmpDir(), spark), seed,
+      nHosts, epochBudgetMs = 8000L)
+    folds.init(seeds); twin.init(seeds)
+    def seen(d: EpochDriver) = d.seenSet().collect().map(_.getString(0)).toSet
+    def view(d: EpochDriver) = d.frontier().collect().map(_.toSeq).toSet
+    var epoch = 0
+    var exhausted = false
+    while (!exhausted) {
+      epoch += 1
+      assert(epoch <= 30, "the closed crawl never drained")
+      if (epoch == 3) { folds.stageRobotsUpdate(closed); twin.stageRobotsUpdate(closed) }
+      val (a, b) = (folds.runEpoch(), twin.runEpoch())
+      assert(a == b, s"epoch $epoch counters: $a vs $b")
+      assert(seen(folds) == seen(twin), s"epoch $epoch seen set diverged")
+      assert(view(folds) == view(twin), s"epoch $epoch frontier view diverged")
+      store.expireUnreferenced()
+      exhausted = a("fetched") + a("errors") == 0L
+    }
+    assert(epoch > 4, s"test premise: the crawl drained over several epochs, not $epoch")
+    val m = store.latest().get
+    assert(store.readTable(m, "frontier_base").get.count() == 0L,
+      "the final fold left pending rows in the base")
+    assert(!m.tables.contains("frontier_head"), "a drained fold committed a head")
+    assert(store.readTable(m, "frontier_archive").get.count() ==
+      twin.frontier().count(), "the archive is missing terminal rows")
+  }
 }

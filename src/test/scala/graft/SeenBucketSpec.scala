@@ -27,8 +27,8 @@ class SeenBucketSpec extends SparkSpecBase {
 
   /** Stage `r` as a seen slice and commit it as the next epoch. */
   private def commitSlice(store: SnapshotStore, r: Range): Unit =
-    store.commit(store.latest().fold(0L)(_.epoch + 1), Map.empty, Map.empty, Map.empty,
-      appendPaths = Map("seen" -> Seq(store.appendSeen(urls(r)))))
+    store.commit(store.latest().fold(0L)(_.epoch + 1), Map.empty,
+      Map("seen" -> store.appendSeen(urls(r))), Map.empty)
 
   private def seenSet(store: SnapshotStore, epoch: Long): Set[String] =
     store.readSeen(epoch).collect().map(_.getString(0)).toSet
@@ -85,8 +85,8 @@ class SeenBucketSpec extends SparkSpecBase {
     commitSlice(store, 150 until 200)
     val before = seenSet(store, 2L)
     val m = store.latest().get
-    store.commit(m.epoch, Map.empty, Map.empty, Map.empty,
-      replacePaths = Map("seen" -> Seq(store.compactSeen(m.tables("seen")))))
+    store.commit(m.epoch, Map("seen" -> Seq(store.compactSeen(m.tables("seen")))),
+      Map.empty, Map.empty)
     assert(store.latest().get.tables("seen").size === 1)
     assert(seenSet(store, 2L) === before)
     assert(store.readSeen(2L).count() === 200)

@@ -1,0 +1,132 @@
+package graft
+
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import graft.ckpt.SnapshotStore
+import graft.engine.EpochDriver
+import graft.gen.SimWeb
+
+/** The manifest carries each table's schema: reads never infer it (no
+  * Spark job runs to build a table), and a staged write counts its own
+  * rows (no job re-reads the output).
+  */
+class SnapshotStoreSpec extends SparkSpecBase {
+
+  import spark.implicits._
+
+  private def tmpDir(): String =
+    java.nio.file.Files.createTempDirectory("graft-store").toString
+
+  /** Jobs started while `body` ran, by the local property each carried. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.window"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "window")
+      try body finally sc.setLocalProperty(key, null)
+      // the bus delivers events in order: once the marker job's start is
+      // seen, every job the window started has been seen too
+      sc.setLocalProperty(key, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains("marker"), "listener never saw the marker job")
+      seen.asScala.count(_ == "window")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("readTable runs no Spark job; a zero-row table reads back empty") {
+    val dir = tmpDir()
+    val store = new SnapshotStore(dir, spark)
+    val d = new EpochDriver(spark, store, 42L, 10, epochBudgetMs = 8000L,
+      compactFrontierEvery = 3, compactDeltaEvery = 2, compactSeenEvery = 3,
+      nearDupDocs = true, mediaDocs = true, sinkDir = Some(tmpDir()))
+    d.init(SimWeb.seedUrls(40, 10, 42L))
+    // the listener sees inference: a plain parquet read of a data dir
+    // runs a schema job
+    val m0 = store.latest().get
+    assert(jobsDuring(spark.read.parquet(m0.tables("frontier_base").head)) > 0,
+      "test premise: schema inference runs a job")
+    // after init, a plain epoch, a minor fold and a major fold
+    (0 to 3).foreach { e =>
+      if (e > 0) d.runEpoch()
+      val m = store.latest().get
+      assert(m.schemas.keySet == m.tables.keySet, s"epoch $e: tables without a schema")
+      var tables = Map.empty[String, DataFrame]
+      val jobs = jobsDuring {
+        tables = m.tables.keys.map(t => t -> store.readTable(m, t).get).toMap
+      }
+      assert(jobs == 0, s"epoch $e: building ${m.tables.keys.toSeq.sorted} ran $jobs jobs")
+      tables.foreach { case (t, df) =>
+        assert(df.schema.fieldNames.toSet == m.schemas(t).fieldNames.toSet,
+          s"epoch $e: $t read back as ${df.schema.simpleString}")
+      }
+    }
+    val m = store.latest().get
+    assert(m.counters("neardup_pairs") == 0L && m.tables("neardup_pairs").size == 3,
+      "test premise: three committed zero-row neardup_pairs dirs")
+    val pairs = store.readTable(m, "neardup_pairs").get
+    assert(pairs.count() == 0L)
+    assert(pairs.schema.fieldNames.toSeq == Seq("doc_a", "doc_b", "hd", "epoch"))
+    assert(pairs.schema == m.schemas("neardup_pairs"))
+  }
+
+  /** Rows (from their footers alone) and bytes of `dir`'s parquet files. */
+  private def footers(dir: String): (Long, Long) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new HPath(dir).getFileSystem(conf)
+    val files = fs.listFiles(new HPath(dir), true)
+    var (rows, bytes) = (0L, 0L)
+    while (files.hasNext) {
+      val f = files.next()
+      if (f.getPath.getName.endsWith(".parquet")) {
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
+        try rows += r.getRecordCount finally r.close()
+        bytes += f.getLen
+      }
+    }
+    (rows, bytes)
+  }
+
+  test("staged rows and bytes equal the footers of four write shapes") {
+    val store = new SnapshotStore(tmpDir(), spark)
+    val src = spark.range(0, 5000).select(col("id"),
+      (col("id") % 3).cast("string").as("state"), (col("id") * 7 % 101).as("v"))
+    val writes = Seq(
+      ("repartitioned", src.repartition(5, col("v")), None, 5000L),
+      ("coalesced", src.filter(col("id") % 4 === 0).coalesce(1), None, 1250L),
+      ("partitioned", src.filter(col("id") < 1000), Some("state"), 1000L),
+      ("zero", src.filter(col("id") < 0), None, 0L))
+    writes.foreach { case (name, df, partitionBy, want) =>
+      val st = store.stage(name, df, partitionBy)
+      assert(st.rows == want, s"$name: staged ${st.rows} rows")
+      assert(footers(st.dir) == ((st.rows, st.bytes)),
+        s"$name: footers disagree with ${(st.rows, st.bytes)}")
+      assert(store.read(st).count() == want)
+      assert(st.schema.fieldNames.toSeq == Seq("id", "state", "v"))
+    }
+    // the zero-row write commits and reads back as an empty table
+    val zero = store.stage("t", src.filter(col("id") < 0))
+    store.commit(0L, Map("t" -> Seq(zero)), Map.empty, Map.empty)
+    assert(store.readTable(store.latest().get, "t").get.count() == 0L)
+    // a write of another schema cannot join the table
+    val other = store.stage("t", Seq(1L).toDF("x"))
+    val e = intercept[IllegalArgumentException](
+      store.commit(1L, Map.empty, Map("t" -> other), Map.empty))
+    assert(e.getMessage.contains("table t"), e.getMessage)
+  }
+}

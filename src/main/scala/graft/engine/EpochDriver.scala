@@ -1,6 +1,6 @@
 package graft.engine
 
-import scala.collection.mutable.ArrayBuffer
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, FutureTask}
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,19 +13,23 @@ import graft.operators.{Bloom, Extract, NearDup, Sched, Seen, SegmentedBloom}
 
 /** Epoch-loop crawl engine (SURVEY.md §3.1 Spark trace; north rule).
   *
-  * One epoch = one batch job (the reference runs one job at a time behind
-  * its `is_crawling_running` flag, src/main.py:56-62 — T1): rank the pending
-  * frontier per host under the virtual-time politeness budget, fetch the
-  * batch through the partition-local simulator, extract + canonicalize
-  * outbound URLs, drop seen ones (Bloom prefilter + exact anti-join), and
-  * commit frontier/seen/lineage/metrics as one atomic snapshot. Every epoch
-  * is resumable: state lives only in the snapshot store.
+  * Epochs run one at a time (the reference runs one job at a time behind
+  * its `is_crawling_running` flag, src/main.py:56-62 — T1). An epoch ranks
+  * the pending frontier per host under the virtual-time politeness budget,
+  * fetches the batch through the partition-local simulator, extracts +
+  * canonicalizes outbound URLs, drops seen ones (Bloom prefilter + exact
+  * anti-join), and commits frontier/seen/lineage/metrics as one atomic
+  * snapshot. Every epoch is resumable: state lives only in the snapshot
+  * store.
   *
-  * runEpoch is a sequence of layer functions — robots in effect, schedule,
-  * fetch, extract, dedup, sink, near-dup, media, seen, frontier update — each
-  * taking the epoch's inputs and returning its outputs plus a [[Commit]]
-  * fragment. The fragments merge into ONE epoch commit; at most one more
-  * (the append-root swap, see [[consolidate]]) follows it.
+  * Within an epoch, the layer functions — robots in effect, schedule,
+  * fetch, extract, dedup, sink, near-dup, media, seen, frontier update —
+  * form a small dependency graph ([[epochCommit]]): each takes the inputs
+  * it depends on and returns its outputs plus a [[Commit]] fragment, and
+  * the layers that do not depend on each other run as concurrent Spark
+  * jobs from branch threads of that epoch. Every branch joins before the
+  * ONE epoch commit, whose fragments merge in a fixed order; at most one
+  * more (the append-root swap, see [[consolidate]]) follows it.
   *
   * Per-epoch I/O is O(batch), never O(crawl): the seen set appends one
   * bucketed slice + Bloom segment per epoch (log-compacted by
@@ -135,7 +139,7 @@ final class EpochDriver(
     sinkBridge: Option[String] = None) {
 
   import spark.implicits._
-  import EpochDriver.{Commit, HeadMeta}
+  import EpochDriver.{Branch, Commit, HeadMeta}
 
   // the bridge POST rides the sink's flush path: a bridge URL without a
   // sink dir would silently emit NOTHING over the wire — fail loudly at
@@ -307,17 +311,54 @@ final class EpochDriver(
     }
   }
 
-  /** One epoch's inputs (`m` = the manifest it builds on), plus the caches
-    * and Bloom broadcast it holds — released in runEpoch's finally block
-    * so a failed commit (retried by the caller) cannot leak them, and so
-    * filter blobs never accumulate across epochs.
+  /** One epoch's inputs (`m` = the manifest it builds on), its branches,
+    * and the caches and Bloom broadcast it holds.
+    *
+    * A branch ([[fork]]) is a thread of its own for one layer or write,
+    * created by the thread that forks it and ending with its layer.
+    * SparkContext's local properties are inheritable and cloned when a
+    * thread is created, so each branch runs with its forking thread's
+    * properties as they were at the fork: every job of the epoch carries
+    * the caller's tags (job group, scheduler pool, a tracer's span), and
+    * none carries another epoch's — a pooled thread reused by a later
+    * epoch would keep the properties it was created with. [[join]] waits
+    * for every branch before it returns or rethrows, so [[release]] runs
+    * only once no branch can still read what it unpersists or destroys.
     */
   private final class Ctx(val m: store.Manifest) {
     def epoch: Long = m.epoch + 1
-    private val held = ArrayBuffer.empty[DataFrame]
-    var bloom: Option[Broadcast[SegmentedBloom]] = None
-    def keep(df: DataFrame): DataFrame = { val d = df.cache(); held += d; d }
-    def release(): Unit = { held.foreach(_.unpersist()); bloom.foreach(_.destroy()) }
+    private val held = new ConcurrentLinkedQueue[() => Unit]()
+    private val branches = new ConcurrentLinkedQueue[FutureTask[_]]()
+    private val failures = new ConcurrentLinkedQueue[Throwable]()
+
+    def keep(df: DataFrame): DataFrame = {
+      val d = df.cache(); held.add(() => d.unpersist()); d
+    }
+    def keep[T](b: Broadcast[T]): Broadcast[T] = { held.add(() => b.destroy()); b }
+
+    /** Run `body` beside the forking thread. */
+    def fork[T](name: String)(body: => T): Branch[T] = {
+      val task = new FutureTask[T](() =>
+        try body catch { case t: Throwable => failures.add(t); throw t })
+      branches.add(task)
+      val t = new Thread(task, s"epoch-$epoch-$name")
+      t.setDaemon(true)
+      t.start()
+      new Branch(task)
+    }
+
+    /** `body`'s value once every branch has ended. If `body` or a branch
+      * failed, the first failure (in the order they happened) is rethrown
+      * instead, only once every branch has ended.
+      */
+    def join[T](body: => T): T = {
+      val v = try Some(body) catch { case t: Throwable => failures.add(t); None }
+      branches.forEach(b => try b.get() catch { case _: ExecutionException => () })
+      Option(failures.peek()).foreach(throw _)
+      v.get
+    }
+
+    def release(): Unit = held.forEach(_())
   }
 
   /** Run one epoch on top of the latest snapshot; returns epoch metrics. */
@@ -327,34 +368,8 @@ final class EpochDriver(
     val c = new Ctx(m)
     val staged = stagedRobots.get()
     try {
-      val (robotsDf, floorMs, robotsCommit) = robotsInEffect(m, staged)
-      val cut = Sched.budgetCut(epochBudgetMs, floorMs)
-      val (ranked, deltaAll) = schedule(c, robotsDf, floorMs, cut)
-      val (fetchResult, fetched, okDocs) = fetch(c, ranked)
-      val (candDepth, nDiscovered) = extract(c, okDocs, robotsDf)
-      val fresh = dedup(c, candDepth)
-      val (transitions, nFetched, nErrors) = outcomes(ranked, fetched)
-      val nEmitted = fresh.count()
-      val counters = Map(
-        "epoch" -> c.epoch,
-        "fetched" -> nFetched,
-        "errors" -> nErrors,
-        "discovered" -> nDiscovered,
-        "deduped" -> (nDiscovered - nEmitted),
-        "emitted" -> nEmitted)
-      val metricsDf = Seq((c.epoch, nFetched, nErrors, nDiscovered,
-        nDiscovered - nEmitted, nEmitted))
-        .toDF("epoch", "fetched", "errors", "discovered", "deduped", "emitted")
-      sink(c, fresh, nEmitted)
-      val nd = nearDup(c, okDocs, nFetched)
-      val md = media(c, okDocs, nFetched)
-      val seen = seenUpdate(c, fresh)
-      val update = frontierUpdate(c, cut, transitions, fresh, deltaAll,
-        nFetched + nErrors + nEmitted)
+      val (all, metrics) = c.join(epochCommit(c, staged))
       // ---- the ONE epoch commit: every layer's fragment, all-or-nothing
-      val all = Commit(append = Map("metrics" -> store.stage("metrics", metricsDf),
-          "fetch_result" -> fetchResult),
-        counters = cfg ++ counters) ++ robotsCommit ++ nd ++ md ++ seen ++ update
       val mEpoch = store.commit(c.epoch, all.replace, all.append, all.counters,
         all.drop)
       consolidate(mEpoch)
@@ -365,8 +380,71 @@ final class EpochDriver(
       // epoch, not be wiped with the one just committed — including one
       // that lands between reading the field and clearing it
       if (staged.isDefined) stagedRobots.compareAndSet(staged, None)
-      counters ++ nd.counters ++ md.counters
+      metrics
     } finally c.release()
+  }
+
+  /** The epoch's layers as a dependency graph. The critical path —
+    * robots → schedule → fetch → extract → dedup → the seen slice — runs
+    * on the calling thread, and every other layer is a branch, forked once
+    * its inputs exist:
+    *  - from the start: the Bloom segment merge and broadcast;
+    *  - once fetch is staged: near-dup and media, the longest branches;
+    *  - once the seen slice is written (the write runs dedup): the
+    *    outcomes tally, the frontier update, the sink and the metrics row,
+    *    while the seen fold runs on the calling thread.
+    * The scheduler is FIFO: a job waits for the task slots of every job
+    * submitted before it. So the tally, which only the metrics row needs,
+    * is forked after the slice rather than beside extract, whose jobs it
+    * would delay.
+    * Counts come from the writes (the seen slice's rows are the epoch's
+    * emitted count), so no branch waits on a count job. Returns the epoch
+    * commit, its fragments merged in a fixed order whatever order the
+    * branches end in, and the epoch's metrics.
+    */
+  private def epochCommit(c: Ctx, staged: Option[Seq[(String, Long, Seq[String])]])
+      : (Commit, Map[String, Long]) = {
+    val bloom = c.fork("bloom")(bloomFilter(c))
+    val (robotsDf, floorMs, robotsCommit) = robotsInEffect(c.m, staged)
+    val cut = Sched.budgetCut(epochBudgetMs, floorMs)
+    val (ranked, deltaAll) = schedule(c, robotsDf, floorMs, cut)
+    val (fetchResult, fetched, okDocs) = fetch(c, ranked)
+    val nd = c.fork("neardup")(nearDup(c, okDocs, fetchResult.rows))
+    val md = c.fork("media")(media(c, okDocs, fetchResult.rows))
+    val (candDepth, nDiscovered) = extract(c, okDocs, robotsDf)
+    // the slice's write fills the cached fresh rows before any other
+    // reader plans them: a reader planned while a cache is still empty
+    // runs its own job to fill it
+    val fresh = dedup(c, candDepth, bloom.get)
+    val slice = store.appendSeen(fresh)
+    val nEmitted = slice.rows
+    val transitions = transitionsOf(ranked, fetched)
+    val tally = c.fork("outcomes")(outcomes(transitions))
+    // the delta holds one transition per fetched row plus the fresh rows
+    val update = c.fork("frontier")(frontierUpdate(c, cut, transitions, fresh,
+      deltaAll, fetchResult.rows + nEmitted))
+    val sunk = c.fork("sink")(sink(c, fresh, nEmitted))
+    val counters = c.fork("metrics") {
+      val (nFetched, nErrors) = tally.get
+      val counters = Map(
+        "epoch" -> c.epoch,
+        "fetched" -> nFetched,
+        "errors" -> nErrors,
+        "discovered" -> nDiscovered,
+        "deduped" -> (nDiscovered - nEmitted),
+        "emitted" -> nEmitted)
+      val row = Seq((c.epoch, nFetched, nErrors, nDiscovered,
+        nDiscovered - nEmitted, nEmitted))
+        .toDF("epoch", "fetched", "errors", "discovered", "deduped", "emitted")
+      (counters, store.stage("metrics", row))
+    }
+    val seen = seenUpdate(c, slice)
+    sunk.get
+    val (epochCounters, metricsRow) = counters.get
+    (Commit(append = Map("metrics" -> metricsRow, "fetch_result" -> fetchResult),
+        counters = cfg ++ epochCounters) ++ robotsCommit ++ nd.get ++ md.get ++
+      seen ++ update.get,
+      epochCounters ++ nd.get.counters ++ md.get.counters)
   }
 
   /** ---- robots in effect for THIS epoch (J3): a staged update wins (and
@@ -464,38 +542,38 @@ final class EpochDriver(
     (candDepth, candDepth.count())
   }
 
+  /** ---- the seen set's Bloom filter: the committed segment log merged on
+    * the executors (one final blob per segment reaches the driver) and
+    * broadcast, held by the epoch until it ends.
+    */
+  private def bloomFilter(c: Ctx): Option[Broadcast[SegmentedBloom]] =
+    if (!useBloom) None
+    else store.readTable(c.m, "seen_bloom").map(df => c.keep(Seen.broadcastSegments(
+      spark, Bloom.mergedSegments(df, bloomSegments, bloomBitsPerSegment))))
+
   /** ---- dedup vs seen: Bloom prefilter (D3) + exact anti-join (J2) over
     * the bucketed seen scan (the huge, append-only side arrives
-    * pre-partitioned by hash(canon_url) — no big-side Exchange). Segment
-    * merge runs on the executors (one final blob per segment reaches the
-    * driver). Returns the fresh frontier rows (cached: counted, emitted,
-    * appended to seen and to the delta).
+    * pre-partitioned by hash(canon_url) — no big-side Exchange). Returns
+    * the fresh frontier rows (cached: emitted, appended to seen, to the
+    * Bloom log and to the delta).
     */
-  private def dedup(c: Ctx, candDepth: DataFrame): DataFrame = {
-    c.bloom =
-      if (useBloom) store.readTable(c.m, "seen_bloom").map(df =>
-        Seen.broadcastSegments(spark,
-          Bloom.mergedSegments(df, bloomSegments, bloomBitsPerSegment)))
-      else None
-    c.keep(Seen.filterUnseen(candDepth, "canon_url", store.readSeen(c.m), c.bloom)
+  private def dedup(c: Ctx, candDepth: DataFrame,
+      bloom: Option[Broadcast[SegmentedBloom]]): DataFrame =
+    c.keep(Seen.filterUnseen(candDepth, "canon_url", store.readSeen(c.m), bloom)
       .withColumn("score", lit(1.0) / (lit(1.0) + col("depth")))
       .withColumn("state", lit("pending"))
       .withColumn("retry_count", lit(0))
       .withColumn("discovered_epoch", lit(c.epoch))
       .select(EpochDriver.RowCols.map(col): _*))
-  }
 
   /** Frontier transitions of the scheduled rows (fetched ok → fetched;
     * error → retry w/ score decay, dead at maxRetries — T5/T7); everything
     * else rests untouched in base/older deltas. The inner join is
-    * batch-sized on both sides. One batch-sized pass over the
-    * post-transition states yields the fetched and error tallies (errors
-    * are exactly failed + still-pending).
+    * batch-sized on both sides; no job runs here.
     */
-  private def outcomes(ranked: DataFrame,
-      fetched: DataFrame): (DataFrame, Long, Long) = {
+  private def transitionsOf(ranked: DataFrame, fetched: DataFrame): DataFrame = {
     val outcome = fetched.select(col("canon_url"), col("status").as("_status"))
-    val transitions = ranked.select(EpochDriver.RowCols.map(col): _*)
+    ranked.select(EpochDriver.RowCols.map(col): _*)
       .join(outcome, Seq("canon_url"))
       .withColumn("state",
         when(col("_status") === "ok", lit("fetched"))
@@ -509,10 +587,17 @@ final class EpochDriver(
         when(col("_status") === "error", col("retry_count") + 1)
           .otherwise(col("retry_count")))
       .drop("_status")
+  }
+
+  /** ---- outcomes: one batch-sized pass over the post-transition states
+    * yields the fetched and error tallies (errors are exactly failed +
+    * still-pending).
+    */
+  private def outcomes(transitions: DataFrame): (Long, Long) = {
     val states = transitions.groupBy("state").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     def n(s: String) = states.getOrElse(s, 0L)
-    (transitions, n("fetched"), n("failed") + n("pending"))
+    (n("fetched"), n("failed") + n("pending"))
   }
 
   /** ---- K1 record sink + K2 job-control message (kafka_producer.py
@@ -553,12 +638,12 @@ final class EpochDriver(
     * geometry-free and a growing corpus widens its own banding. sim_docs
     * carries forward across empty epochs like delta_rows: a counter absent
     * from one manifest would reset the cumulative count (and the derived
-    * banding geometry) on the next.
+    * banding geometry) on the next. Files are sized by `fetchRows`, the
+    * fetch table's rows (a bound on the ok docs).
     */
-  private def nearDup(c: Ctx, okDocs: DataFrame, nFetched: Long): Commit =
+  private def nearDup(c: Ctx, okDocs: DataFrame, fetchRows: Long): Commit =
     if (!nearDupDocs) Commit()
     else {
-      val simDocs = c.m.counters.getOrElse("sim_docs", 0L) + nFetched
       // TOTAL over the batch: one signature per fetched doc (a doc with no
       // text signs 0), so the sim_docs counter and the corpus_sim row count
       // stay equal BY CONSTRUCTION. Staged into this commit's corpus_sim
@@ -567,7 +652,8 @@ final class EpochDriver(
       // epoch
       val sim = store.stage("corpus_sim", NearDup.simhashTotal(
         okDocs.select(col("doc_id"), NearDup.spansText(col("spans")).as("text")),
-        NearDup.XxHashBits, NearDup.xxTokenHash).coalesce(filesFor(nFetched)))
+        NearDup.XxHashBits, NearDup.xxTokenHash).coalesce(filesFor(fetchRows)))
+      val simDocs = c.m.counters.getOrElse("sim_docs", 0L) + sim.rows
       val blocks = graft.functions.Banding.blocksFor(simDocs,
         hashBits = NearDup.XxHashBits)
       val pairs = store.stage("neardup_pairs", NearDup.incrementalFromSimhash(
@@ -587,7 +673,7 @@ final class EpochDriver(
     * the table stores features, never payloads, so nothing raster-sized
     * ever shuffles or persists). media_rows carries forward like sim_docs.
     */
-  private def media(c: Ctx, okDocs: DataFrame, nFetched: Long): Commit =
+  private def media(c: Ctx, okDocs: DataFrame, fetchRows: Long): Commit =
     if (!mediaDocs) Commit()
     else {
       val refs = okDocs
@@ -618,7 +704,7 @@ final class EpochDriver(
       // The shuffle moves only feature rows (~hundreds of bytes each);
       // file sizing tracks the fetched-doc count (spans/doc is a
       // small corpus constant, so ~1M-row files up to that factor)
-      val written = store.stage("media_features", feats.repartition(filesFor(nFetched)))
+      val written = store.stage("media_features", feats.repartition(filesFor(fetchRows)))
       Commit(append = Map("media_features" -> written),
         counters = Map("media_rows" ->
           (c.m.counters.getOrElse("media_rows", 0L) + written.rows)))
@@ -632,9 +718,9 @@ final class EpochDriver(
     * SeenFullFoldPartitions — amortized full-rewrite cost
     * O(total / SeenFullFoldPartitions). The fold replaces the window in
     * the epoch commit; expireUnreferenced deletes the folded dirs.
+    * `slice` is the epoch's staged slice ([[SnapshotStore.appendSeen]]).
     */
-  private def seenUpdate(c: Ctx, fresh: DataFrame): Commit = {
-    val slice = store.appendSeen(fresh)
+  private def seenUpdate(c: Ctx, slice: Staged): Commit = {
     val gens = store.committed(c.m, "seen") :+ slice
     if (compactSeenEvery > 0 && c.epoch % compactSeenEvery == 0) {
       val window = if (gens.size >= EpochDriver.SeenFullFoldPartitions)
@@ -656,6 +742,10 @@ final class EpochDriver(
     * and by minor delta resolves) carry forward: the evidence that minor
     * folds let the major cadence stretch is their RATIO in a CLI A/B, read
     * straight out of the final manifest.
+    *
+    * The Bloom write, and in a minor fold the head refresh, are branches
+    * of their own beside the delta or base write; only a major fold's head
+    * waits, for the base it is cut from.
     */
   private def frontierUpdate(c: Ctx, cut: Long, transitions: DataFrame,
       fresh: DataFrame, deltaAll: Option[DataFrame], deltaRows: Long): Commit = {
@@ -687,6 +777,12 @@ final class EpochDriver(
     val minorFold = compactDeltaEvery > 0 && epoch % compactDeltaEvery == 0 &&
       (deltaRows > 0 || m.tables.get("frontier_delta").exists(_.size > 1))
     if (compactFrontierEvery > 0 && epoch % compactFrontierEvery == 0) {
+      // the Bloom blob log folds here too: OR-merge every appended
+      // (epoch, segment) row plus this epoch's into one row per segment,
+      // so the per-epoch filter read merges O(segments + R) blobs, not
+      // O(epochs × segments) — OR is associative, so bit-identical
+      val bloomFolded = c.fork("bloom-fold")(store.stage("seen_bloom",
+        Bloom.foldSegments(store.readTable(m, "seen_bloom").get.unionByName(bloomNew))))
       // stage the fold once (state-partitioned, the dir the commit
       // names), then derive the HEAD from the written bytes — the
       // top-(R+1)*cut rows per host, the only rows the next R epochs of
@@ -704,18 +800,14 @@ final class EpochDriver(
       val meta = HeadMeta(epoch, (compactFrontierEvery.toLong + 1L) * cut, cut)
       val slice = if (!scheduleFromHead) None else Some((Sched.headSlice(
         store.read(base).filter(col("state") === "pending"), meta.k), meta))
-      // the Bloom blob log folds here too: OR-merge every appended
-      // (epoch, segment) row plus this epoch's into one row per segment,
-      // so the per-epoch filter read merges O(segments + R) blobs, not
-      // O(epochs × segments) — OR is associative, so bit-identical
-      val bloomFolded = store.stage("seen_bloom", Bloom.foldSegments(
-        store.readTable(m, "seen_bloom").get.unionByName(bloomNew)))
-      Commit(replace = Map("seen_bloom" -> Seq(bloomFolded),
+      val head = headCommit(slice, None)
+      Commit(replace = Map("seen_bloom" -> Seq(bloomFolded.get),
           "frontier_base" -> Seq(base)),
         append = archived,
         counters = foldBytes + ("fold_base_bytes" -> baseBytes),
-        drop = Set("frontier_delta")) ++ headCommit(slice, None)
+        drop = Set("frontier_delta")) ++ head
     } else if (minorFold) {
+      val bloomAppend = c.fork("bloom-append")(store.stage("seen_bloom", bloomNew))
       // ---- MINOR fold: resolve the delta LOG into one run (latest row
       // per key — view-identical, the same resolution the major fold
       // would apply). Touches O(delta window) bytes; the base is NEVER
@@ -724,9 +816,6 @@ final class EpochDriver(
       // head stay compact. The prior log is deltaAll, already read ONCE
       // for this epoch's schedule
       val allDelta = deltaAll.fold(deltaDf)(_.unionByName(deltaDf))
-      val run = store.stage("frontier_delta",
-        FrontierLog.resolve(allDelta).repartition(filesFor(deltaRowsBound)))
-      val deltaBytes = m.counters.getOrElse("fold_delta_bytes", 0L) + run.bytes
       // Head refresh: head' = top-K' per host of pending(head ∪ delta),
       // K' = hk − (epoch − he)·cut (the budget not yet consumable since
       // the head was built). Exactness: the head at `he` contained the
@@ -744,23 +833,31 @@ final class EpochDriver(
       // head path disabled must not keep paying the per-host window sort
       // for a head no scheduler reads (meta is kept, so a later head-on
       // resume re-validates against the true elapsed-epoch consumption)
-      val slice = for {
-        h <- standing if scheduleFromHead
-        kRem = h.k - (epoch - h.epoch) * cut
-        if kRem >= cut
-        df <- store.readTable(m, "frontier_head")
-      } yield (Sched.headSlice(FrontierLog.pendingResolved(df,
-        Some(allDelta.filter(col("seq") > h.epoch))), kRem),
-        HeadMeta(epoch, kRem, cut))
+      val head = c.fork("head") {
+        val slice = for {
+          h <- standing if scheduleFromHead
+          kRem = h.k - (epoch - h.epoch) * cut
+          if kRem >= cut
+          df <- store.readTable(m, "frontier_head")
+        } yield (Sched.headSlice(FrontierLog.pendingResolved(df,
+          Some(allDelta.filter(col("seq") > h.epoch))), kRem),
+          HeadMeta(epoch, kRem, cut))
+        headCommit(slice, standing)
+      }
+      val run = store.stage("frontier_delta",
+        FrontierLog.resolve(allDelta).repartition(filesFor(deltaRowsBound)))
+      val deltaBytes = m.counters.getOrElse("fold_delta_bytes", 0L) + run.bytes
       Commit(replace = Map("frontier_delta" -> Seq(run)),
-        append = Map("seen_bloom" -> store.stage("seen_bloom", bloomNew)),
+        append = Map("seen_bloom" -> bloomAppend.get),
         counters = foldBytes + ("fold_delta_bytes" -> deltaBytes) +
-          ("delta_rows" -> deltaRowsBound)) ++ headCommit(slice, standing)
-    } else
-      Commit(append = Map("seen_bloom" -> store.stage("seen_bloom", bloomNew),
-          "frontier_delta" -> store.stage("frontier_delta", deltaDf)),
+          ("delta_rows" -> deltaRowsBound)) ++ head.get
+    } else {
+      val bloomAppend = c.fork("bloom-append")(store.stage("seen_bloom", bloomNew))
+      val delta = store.stage("frontier_delta", deltaDf)
+      Commit(append = Map("seen_bloom" -> bloomAppend.get, "frontier_delta" -> delta),
         counters = foldBytes + ("delta_rows" -> deltaRowsBound)) ++
         headCommit(None, standing)
+    }
   }
 
   /** ---- archive-by-rename: fetched/failed are ABSORBING (a URL enters the
@@ -909,6 +1006,13 @@ object EpochDriver {
   private final case class HeadMeta(epoch: Long, k: Long, cut: Long) {
     def counters: Map[String, Long] =
       Map("head_epoch" -> epoch, "head_k" -> k, "head_cut" -> cut)
+  }
+
+  /** A value an epoch branch computes ([[EpochDriver.Ctx.fork]]): `get`
+    * waits for it and rethrows the branch's own failure.
+    */
+  private final class Branch[T](task: FutureTask[T]) {
+    def get: T = try task.get() catch { case e: ExecutionException => throw e.getCause }
   }
 
   /** One commit's staged content, as SnapshotStore.commit takes it. Every

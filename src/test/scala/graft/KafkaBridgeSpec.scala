@@ -18,25 +18,7 @@ import graft.sinks.RecordSink
   */
 class KafkaBridgeSpec extends SparkSpecBase {
 
-  private final case class Captured(path: String, contentType: String, body: String)
-
-  /** In-JVM loopback bridge recording every POST; responds `status`. */
-  private def withBridge[A](status: Int = 200)(
-      f: (String, ConcurrentLinkedQueue[Captured]) => A): A = {
-    val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-    val got = new ConcurrentLinkedQueue[Captured]()
-    srv.createContext("/", ex => {
-      val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
-      got.add(Captured(ex.getRequestURI.getPath,
-        ex.getRequestHeaders.getFirst("Content-type"), body))
-      ex.sendResponseHeaders(status, -1)
-      ex.close()
-    })
-    srv.start()
-    try f(s"http://127.0.0.1:${srv.getAddress.getPort}", got)
-    finally srv.stop(0)
-  }
-
+  import KafkaBridgeSpec.withBridge
   import scala.jdk.CollectionConverters._
 
   test("every batch POSTs to /topics/<topic> with the bridge content type; wire bytes == disk bytes") {
@@ -125,5 +107,26 @@ class KafkaBridgeSpec extends SparkSpecBase {
           spark),
         seed = 7L, nHosts = 10, sinkBridge = Some("http://localhost:1"))
     }
+  }
+}
+
+object KafkaBridgeSpec {
+  final case class Captured(path: String, contentType: String, body: String)
+
+  /** In-JVM loopback bridge recording every POST; responds `status`. */
+  def withBridge[A](status: Int = 200)(
+      f: (String, ConcurrentLinkedQueue[Captured]) => A): A = {
+    val srv = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val got = new ConcurrentLinkedQueue[Captured]()
+    srv.createContext("/", ex => {
+      val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
+      got.add(Captured(ex.getRequestURI.getPath,
+        ex.getRequestHeaders.getFirst("Content-type"), body))
+      ex.sendResponseHeaders(status, -1)
+      ex.close()
+    })
+    srv.start()
+    try f(s"http://127.0.0.1:${srv.getAddress.getPort}", got)
+    finally srv.stop(0)
   }
 }

@@ -1,13 +1,8 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ckpt.SnapshotStore
@@ -25,30 +20,6 @@ class SnapshotStoreSpec extends SparkSpecBase {
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft-store").toString
 
-  /** Jobs started while `body` ran, by the local property each carried. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.spec.window"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, "window")
-      try body finally sc.setLocalProperty(key, null)
-      // the bus delivers events in order: once the marker job's start is
-      // seen, every job the window started has been seen too
-      sc.setLocalProperty(key, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains("marker"), "listener never saw the marker job")
-      seen.asScala.count(_ == "window")
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("readTable runs no Spark job; a zero-row table reads back empty") {
     val dir = tmpDir()
     val store = new SnapshotStore(dir, spark)
@@ -59,7 +30,7 @@ class SnapshotStoreSpec extends SparkSpecBase {
     // the listener sees inference: a plain parquet read of a data dir
     // runs a schema job
     val m0 = store.latest().get
-    assert(jobsDuring(spark.read.parquet(m0.tables("frontier_base").head)) > 0,
+    assert(jobsDuring(spark.read.parquet(m0.tables("frontier_base").head)).nonEmpty,
       "test premise: schema inference runs a job")
     // after init, a plain epoch, a minor fold and a major fold
     (0 to 3).foreach { e =>
@@ -70,7 +41,8 @@ class SnapshotStoreSpec extends SparkSpecBase {
       val jobs = jobsDuring {
         tables = m.tables.keys.map(t => t -> store.readTable(m, t).get).toMap
       }
-      assert(jobs == 0, s"epoch $e: building ${m.tables.keys.toSeq.sorted} ran $jobs jobs")
+      assert(jobs.isEmpty,
+        s"epoch $e: building ${m.tables.keys.toSeq.sorted} ran ${jobs.size} jobs")
       tables.foreach { case (t, df) =>
         assert(df.schema.fieldNames.toSet == m.schemas(t).fieldNames.toSet,
           s"epoch $e: $t read back as ${df.schema.simpleString}")

@@ -322,8 +322,9 @@ final class EpochDriver(
     * the caller's tags (job group, scheduler pool, a tracer's span), and
     * none carries another epoch's — a pooled thread reused by a later
     * epoch would keep the properties it was created with. [[join]] waits
-    * for every branch before it returns or rethrows, so [[release]] runs
-    * only once no branch can still read what it unpersists or destroys.
+    * for every branch, those forked by other branches included, before it
+    * returns or rethrows, so [[release]] runs only once no branch can still
+    * read what it unpersists or destroys.
     */
   private final class Ctx(val m: store.Manifest) {
     def epoch: Long = m.epoch + 1
@@ -353,7 +354,13 @@ final class EpochDriver(
       */
     def join[T](body: => T): T = {
       val v = try Some(body) catch { case t: Throwable => failures.add(t); None }
-      branches.forEach(b => try b.get() catch { case _: ExecutionException => () })
+      // drain, not iterate: a branch may fork more branches while it runs,
+      // and each must end before release
+      var b = branches.poll()
+      while (b != null) {
+        try b.get() catch { case _: ExecutionException => () }
+        b = branches.poll()
+      }
       Option(failures.peek()).foreach(throw _)
       v.get
     }
@@ -391,8 +398,9 @@ final class EpochDriver(
     *  - from the start: the Bloom segment merge and broadcast;
     *  - once fetch is staged: near-dup and media, the longest branches;
     *  - once the seen slice is written (the write runs dedup): the
-    *    outcomes tally, the frontier update, the sink and the metrics row,
-    *    while the seen fold runs on the calling thread.
+    *    outcomes tally, the Bloom log write, the frontier update, the sink
+    *    and the metrics row, while the seen fold runs on the calling
+    *    thread.
     * The scheduler is FIFO: a job waits for the task slots of every job
     * submitted before it. So the tally, which only the metrics row needs,
     * is forked after the slice rather than beside extract, whose jobs it
@@ -420,6 +428,7 @@ final class EpochDriver(
     val nEmitted = slice.rows
     val transitions = transitionsOf(ranked, fetched)
     val tally = c.fork("outcomes")(outcomes(transitions))
+    val bloomLog = c.fork("bloom-log")(bloomUpdate(c, fresh))
     // the delta holds one transition per fetched row plus the fresh rows
     val update = c.fork("frontier")(frontierUpdate(c, cut, transitions, fresh,
       deltaAll, fetchResult.rows + nEmitted))
@@ -443,7 +452,7 @@ final class EpochDriver(
     val (epochCounters, metricsRow) = counters.get
     (Commit(append = Map("metrics" -> metricsRow, "fetch_result" -> fetchResult),
         counters = cfg ++ epochCounters) ++ robotsCommit ++ nd.get ++ md.get ++
-      seen ++ update.get,
+      seen ++ bloomLog.get ++ update.get,
       epochCounters ++ nd.get.counters ++ md.get.counters)
   }
 
@@ -550,6 +559,22 @@ final class EpochDriver(
     if (!useBloom) None
     else store.readTable(c.m, "seen_bloom").map(df => c.keep(Seen.broadcastSegments(
       spark, Bloom.mergedSegments(df, bloomSegments, bloomBitsPerSegment))))
+
+  /** ---- the seen set's Bloom log: this epoch's fresh URLs as one blob per
+    * segment, appended (Bloom is append-only, and readers OR-merge
+    * segments). A major fold folds the log too: every appended (epoch,
+    * segment) row plus this epoch's OR-merge into one row per segment, so
+    * the per-epoch filter read merges O(segments + R) blobs, not
+    * O(epochs × segments) — OR is associative, so bit-identical.
+    */
+  private def bloomUpdate(c: Ctx, fresh: DataFrame): Commit = {
+    val bloomNew = Bloom.buildSegments(fresh.select("canon_url"),
+      "canon_url", bloomSegments, bloomBitsPerSegment)
+    if (majorFold(c.epoch)) Commit(replace = Map("seen_bloom" -> Seq(store.stage(
+      "seen_bloom", Bloom.foldSegments(
+        store.readTable(c.m, "seen_bloom").get.unionByName(bloomNew))))))
+    else Commit(append = Map("seen_bloom" -> store.stage("seen_bloom", bloomNew)))
+  }
 
   /** ---- dedup vs seen: Bloom prefilter (D3) + exact anti-join (J2) over
     * the bucketed seen scan (the huge, append-only side arrives
@@ -730,28 +755,29 @@ final class EpochDriver(
     } else Commit(append = Map("seen" -> slice))
   }
 
-  /** ---- frontier update: the seen set's Bloom segments and the
-    * frontier delta, committed as one of three shapes:
+  /** Whether `epoch` is a major fold: it rewrites the frontier base and
+    * folds the Bloom log.
+    */
+  private def majorFold(epoch: Long): Boolean =
+    compactFrontierEvery > 0 && epoch % compactFrontierEvery == 0
+
+  /** ---- frontier update: the frontier delta, committed as one of three
+    * shapes:
     *  - PLAIN: append the delta (zero rows in an all-empty epoch);
     *  - MINOR fold: resolve the delta LOG into one run and refresh the head;
     *  - MAJOR fold: rewrite the base, archive its terminals, rebuild the
-    *    head, fold the Bloom log, drop the delta log.
-    * Bloom is append-only: each epoch contributes only its fresh URLs,
-    * and readers OR-merge segments.
+    *    head, drop the delta log.
     * Cumulative fold-cost counters (bytes written by major base rewrites
     * and by minor delta resolves) carry forward: the evidence that minor
     * folds let the major cadence stretch is their RATIO in a CLI A/B, read
     * straight out of the final manifest.
     *
-    * The Bloom write, and in a minor fold the head refresh, are branches
-    * of their own beside the delta or base write; only a major fold's head
-    * waits, for the base it is cut from.
+    * In a minor fold the head refresh is a branch of its own beside the
+    * delta write; a major fold's head waits for the base it is cut from.
     */
   private def frontierUpdate(c: Ctx, cut: Long, transitions: DataFrame,
       fresh: DataFrame, deltaAll: Option[DataFrame], deltaRows: Long): Commit = {
     val (m, epoch) = (c.m, c.epoch)
-    val bloomNew = Bloom.buildSegments(fresh.select("canon_url"),
-      "canon_url", bloomSegments, bloomBitsPerSegment)
     // deltas are plain parquet (state as a data column): a fold resolves
     // the log by key, and no delta read prunes by state
     val deltaDf = transitions.unionByName(fresh)
@@ -776,13 +802,7 @@ final class EpochDriver(
     // run would rewrite identical bytes)
     val minorFold = compactDeltaEvery > 0 && epoch % compactDeltaEvery == 0 &&
       (deltaRows > 0 || m.tables.get("frontier_delta").exists(_.size > 1))
-    if (compactFrontierEvery > 0 && epoch % compactFrontierEvery == 0) {
-      // the Bloom blob log folds here too: OR-merge every appended
-      // (epoch, segment) row plus this epoch's into one row per segment,
-      // so the per-epoch filter read merges O(segments + R) blobs, not
-      // O(epochs × segments) — OR is associative, so bit-identical
-      val bloomFolded = c.fork("bloom-fold")(store.stage("seen_bloom",
-        Bloom.foldSegments(store.readTable(m, "seen_bloom").get.unionByName(bloomNew))))
+    if (majorFold(epoch)) {
       // stage the fold once (state-partitioned, the dir the commit
       // names), then derive the HEAD from the written bytes — the
       // top-(R+1)*cut rows per host, the only rows the next R epochs of
@@ -801,13 +821,11 @@ final class EpochDriver(
       val slice = if (!scheduleFromHead) None else Some((Sched.headSlice(
         store.read(base).filter(col("state") === "pending"), meta.k), meta))
       val head = headCommit(slice, None)
-      Commit(replace = Map("seen_bloom" -> Seq(bloomFolded.get),
-          "frontier_base" -> Seq(base)),
+      Commit(replace = Map("frontier_base" -> Seq(base)),
         append = archived,
         counters = foldBytes + ("fold_base_bytes" -> baseBytes),
         drop = Set("frontier_delta")) ++ head
     } else if (minorFold) {
-      val bloomAppend = c.fork("bloom-append")(store.stage("seen_bloom", bloomNew))
       // ---- MINOR fold: resolve the delta LOG into one run (latest row
       // per key — view-identical, the same resolution the major fold
       // would apply). Touches O(delta window) bytes; the base is NEVER
@@ -848,13 +866,11 @@ final class EpochDriver(
         FrontierLog.resolve(allDelta).repartition(filesFor(deltaRowsBound)))
       val deltaBytes = m.counters.getOrElse("fold_delta_bytes", 0L) + run.bytes
       Commit(replace = Map("frontier_delta" -> Seq(run)),
-        append = Map("seen_bloom" -> bloomAppend.get),
         counters = foldBytes + ("fold_delta_bytes" -> deltaBytes) +
           ("delta_rows" -> deltaRowsBound)) ++ head.get
     } else {
-      val bloomAppend = c.fork("bloom-append")(store.stage("seen_bloom", bloomNew))
       val delta = store.stage("frontier_delta", deltaDf)
-      Commit(append = Map("seen_bloom" -> bloomAppend.get, "frontier_delta" -> delta),
+      Commit(append = Map("frontier_delta" -> delta),
         counters = foldBytes + ("delta_rows" -> deltaRowsBound)) ++
         headCommit(None, standing)
     }

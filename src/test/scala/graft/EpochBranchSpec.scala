@@ -129,7 +129,8 @@ class EpochBranchSpec extends SparkSpecBase {
     // the branch layers' jobs are among them, in both epochs
     Seq(a, b).foreach { js =>
       Seq("EpochDriver.bloomFilter", "EpochDriver.outcomes", "EpochDriver.nearDup",
-          "EpochDriver.media", "EpochDriver.frontierUpdate", "RecordSink").foreach { l =>
+          "EpochDriver.media", "EpochDriver.bloomUpdate", "EpochDriver.frontierUpdate",
+          "RecordSink").foreach { l =>
         assert(js.exists(_.sites.exists(_.contains(l))), s"no tagged $l job")
       }
     }

@@ -30,12 +30,12 @@ def build(root: Path) -> None:
         sys.exit(f"ab_pairs: build failed in {root}:\n{res.stderr[-2000:]}")
 
 
-def run_one(root: Path, workload: str, seed: int, seconds: int):
-    """One untraced run: its last stdout line parsed, or None if it did
-    not finish."""
+def run_one(root: Path, workload: str, seed: int):
+    """One untraced run, as long as the benchmark sets: its last stdout
+    line parsed, or None if it did not finish."""
     res = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--trace", "0"],
         cwd=root, capture_output=True, text=True)
     lines = res.stdout.strip().splitlines()
     if res.returncode != 0 or not lines:
@@ -55,7 +55,6 @@ def main() -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=42)
-    ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--out", type=Path)
     args = ap.parse_args()
 
@@ -71,7 +70,7 @@ def main() -> int:
         order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
         pair = {}
         for side in order:
-            r = run_one(sides[side], args.workload, seed, args.seconds)
+            r = run_one(sides[side], args.workload, seed)
             if r is None:
                 bad.append(f"{side} seed {seed}: did not finish")
             elif not r["correct"] or r["failed"]:

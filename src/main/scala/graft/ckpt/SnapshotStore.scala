@@ -5,8 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.{FileContext, Options, Path => HPath}
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
@@ -19,17 +18,16 @@ import org.apache.spark.sql.types._
   * implemented directly — Parquet data files + JSON manifests committed by
   * atomic rename; a real Iceberg catalog can slot in behind the same trait).
   *
-  * Manifest I/O goes through Hadoop FileContext and FileSystem, so the
-  * store works on any filesystem with atomic rename (local, HDFS): the
-  * commit point, the LATEST rename, is FileContext's atomic OVERWRITE
-  * rename, and every other rename uses FileSystem's cheaper one. For
-  * object stores without atomic rename (S3) an Iceberg/metastore catalog
-  * would take over the commit, as noted above.
+  * All I/O goes through Hadoop FileSystem, so the store works on any
+  * filesystem with an atomic rename that refuses an existing target (local,
+  * HDFS): that rename is the commit point, as in Iceberg's file-system
+  * tables. For object stores without atomic rename (S3) an
+  * Iceberg/metastore catalog would take over the commit, as noted above.
   *
   * Layout:
   * {{{
-  *   root/manifest/v<N>.json     // immutable snapshot manifest
-  *   root/manifest/LATEST        // current version number (atomic rename)
+  *   root/manifest/v<N>.json     // immutable snapshot manifest; the newest
+  *                               //   one is the store's current snapshot
   *   root/data/<table>/v<N>/     // parquet staged for snapshot N
   *   root/data/seen/v<N>/        // snapshot N's seen slice, at most one
   *                               //   file per bucket of the manifest's
@@ -38,36 +36,48 @@ import org.apache.spark.sql.types._
   * }}}
   *
   * Manifest (`v<N>.json`): `version`, `parent`, `epoch`, `seen_buckets`,
-  * `tables` (table → its data dirs), `schemas` (table → the schema its
-  * files carry, as compact `StructType.json`) and `counters`. Readers take
-  * every table's schema from the manifest, so a read lists its dirs on the
-  * driver and runs no Spark job, and a zero-row or file-less dir reads
-  * back as an empty table. A manifest without `schemas` refuses to open.
+  * `tables` (table → its data dirs, relative to the store root, so a copied
+  * store reads its own files), `schemas` (table → the schema its files
+  * carry, as compact `StructType.json`) and `counters`. Readers take every
+  * table's schema from the manifest, so a read lists its dirs on the driver
+  * and runs no Spark job, and a zero-row or file-less dir reads back as an
+  * empty table. A manifest without `schemas` refuses to open. In memory,
+  * [[Manifest.tables]] holds the dirs resolved against the root.
   *
   * Commit protocol (all-or-nothing, resume-exact — SURVEY §7.5):
   *  1. [[stage]] each table's parquet once under data/<table>/v<N>/; the
   *     write itself reports its schema, rows and bytes
   *  2. [[commit]] the staged entries: the new table → dirs and table →
-  *     schema maps (a staged schema must equal the committed one) go to a
-  *     temp file, hsync, rename to v<N>.json (over a stale one a crashed
-  *     attempt left)
-  *  3. write + rename LATEST pointing at N
-  * A crash before (3) leaves LATEST at the previous snapshot; orphan data
-  * dirs are ignored because readers only follow manifest-referenced paths,
-  * and the re-run stages into the same dirs.
+  *     schema maps (a staged schema must equal the committed one) go to
+  *     v<N>.json.tmp, hsync, and a rename to v<N>.json that refuses an
+  *     existing target — the commit point. A commit whose version another
+  *     commit already took fails and leaves that manifest untouched.
+  * A crash before the rename leaves the previous snapshot current; orphan
+  * data dirs and a leftover v<N>.json.tmp are ignored because readers only
+  * follow manifest-referenced paths, and the re-run stages into the same
+  * dirs and overwrites the temp file.
+  *
+  * Finding the current snapshot: the store lists manifest/ once, at
+  * construction, for the newest `v<N>.json`; after that [[latestVersion]]
+  * probes `v<N+1>.json` forward, so an instance opened before later commits
+  * (by itself or another instance on the same root) sees them, and
+  * [[latest]] parses a manifest only when the probe finds a newer one.
   */
 final class SnapshotStore(rootDir: String, spark: SparkSession) {
-  import SnapshotStore.{SeenSchema, Staged}
+  import SnapshotStore.{ManifestName, SeenSchema, Staged}
   private val mapper = new ObjectMapper
   private val root = new HPath(rootDir)
-  private val fc = FileContext.getFileContext(
-    root.toUri, spark.sparkContext.hadoopConfiguration)
-  // renames go through FileSystem, not FileContext: on the local
-  // filesystem FileContext's rename stats both paths through a `stat`
-  // subprocess (~20 ms a file against ~0.1 ms)
+  private val rootPrefix = root.toString + "/"
   private val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
   private val manifestDir = new HPath(root, "manifest")
-  fc.mkdir(manifestDir, FsPermission.getDirDefault, true)
+  fs.mkdirs(manifestDir)
+
+  // the newest committed version this instance has seen (-1: none), and
+  // its manifest once parsed; guarded by `this` (epoch branches stage
+  // concurrently)
+  private var newest = fs.listStatus(manifestDir).map(_.getPath.getName)
+    .collect { case ManifestName(v) => v.toLong }.maxOption.getOrElse(-1L)
+  private var parsed: Option[Manifest] = None
 
   /** One snapshot. `seenBuckets` is the seen table's hash bucket count:
     * fixed by the store's first commit and carried by every later one, so
@@ -83,20 +93,22 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
       schemas: Map[String, StructType],
       counters: Map[String, Long])
 
-  private def readString(p: HPath): String = {
-    val in = fc.open(p)
-    try new String(in.readAllBytes(), UTF_8) finally in.close()
+  private def manifestPath(v: Long) = new HPath(manifestDir, s"v$v.json")
+
+  /** The newest committed version: the last one seen, probed forward. */
+  def latestVersion(): Option[Long] = synchronized {
+    while (fs.exists(manifestPath(newest + 1))) newest += 1
+    Option.when(newest >= 0)(newest)
   }
 
-  def latestVersion(): Option[Long] = {
-    val f = new HPath(manifestDir, "LATEST")
-    if (fc.util.exists(f)) Some(readString(f).trim.toLong) else None
+  def latest(): Option[Manifest] = synchronized {
+    parsed = latestVersion().map(v => parsed.filter(_.version == v).getOrElse(readManifest(v)))
+    parsed
   }
-
-  def latest(): Option[Manifest] = latestVersion().map(readManifest)
 
   def readManifest(v: Long): Manifest = {
-    val node = mapper.readTree(readString(new HPath(manifestDir, s"v$v.json")))
+    // the parser closes the stream once it has read the tree or failed
+    val node = mapper.readTree(fs.open(manifestPath(v)))
     def field(key: String) = {
       val n = node.get(key)
       require(n != null, s"snapshot v$v has no $key: a store written " +
@@ -107,11 +119,18 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
       e.getKey -> e.getValue).toMap
     Manifest(node.get("version").asLong(), node.get("parent").asLong(),
       node.get("epoch").asLong(), field("seen_buckets").asInt(),
-      entries("tables").map { case (t, a) => t -> a.elements().asScala.map(_.asText()).toSeq },
+      entries("tables").map { case (t, a) =>
+        t -> a.elements().asScala.map(d => resolved(d.asText())).toSeq },
       entries("schemas").map { case (t, j) =>
         t -> DataType.fromJson(j.asText()).asInstanceOf[StructType] },
       entries("counters").map { case (k, x) => k -> x.asLong() })
   }
+
+  /** A manifest dir as read back: written relative to the root when under
+    * it, so resolved against the root when relative.
+    */
+  private def resolved(dir: String): String =
+    if (new HPath(dir).isAbsolute) dir else new HPath(root, dir).toString
 
   /** `table` as of manifest `m`, read with its recorded schema: the dirs
     * are listed on the driver, and no Spark job runs.
@@ -165,20 +184,20 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
   def committed(m: Manifest, table: String): Seq[Staged] =
     m.tables(table).map(Staged(_, m.schemas(table), 0L, 0L))
 
-  /** Commit a new snapshot. `replace` tables point only at the given
-    * entries; `append` tables carry the parent's dirs forward plus the
-    * staged one (metrics / fetch lineage accumulate this way without
-    * rewriting history); `drop` removes a table from the manifest entirely
-    * (a fold drops the delta log it resolved). Parent tables not named
-    * carry forward unchanged — a commit pays I/O only for what it touches.
-    * Every entry's schema must equal the table's committed schema: the
-    * manifest records one schema per table, and readers apply it to all of
-    * the table's dirs.
+  /** Commit a new snapshot on top of `parent` (by default the latest).
+    * `replace` tables point only at the given entries; `append` tables
+    * carry the parent's dirs forward plus the staged one (fetch lineage
+    * accumulates this way without rewriting history); `drop` removes a
+    * table from the manifest entirely (a fold drops the delta log it
+    * resolved). Parent tables not named carry forward unchanged — a commit
+    * pays I/O only for what it touches. Every entry's schema must equal the
+    * table's committed schema: the manifest records one schema per table,
+    * and readers apply it to all of the table's dirs. Fails, committing
+    * nothing, if a snapshot on top of `parent` already exists.
     */
   def commit(epoch: Long, replace: Map[String, Seq[Staged]],
       append: Map[String, Staged], counters: Map[String, Long],
-      drop: Set[String] = Set.empty): Manifest = {
-    val parent = latest()
+      drop: Set[String] = Set.empty, parent: Option[Manifest] = latest()): Manifest = {
     val v = parent.map(_.version + 1).getOrElse(0L)
     val prev = parent.fold(Map.empty[String, Seq[String]])(_.tables)
     val prevSchemas = parent.fold(Map.empty[String, StructType])(_.schemas)
@@ -202,24 +221,17 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     node.put("seen_buckets", m.seenBuckets)
     val tn = node.putObject("tables")
     m.tables.foreach { case (t, ps) =>
-      val a = tn.putArray(t); ps.foreach(a.add)
+      val a = tn.putArray(t); ps.foreach(p => a.add(p.stripPrefix(rootPrefix)))
     }
     val sn = node.putObject("schemas")
     m.schemas.foreach { case (t, s) => sn.put(t, s.json) }
     val cn = node.putObject("counters")
     m.counters.foreach { case (k, x) => cn.put(k, x) }
 
-    // a v<N>.json left by a crashed attempt is invisible (LATEST still
-    // names N-1); `rename` refuses an existing target, so it goes first
-    val vJson = new HPath(manifestDir, s"v$v.json")
-    val vTmp = syncedTemp(vJson,
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node))
-    fs.delete(vJson, false)
-    rename(vTmp, vJson)
-    // LATEST is the commit point: FileContext's atomic OVERWRITE rename
-    val latestPath = new HPath(manifestDir, "LATEST")
-    fc.rename(syncedTemp(latestPath, v.toString), latestPath,
-      Options.Rename.OVERWRITE)
+    // the commit point: `rename` refuses an existing v<N>.json
+    val vJson = manifestPath(v)
+    rename(syncedTemp(vJson,
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)), vJson)
     m
   }
 
@@ -301,12 +313,9 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
   // before the manifest commit, so the mutation is crash-safe — an aborted
   // attempt leaves only orphan staging dirs the re-run clobbers)
 
-  def pathExists(p: String): Boolean = fc.util.exists(new HPath(p))
+  def pathExists(p: String): Boolean = fs.exists(new HPath(p))
 
-  def deletePath(p: String): Unit = {
-    val hp = new HPath(p)
-    if (fc.util.exists(hp)) { fc.delete(hp, true); () }
-  }
+  def deletePath(p: String): Unit = { fs.delete(new HPath(p), true); () }
 
   /** Rename `src` to `dst`, creating `dst`'s parent. Fails if `dst` exists
     * (callers clobber their own staging target first) — never silently
@@ -314,8 +323,8 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     */
   def movePath(src: String, dst: String): Unit = {
     val d = new HPath(dst)
-    fc.mkdir(d.getParent, FsPermission.getDirDefault, true)
-    fc.rename(new HPath(src), d)
+    fs.mkdirs(d.getParent)
+    rename(new HPath(src), d)
   }
 
   /** File-level merge-move: rename every data file directly under `srcDir`
@@ -329,10 +338,10 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     */
   def moveFilesInto(srcDir: String, dstDir: String, prefix: String): Int = {
     val src = new HPath(srcDir)
-    if (!fc.util.exists(src)) return 0
+    if (!fs.exists(src)) return 0
     val dst = new HPath(dstDir)
-    fc.mkdir(dst, FsPermission.getDirDefault, true)
-    val files = fc.util.listStatus(src).filter(st => st.isFile &&
+    fs.mkdirs(dst)
+    val files = fs.listStatus(src).filter(st => st.isFile &&
       !st.getPath.getName.startsWith("_") &&
       !st.getPath.getName.startsWith("."))
     files.foreach(st =>
@@ -341,21 +350,21 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
   }
 
   /** Iceberg expire-snapshots analog: physically delete versioned data
-    * directories (`data/<table>/v<K>`) that the LATEST manifest no longer
+    * directories (`data/<table>/v<K>`) that the latest manifest no longer
     * references. Without this, every `replace` commit (frontier compaction
     * replaces `frontier_base`) and every `drop` (the folded
     * `frontier_delta` log) strands its superseded directories on disk
     * forever — at the north rule's scale one full frontier copy per
     * compaction cycle. Safety:
-    *  - only dirs with version <= LATEST are candidates, so a staging dir
-    *    the in-flight epoch pre-wrote at version LATEST+1 (see
+    *  - only dirs with version <= the latest are candidates, so a staging
+    *    dir the in-flight epoch pre-wrote at the next version (see
     *    [[stagingDir]]) is never touched;
     *  - matching is by (table, vN) path suffix, immune to
     *    relative-vs-qualified path spelling differences between manifest
     *    strings and filesystem listings;
     *  - the store is single-writer and expire runs between epochs, so no
     *    live job holds lineage over an expired dir.
-    * After expiry, manifests older than LATEST still exist but may
+    * After expiry, manifests older than the latest still exist but may
     * reference deleted data — time travel to expired versions is gone,
     * exactly as with Iceberg's expire_snapshots. Returns the number of
     * directories deleted.
@@ -367,15 +376,15 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
         val hp = new HPath(p); (hp.getParent.getName, hp.getName)
       }.toSet
       val dataDir = new HPath(root, "data")
-      if (!fc.util.exists(dataDir)) return 0L
+      if (!fs.exists(dataDir)) return 0L
       var deleted = 0L
-      fc.util.listStatus(dataDir).filter(_.isDirectory).foreach { t =>
-        fc.util.listStatus(t.getPath).filter(_.isDirectory).foreach { vd =>
+      fs.listStatus(dataDir).filter(_.isDirectory).foreach { t =>
+        fs.listStatus(t.getPath).filter(_.isDirectory).foreach { vd =>
           val name = vd.getPath.getName
           if (name.length > 1 && name.head == 'v' && name.tail.forall(_.isDigit)
               && name.tail.toLong <= m.version
               && !referenced.contains((t.getPath.getName, name))) {
-            fc.delete(vd.getPath, true)
+            fs.delete(vd.getPath, true)
             deleted += 1
           }
         }
@@ -391,8 +400,6 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
     */
   private def syncedTemp(target: HPath, content: String): HPath = {
     val tmp = new HPath(target.getParent, target.getName + ".tmp")
-    // FileSystem, not FileContext: FileContext.create sets the file mode,
-    // which on the local filesystem without native code forks a `chmod`
     val out = fs.create(tmp, true)
     try {
       out.write(content.getBytes(UTF_8))
@@ -412,6 +419,7 @@ final class SnapshotStore(rootDir: String, spark: SparkSession) {
 }
 
 object SnapshotStore {
+  private val ManifestName = "v(\\d+)\\.json".r
   private val SeenSchema = StructType(Seq(StructField("canon_url", StringType)))
 
   /** One table write for a commit: its dir, the schema its files carry,

@@ -18,8 +18,8 @@ import graft.operators.{Bloom, Extract, NearDup, Sched, Seen, SegmentedBloom}
   * the pending frontier per host under the virtual-time politeness budget,
   * fetches the batch through the partition-local simulator, extracts +
   * canonicalizes outbound URLs, drops seen ones (Bloom prefilter + exact
-  * anti-join), and commits frontier/seen/lineage/metrics as one atomic
-  * snapshot. Every epoch is resumable: state lives only in the snapshot
+  * anti-join), and commits frontier/seen/lineage and the epoch's counters
+  * as one atomic snapshot. Every epoch is resumable: state lives only in the snapshot
   * store.
   *
   * Within an epoch, the layer functions — robots in effect, schedule,
@@ -28,8 +28,9 @@ import graft.operators.{Bloom, Extract, NearDup, Sched, Seen, SegmentedBloom}
   * it depends on and returns its outputs plus a [[Commit]] fragment, and
   * the layers that do not depend on each other run as concurrent Spark
   * jobs from branch threads of that epoch. Every branch joins before the
-  * ONE epoch commit, whose fragments merge in a fixed order; at most one
-  * more (the append-root swap, see [[consolidate]]) follows it.
+  * ONE epoch commit, whose fragments merge in a fixed order; the
+  * append-root consolidation ([[consolidate]]) is one more fragment of it,
+  * so every epoch writes exactly one manifest.
   *
   * Per-epoch I/O is O(batch), never O(crawl): the seen set appends one
   * bucketed slice + Bloom segment per epoch (log-compacted by
@@ -56,10 +57,6 @@ final class EpochDriver(
     seed: Long,
     nHosts: Int,
     epochBudgetMs: Long = 10000L,
-    saltBuckets: Int = 64,
-    maxRetries: Int = 3,
-    bloomSegments: Int = 8,
-    bloomBitsPerSegment: Int = 1 << 16,
     useBloom: Boolean = true,
     // fold the seen table's slices every N epochs (0 = off); purely a
     // file-count/scan-cost optimization — set semantics are unchanged, so
@@ -87,12 +84,12 @@ final class EpochDriver(
     // commits one root, and an unbounded list grows the read plan and
     // every manifest linearly with crawl AGE — corpus_sim is read ON THE
     // EPOCH PATH (the banded probe), so its listing cost recurs every
-    // epoch. When a table's root count passes the cap, the newer roots'
-    // files are MERGE-MOVED (file renames, zero rewrite — these tables
-    // are immutable appends, nothing ever needs resolution) into the
-    // PERMANENT oldest root and a swap commit retires them — see
-    // consolidate for why the target must be the oldest (files move
-    // at most once). Pure layout knob (view-identical,
+    // epoch. When an epoch appends to a table whose root count has
+    // reached the cap, the newer roots' files are MERGE-MOVED (file
+    // renames, zero rewrite — these tables are immutable appends, nothing
+    // ever needs resolution) into the PERMANENT oldest root, and the
+    // epoch commit retires them — see consolidate for why the target must
+    // be the oldest (files move at most once). Pure layout knob (view-identical,
     // FrontierLogSpec/EngineSpec), so not resume-guarded
     archiveMaxRoots: Int = 8,
     // near-dup each epoch's fetched documents against the persisted corpus
@@ -139,7 +136,7 @@ final class EpochDriver(
     sinkBridge: Option[String] = None) {
 
   import spark.implicits._
-  import EpochDriver.{Branch, Commit, HeadMeta}
+  import EpochDriver._
 
   // the bridge POST rides the sink's flush path: a bridge URL without a
   // sink dir would silently emit NOTHING over the wire — fail loudly at
@@ -207,10 +204,10 @@ final class EpochDriver(
     "cfg_seed" -> seed,
     "cfg_n_hosts" -> nHosts.toLong,
     "cfg_epoch_budget_ms" -> epochBudgetMs,
-    "cfg_salt_buckets" -> saltBuckets.toLong,
-    "cfg_max_retries" -> maxRetries.toLong,
-    "cfg_bloom_segments" -> bloomSegments.toLong,
-    "cfg_bloom_bits" -> bloomBitsPerSegment.toLong,
+    "cfg_salt_buckets" -> SaltBuckets.toLong,
+    "cfg_max_retries" -> MaxRetries.toLong,
+    "cfg_bloom_segments" -> BloomSegments.toLong,
+    "cfg_bloom_bits" -> BloomBitsPerSegment.toLong,
     "cfg_bloom_hash_version" -> Bloom.HashVersion,
     "cfg_neardup" -> (if (nearDupDocs) 1L else 0L),
     "cfg_media" -> (if (mediaDocs) 1L else 0L),
@@ -291,7 +288,7 @@ final class EpochDriver(
     val all = head ++ Commit(
       replace = Map("frontier_base" -> Seq(base), "robots" -> Seq(store.stage("robots", robots))),
       append = Map("seen" -> seenSlice, "seen_bloom" -> store.stage("seen_bloom",
-        Bloom.buildSegments(seen, "canon_url", bloomSegments, bloomBitsPerSegment))),
+        Bloom.buildSegments(seen, "canon_url", BloomSegments, BloomBitsPerSegment))),
       counters = cfg + ("seeds" -> base.rows) + ("robots_floor_ms" -> floorMs))
     store.commit(0L, all.replace, all.append, all.counters)
     ()
@@ -375,11 +372,12 @@ final class EpochDriver(
     val c = new Ctx(m)
     val staged = stagedRobots.get()
     try {
-      val (all, metrics) = c.join(epochCommit(c, staged))
-      // ---- the ONE epoch commit: every layer's fragment, all-or-nothing
-      val mEpoch = store.commit(c.epoch, all.replace, all.append, all.counters,
-        all.drop)
-      consolidate(mEpoch)
+      val (layers, metrics) = c.join(epochCommit(c, staged))
+      // ---- the ONE epoch commit: every layer's fragment, all-or-nothing,
+      // on top of the manifest the epoch read
+      val all = consolidate(c.m, layers)
+      store.commit(c.epoch, all.replace, all.append, all.counters, all.drop,
+        parent = Some(c.m))
       // the staged robots rows are durable in this epoch's snapshot now; a
       // failed commit leaves them staged so the retry still applies them.
       // Atomic compare-and-clear: an update staged WHILE this epoch ran
@@ -398,12 +396,11 @@ final class EpochDriver(
     *  - from the start: the Bloom segment merge and broadcast;
     *  - once fetch is staged: near-dup and media, the longest branches;
     *  - once the seen slice is written (the write runs dedup): the
-    *    outcomes tally, the Bloom log write, the frontier update, the sink
-    *    and the metrics row, while the seen fold runs on the calling
-    *    thread.
+    *    outcomes tally, the Bloom log write, the frontier update and the
+    *    sink, while the seen fold runs on the calling thread.
     * The scheduler is FIFO: a job waits for the task slots of every job
-    * submitted before it. So the tally, which only the metrics row needs,
-    * is forked after the slice rather than beside extract, whose jobs it
+    * submitted before it. So the tally, which only the counters need, is
+    * forked after the slice rather than beside extract, whose jobs it
     * would delay.
     * Counts come from the writes (the seen slice's rows are the epoch's
     * emitted count), so no branch waits on a count job. Returns the epoch
@@ -433,24 +430,17 @@ final class EpochDriver(
     val update = c.fork("frontier")(frontierUpdate(c, cut, transitions, fresh,
       deltaAll, fetchResult.rows + nEmitted))
     val sunk = c.fork("sink")(sink(c, fresh, nEmitted))
-    val counters = c.fork("metrics") {
-      val (nFetched, nErrors) = tally.get
-      val counters = Map(
-        "epoch" -> c.epoch,
-        "fetched" -> nFetched,
-        "errors" -> nErrors,
-        "discovered" -> nDiscovered,
-        "deduped" -> (nDiscovered - nEmitted),
-        "emitted" -> nEmitted)
-      val row = Seq((c.epoch, nFetched, nErrors, nDiscovered,
-        nDiscovered - nEmitted, nEmitted))
-        .toDF("epoch", "fetched", "errors", "discovered", "deduped", "emitted")
-      (counters, store.stage("metrics", row))
-    }
     val seen = seenUpdate(c, slice)
     sunk.get
-    val (epochCounters, metricsRow) = counters.get
-    (Commit(append = Map("metrics" -> metricsRow, "fetch_result" -> fetchResult),
+    val (nFetched, nErrors) = tally.get
+    val epochCounters = Map(
+      "epoch" -> c.epoch,
+      "fetched" -> nFetched,
+      "errors" -> nErrors,
+      "discovered" -> nDiscovered,
+      "deduped" -> (nDiscovered - nEmitted),
+      "emitted" -> nEmitted)
+    (Commit(append = Map("fetch_result" -> fetchResult),
         counters = cfg ++ epochCounters) ++ robotsCommit ++ nd.get ++ md.get ++
       seen ++ bloomLog.get ++ update.get,
       epochCounters ++ nd.get.counters ++ md.get.counters)
@@ -528,7 +518,7 @@ final class EpochDriver(
     * staged write, the fetch table and its ok documents.
     */
   private def fetch(c: Ctx, ranked: DataFrame): (Staged, DataFrame, DataFrame) = {
-    val batch = Sched.fetchBatch(ranked, c.epoch, saltBuckets,
+    val batch = Sched.fetchBatch(ranked, c.epoch, SaltBuckets,
       spark.sparkContext.defaultParallelism)
     val staged = store.stage("fetch_result", FetchSim.run(batch, seed, nHosts).toDF())
     val fetched = store.read(staged)
@@ -558,7 +548,7 @@ final class EpochDriver(
   private def bloomFilter(c: Ctx): Option[Broadcast[SegmentedBloom]] =
     if (!useBloom) None
     else store.readTable(c.m, "seen_bloom").map(df => c.keep(Seen.broadcastSegments(
-      spark, Bloom.mergedSegments(df, bloomSegments, bloomBitsPerSegment))))
+      spark, Bloom.mergedSegments(df, BloomSegments, BloomBitsPerSegment))))
 
   /** ---- the seen set's Bloom log: this epoch's fresh URLs as one blob per
     * segment, appended (Bloom is append-only, and readers OR-merge
@@ -569,7 +559,7 @@ final class EpochDriver(
     */
   private def bloomUpdate(c: Ctx, fresh: DataFrame): Commit = {
     val bloomNew = Bloom.buildSegments(fresh.select("canon_url"),
-      "canon_url", bloomSegments, bloomBitsPerSegment)
+      "canon_url", BloomSegments, BloomBitsPerSegment)
     if (majorFold(c.epoch)) Commit(replace = Map("seen_bloom" -> Seq(store.stage(
       "seen_bloom", Bloom.foldSegments(
         store.readTable(c.m, "seen_bloom").get.unionByName(bloomNew))))))
@@ -592,7 +582,7 @@ final class EpochDriver(
       .select(EpochDriver.RowCols.map(col): _*))
 
   /** Frontier transitions of the scheduled rows (fetched ok → fetched;
-    * error → retry w/ score decay, dead at maxRetries — T5/T7); everything
+    * error → retry w/ score decay, dead at MaxRetries — T5/T7); everything
     * else rests untouched in base/older deltas. The inner join is
     * batch-sized on both sides; no job runs here.
     */
@@ -602,11 +592,11 @@ final class EpochDriver(
       .join(outcome, Seq("canon_url"))
       .withColumn("state",
         when(col("_status") === "ok", lit("fetched"))
-          .when(col("_status") === "error" && col("retry_count") + 1 >= maxRetries,
+          .when(col("_status") === "error" && col("retry_count") + 1 >= MaxRetries,
             lit("failed"))
           .otherwise(col("state")))
       .withColumn("score",
-        when(col("_status") === "error" && col("retry_count") + 1 < maxRetries,
+        when(col("_status") === "error" && col("retry_count") + 1 < MaxRetries,
           col("score") * 0.5).otherwise(col("score")))
       .withColumn("retry_count",
         when(col("_status") === "error", col("retry_count") + 1)
@@ -899,12 +889,15 @@ final class EpochDriver(
     else Map("frontier_archive" -> Staged(arch, base.schema, 0L, 0L))
   }
 
-  /** ---- append-root consolidation: ONE pass over every append-rooted
-    * table (frontier_archive with its state= subdirs, corpus_sim,
-    * neardup_pairs, media_features), at most ONE swap commit. Over the
-    * cap, a table's newer roots' files are merge-moved (renames, zero
-    * rewrite) into its OLDEST root and the swap points the table at that
-    * one root; emptied roots leave the manifest at the swap and expire
+  /** ---- append-root consolidation, a fragment of the epoch commit. For
+    * every append-rooted table (frontier_archive with its state= subdirs,
+    * corpus_sim, neardup_pairs, media_features) that this epoch appends to
+    * and whose parent `m` already holds `archiveMaxRoots` roots, the
+    * parent's newer roots' files are merge-moved (renames, zero rewrite)
+    * into its OLDEST root, and the commit names that root plus this
+    * epoch's dir in place of the append. So no manifest names more than
+    * max(cap, 2) roots of a table, and the epoch still writes one
+    * manifest. Emptied roots leave the manifest with the commit and expire
     * with the next sweep.
     *
     * The target being the PERMANENT head root makes every file move at
@@ -917,27 +910,27 @@ final class EpochDriver(
     * source roots within one pass; across passes the part files'
     * write-job UUIDs already make names unique.
     *
-    * Crash-safe by ordering: the epoch commit `mEpoch` references the old
-    * roots AND the head, renames keep each file in exactly one referenced
-    * location at every instant (multi-root reads stay complete and
-    * duplicate-free), and a crash mid-move leaves a still-over-cap list
-    * the next epoch's pass converges.
+    * Crash-safe by ordering: the moves run once every branch has ended
+    * (near-dup's probe lists corpus_sim's dirs) and before the commit, and
+    * they move only committed files between roots the parent references,
+    * so every file is in exactly one referenced place at every instant.
+    * If the commit never lands, the parent still reads every row exactly
+    * once (a drained root reads as an empty dir) and the re-run moves
+    * whatever is left; if it lands, the head root it names holds every
+    * moved file.
     */
-  private def consolidate(mEpoch: store.Manifest): Unit = {
-    val swaps = EpochDriver.AppendRootTables.flatMap { case (t, subdirs) =>
-      val roots = mEpoch.tables.getOrElse(t, Seq.empty)
-      if (roots.size <= archiveMaxRoots) None
-      else {
+  private def consolidate(m: store.Manifest, epoch: Commit): Commit = {
+    val merged = EpochDriver.AppendRootTables.collect {
+      case (t, subdirs) if epoch.append.contains(t) &&
+          m.tables.get(t).exists(_.size >= archiveMaxRoots) =>
+        val roots = m.tables(t)
         roots.tail.zipWithIndex.foreach { case (root, i) =>
           subdirs.foreach(sub => store.moveFilesInto(s"$root$sub",
             s"${roots.head}$sub", s"r$i-"))
         }
-        Some(t -> store.committed(mEpoch, t).take(1))
-      }
-    }
-    if (swaps.nonEmpty)
-      store.commit(mEpoch.epoch, replace = swaps.toMap, append = Map.empty,
-        counters = mEpoch.counters)
+        t -> (store.committed(m, t).take(1) :+ epoch.append(t))
+    }.toMap
+    epoch.copy(append = epoch.append -- merged.keys) ++ Commit(replace = merged)
   }
 
   /** Run epochs until `maxEpochs` or an empty batch (exhausted frontier). */
@@ -966,8 +959,8 @@ final class EpochDriver(
     // absorbing and a URL enters the frontier once), so the union needs no
     // resolve over the archive — the view stays O(live) in shuffle work.
     // NOTHING on the epoch path reads the archive; only this view does. A
-    // root a crashed consolidation pass drained before its swap commit
-    // reads as an empty dir
+    // root a consolidation drained before a commit that never landed reads
+    // as an empty dir
     val live = FrontierLog.resolve(frontierAll(m))
     store.readTable(m, "frontier_archive").fold(live)(live.unionByName(_))
       .drop("seq")
@@ -977,8 +970,14 @@ final class EpochDriver(
     store.latest().flatMap(m => store.readTable(m, "fetch_result"))
       .map(_.select("epoch", "partition_id", "canon_url", "host", "rank",
         "status", "n_spans", "n_urls_out"))
-  def metrics(): Option[DataFrame] =
-    store.latest().flatMap(m => store.readTable(m, "metrics"))
+  /** One row per committed epoch (from 1): that epoch's counters in the
+    * newest manifest committed for it.
+    */
+  def metrics(): Option[DataFrame] = store.latest().filter(_.epoch >= 1).map(last =>
+    Iterator.iterate(last)(m => store.readManifest(m.parent)).takeWhile(_.epoch >= 1)
+      .toSeq.distinctBy(_.epoch).map(_.counters).map(c => (c("epoch"), c("fetched"),
+        c("errors"), c("discovered"), c("deduped"), c("emitted")))
+      .toDF("epoch", "fetched", "errors", "discovered", "deduped", "emitted"))
   def docs(): Option[DataFrame] =
     store.latest().flatMap(m => store.readTable(m, "fetch_result"))
       .map(_.filter(col("status") === "ok")
@@ -986,16 +985,29 @@ final class EpochDriver(
 }
 
 object EpochDriver {
-  /** Version of the snapshot-store table layout: 5 = log-structured
+  /** Version of the snapshot-store table layout: 6 = log-structured
     * frontier (frontier_base + frontier_delta, FrontierLog) + single
     * fetch_result lineage table + the seen set as the manifest table
     * `seen`, hash-bucketed by the count its manifest records
     * (`seen_buckets`, the creating session's shuffle width) + every
-    * table's schema in the manifest (`schemas`). 4 recorded no schemas;
+    * table's schema in the manifest (`schemas`) + dirs named relative to
+    * the store root, the newest `v<N>.json` as the current snapshot, and
+    * no `metrics` table (its rows are the manifests' counters). 5 named
+    * dirs by absolute path behind a `LATEST` file; 4 recorded no schemas;
     * 3 used a fixed 32 buckets and no recorded count; 2 kept the seen set
     * in a catalog table. Resume refuses any other layout.
     */
-  val StoreLayoutVersion = 5L
+  val StoreLayoutVersion = 6L
+
+  /** Fixed engine geometry, recorded in every manifest (`cfg_*`) so a
+    * store written with other values refuses to resume: the fetch salt
+    * per host, the fetch attempts before a URL fails, and the Bloom log's
+    * segments and bits per segment.
+    */
+  private val SaltBuckets = 64
+  private val MaxRetries = 3
+  private val BloomSegments = 8
+  private val BloomBitsPerSegment = 1 << 16
 
   /** Seen dir count at which the per-cadence generational fold escalates
     * to a full fold. Bounds the per-epoch bucketed-scan overhead at

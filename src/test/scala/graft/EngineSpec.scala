@@ -154,7 +154,7 @@ class EngineSpec extends SparkSpecBase {
     assert(newDriver(dir).runEpoch()("epoch") == m.epoch + 1)
   }
 
-  test("a store of layout 2, 3 or 4, or without seen_buckets or schemas, cannot resume") {
+  test("a store of layout 2, 3, 4 or 5, or without seen_buckets or schemas, cannot resume") {
     val dir = tmpDir()
     val a = newDriver(dir)
     a.init(seeds)
@@ -162,8 +162,8 @@ class EngineSpec extends SparkSpecBase {
     val store = new SnapshotStore(dir, spark)
     val m = store.latest().get
     // 2 kept the seen set in a catalog table, 3 in a fixed 32 buckets, 4
-    // recorded no table schemas
-    Seq(2L, 3L, 4L).foreach { layout =>
+    // recorded no table schemas, 5 named dirs by absolute path
+    Seq(2L, 3L, 4L, 5L).foreach { layout =>
       store.commit(m.epoch, Map.empty, Map.empty,
         m.counters + ("cfg_store_layout" -> layout))
       val e = intercept[IllegalArgumentException](newDriver(dir).runEpoch())
@@ -435,17 +435,18 @@ class EngineSpec extends SparkSpecBase {
     assert(m2("epoch") == 2L)
   }
 
-  test("a commit over a stale v<N>.json from a crashed attempt succeeds and reads back") {
+  test("a commit replaces a crashed attempt's v<N>.json.tmp, never a v<N>.json") {
     import spark.implicits._
     val dir = tmpDir()
     val store = new SnapshotStore(dir, spark)
-    store.commit(0, Map("t" -> Seq(store.stage("t", Seq(1L).toDF("x")))), Map.empty,
-      Map("c" -> 0L))
-    // a crashed attempt got its manifest onto v1.json but never moved
-    // LATEST: the file is invisible, and the retry must replace it
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dir, "manifest", "v1.json"), "{stale")
-    assert(store.latest().get.version == 0L, "test premise: stale v1 invisible")
+    val m0 = store.commit(0, Map("t" -> Seq(store.stage("t", Seq(1L).toDF("x")))),
+      Map.empty, Map("c" -> 0L))
+    // a crashed attempt left garbage in v1's temp file and never renamed
+    // it: the file is invisible, and the retry must commit over it
+    val manifestDir = java.nio.file.Paths.get(dir, "manifest")
+    java.nio.file.Files.writeString(manifestDir.resolve("v1.json.tmp"), "{garbage")
+    assert(new SnapshotStore(dir, spark).latest().get.version == 0L,
+      "test premise: the temp file is invisible")
     val m = store.commit(1, Map("t" -> Seq(store.stage("t", Seq(2L).toDF("x")))),
       Map.empty, Map("c" -> 1L))
     val reader = new SnapshotStore(dir, spark)
@@ -454,6 +455,15 @@ class EngineSpec extends SparkSpecBase {
       ((m.version, m.parent, m.epoch, m.tables, m.counters)))
     assert(back.version == 1L && back.counters == Map("c" -> 1L))
     assert(reader.readTable(back, "t").get.as[Long].collect().toSeq == Seq(2L))
+    // a second commit on top of v0 finds v1.json taken: it fails and leaves
+    // the committed manifest byte-identical
+    val v1 = manifestDir.resolve("v1.json")
+    val committed = java.nio.file.Files.readAllBytes(v1)
+    intercept[java.io.IOException](
+      store.commit(1, Map.empty, Map.empty, Map("c" -> 9L), parent = Some(m0)))
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(v1), committed),
+      "a refused commit changed v1.json")
+    assert(new SnapshotStore(dir, spark).latest().get.counters == Map("c" -> 1L))
   }
 
   test("robots live in the store: a mid-crawl update takes effect next epoch and survives resume") {
@@ -682,13 +692,14 @@ class EngineSpec extends SparkSpecBase {
     (1 to epochs).foreach { e =>
       val ma = a.runEpoch(); val mb = b.runEpoch()
       assert(ma == mb, s"epoch $e counters diverged under the root cap")
-      // consolidation runs inside the epoch: the committed root list is
-      // back at one root whenever an append pushed it to two
+      // consolidation rides in the epoch commit: an append to a table at
+      // the cap commits its oldest root plus the new one, so no manifest
+      // names more than max(cap, 2) roots
       storeA.expireUnreferenced()
       val m = storeA.latest().get
       Seq("corpus_sim", "neardup_pairs").foreach { t =>
         val n = m.tables.getOrElse(t, Seq.empty).size
-        assert(n <= 1, s"epoch $e: $t holds $n roots under cap 1")
+        assert(n <= 2, s"epoch $e: $t holds $n roots under cap 1")
       }
     }
     val mA = storeA.latest().get; val mB = storeB.latest().get
@@ -725,28 +736,67 @@ class EngineSpec extends SparkSpecBase {
       "resume over a consolidated signature store diverged")
   }
 
-  test("a fold epoch with root consolidation writes at most two manifests") {
-    // one epoch commit, then ONE swap commit for every append-rooted table
-    // over the cap: with cap 1 and a major fold every 2 epochs, epoch 4's
-    // fold appends a second archive root while its signatures append a
-    // second corpus_sim root — both consolidate in the same pass
+  test("every epoch writes exactly one manifest") {
+    // cap 1 and a major fold every 2 epochs: from epoch 3 on, each epoch
+    // merge-moves corpus_sim's newer root into its oldest, and epoch 4's
+    // fold appends a second archive root — all inside the one epoch commit
     val dir = tmpDir(); val store = new SnapshotStore(dir, spark)
     val d = new EpochDriver(spark, store, seed, nHosts, epochBudgetMs = budget,
       compactFrontierEvery = 2, nearDupDocs = true, archiveMaxRoots = 1)
     d.init(seeds)
-    (1 to 3).foreach(_ => d.runEpoch())
-    val before = store.latestVersion().get
-    assert(d.runEpoch()("fetched") > 0, "test premise: epoch 4 fetched")
-    val after = store.latestVersion().get
-    assert(after - before <= 2,
-      s"fold epoch wrote ${after - before} manifests, want at most 2")
-    // premise: the epoch commit left both tables over the cap, and the
-    // one swap brought both back to one root
-    val epochCommit = store.readManifest(before + 1)
-    Seq("frontier_archive", "corpus_sim").foreach { t =>
-      assert(epochCommit.tables.getOrElse(t, Seq.empty).size == 2,
-        s"test premise: $t not over the cap after the epoch commit")
-      assert(store.latest().get.tables(t).size == 1, s"$t not consolidated")
+    (1 to 4).foreach { e =>
+      val before = store.latestVersion().get
+      assert(d.runEpoch()("fetched") > 0, s"test premise: epoch $e fetched")
+      val after = store.latestVersion().get
+      assert(after - before == 1, s"epoch $e wrote ${after - before} manifests")
+    }
+    // premise: epoch 4 consolidated corpus_sim (its parent's oldest root
+    // plus its own dir) and appended a second archive root
+    val m4 = store.latest().get
+    val m3 = store.readManifest(m4.parent)
+    assert(m3.tables("corpus_sim").size == 2, "test premise: no root to move")
+    assert(m4.tables("corpus_sim").head == m3.tables("corpus_sim").head &&
+      m4.tables("corpus_sim").size == 2 &&
+      m4.tables("corpus_sim").last.endsWith(s"corpus_sim/v${m4.version}"),
+      s"corpus_sim not consolidated: ${m4.tables("corpus_sim")}")
+    assert(dataFiles(m3.tables("corpus_sim").last).isEmpty,
+      "the moved root still holds data files")
+    assert(m4.tables("frontier_archive").size == 2,
+      "test premise: epoch 4's fold did not append an archive root")
+  }
+
+  test("a commit that fails after root consolidation's moves loses no row; the re-run equals a twin") {
+    def nd(s: SnapshotStore, cap: Int) = new EpochDriver(spark, s, seed,
+      nHosts, epochBudgetMs = budget, nearDupDocs = true, archiveMaxRoots = cap)
+    val dir = tmpDir(); val store = new SnapshotStore(dir, spark)
+    val twinStore = new SnapshotStore(tmpDir(), spark)
+    val (a, twin) = (nd(store, 1), nd(twinStore, 1000))
+    a.init(seeds); twin.init(seeds)
+    (1 to 2).foreach(e => assert(a.runEpoch() == twin.runEpoch(), s"epoch $e"))
+    val tables = Seq("corpus_sim", "neardup_pairs")
+    // every row as a sorted list, so a duplicate shows
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    val parent = store.latest().get
+    assert(parent.tables("corpus_sim").size == 2, "test premise: epoch 3 moves a root")
+    val before = tables.map(t => rows(store.readTable(parent, t).get))
+    // occupy epoch 3's manifest temp name: its commit fails after the moves
+    val tmp = java.nio.file.Paths.get(dir, "manifest", s"v${parent.version + 1}.json.tmp")
+    java.nio.file.Files.createDirectory(tmp)
+    intercept[java.io.IOException](a.runEpoch())
+    assert(store.latestVersion() == Some(parent.version), "a failed commit moved the store")
+    assert(dataFiles(parent.tables("corpus_sim").last).isEmpty,
+      "test premise: the moves ran before the commit")
+    tables.zip(before).foreach { case (t, b) =>
+      assert(rows(store.readTable(parent, t).get) == b, s"$t lost or duplicated rows")
+    }
+    java.nio.file.Files.delete(tmp)
+    val resumed = nd(new SnapshotStore(dir, spark), 1)
+    assert(resumed.runEpoch() == twin.runEpoch(), "the re-run differs from the twin")
+    val (mA, mB) = (store.latest().get, twinStore.latest().get)
+    tables.foreach { t =>
+      assert(rows(store.readTable(mA, t).get) == rows(twinStore.readTable(mB, t).get),
+        s"$t differs from the twin")
     }
   }
 
@@ -780,7 +830,7 @@ class EngineSpec extends SparkSpecBase {
     assert(mLast.counters("media_rows") == nExpected)
     assert(feats.select("doc_id", "offset").distinct().count() == nExpected,
       "duplicate (doc_id, offset) rows in media_features")
-    assert(mLast.tables("media_features").size <= 1,
+    assert(mLast.tables("media_features").size <= 2,
       "media_features roots not consolidated under cap 1")
     // REAL decode, pinned end-to-end: recompute sampled rows through
     // MediaFetchSim + the production decodeImage directly — dims, byte

@@ -69,7 +69,7 @@ class EpochBranchSpec extends SparkSpecBase {
           _.contains("bridge POST failed: HTTP 500"))), s"unexpected failure: $e")
       }
     }
-    assert(store.latestVersion() == before, "a failed epoch moved LATEST")
+    assert(store.latestVersion() == before, "a failed epoch committed a manifest")
     // branch layers ran beside the failing sink, and all of them ended
     // before runEpoch rethrew
     Seq("EpochDriver.nearDup", "EpochDriver.media", "RecordSink").foreach { l =>

@@ -272,9 +272,9 @@ class FrontierLogSpec extends SparkSpecBase {
       aStore.expireUnreferenced(); bStore.expireUnreferenced()
       val roots = aStore.latest().get.tables
         .getOrElse("frontier_archive", Seq.empty)
-      // a fold appends one root BEFORE consolidating, so cap+1 is the
-      // transient maximum ever committed; post-consolidation it is 1
-      assert(roots.size <= 3, s"epoch $e: ${roots.size} archive roots > cap+1")
+      // a fold that appends to a table at the cap commits its oldest root
+      // plus the new one: no manifest names more than max(cap, 2) roots
+      assert(roots.size <= 2, s"epoch $e: ${roots.size} archive roots > max(cap, 2)")
     }
     val aRoots = aStore.latest().get.tables("frontier_archive")
     val bRoots = bStore.latest().get.tables("frontier_archive")
@@ -313,8 +313,8 @@ class FrontierLogSpec extends SparkSpecBase {
       }
     }
 
-    // crash window: a consolidation pass drains source roots by rename
-    // BEFORE its swap commit — simulate dying exactly there by draining
+    // crash window: a consolidation drains source roots by rename BEFORE
+    // the epoch commit — simulate dying exactly there by draining
     // one referenced root into another referenced root with the manifest
     // untouched. The full-history view must skip the file-less root (a
     // per-root parquet read would fail schema inference), and the rows are

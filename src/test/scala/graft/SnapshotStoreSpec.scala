@@ -11,7 +11,8 @@ import graft.gen.SimWeb
 
 /** The manifest carries each table's schema: reads never infer it (no
   * Spark job runs to build a table), and a staged write counts its own
-  * rows (no job re-reads the output).
+  * rows (no job re-reads the output). Manifests name dirs relative to the
+  * store root, and an open store finds later commits by probing forward.
   */
 class SnapshotStoreSpec extends SparkSpecBase {
 
@@ -100,5 +101,52 @@ class SnapshotStoreSpec extends SparkSpecBase {
     val e = intercept[IllegalArgumentException](
       store.commit(1L, Map.empty, Map("t" -> other), Map.empty))
     assert(e.getMessage.contains("table t"), e.getMessage)
+  }
+
+  test("a store instance opened before later commits sees them") {
+    val dir = tmpDir()
+    val early = new SnapshotStore(dir, spark)
+    assert(early.latestVersion().isEmpty)
+    val writer = new SnapshotStore(dir, spark)
+    (0L to 2L).foreach(e => writer.commit(e, Map.empty, Map.empty, Map("c" -> e)))
+    assert(early.latestVersion().contains(2L))
+    assert(early.latest().get.counters == Map("c" -> 2L))
+    // a commit through the early instance lands on top, and the writer sees it
+    val m = early.commit(3L, Map.empty, Map.empty, Map("c" -> 3L))
+    assert(m.version == 3L && m.parent == 2L)
+    assert(writer.latest().get.counters == Map("c" -> 3L))
+  }
+
+  test("a store copied to another directory resumes there, equal to an uninterrupted twin") {
+    import java.nio.file.{Files, Path}
+    def driver(store: SnapshotStore) = new EpochDriver(spark, store, 42L, 10,
+      epochBudgetMs = 8000L, compactFrontierEvery = 2, compactSeenEvery = 2,
+      archiveMaxRoots = 1, nearDupDocs = true)
+    def tree(p: Path): Seq[Path] = {
+      val s = Files.walk(p)
+      try s.toArray.map(_.asInstanceOf[Path]).toSeq finally s.close()
+    }
+    val seeds = SimWeb.seedUrls(40, 10, 42L)
+    val twinStore = new SnapshotStore(tmpDir(), spark)
+    val twin = driver(twinStore)
+    twin.init(seeds)
+    val original = Path.of(tmpDir())
+    val d = driver(new SnapshotStore(original.toString, spark))
+    d.init(seeds)
+    (1 to 2).foreach(e => assert(d.runEpoch() == twin.runEpoch(), s"epoch $e"))
+    // a copy at a path of another length, then the original is gone
+    val copy = Path.of(tmpDir(), "copied-store")
+    tree(original).foreach(p => Files.copy(p, copy.resolve(original.relativize(p))))
+    tree(original).reverse.foreach(Files.delete)
+    val store = new SnapshotStore(copy.toString, spark)
+    val resumed = driver(store)
+    (3 to 4).foreach(e => assert(resumed.runEpoch() == twin.runEpoch(), s"epoch $e"))
+    val (m, mTwin) = (store.latest().get, twinStore.latest().get)
+    m.tables.values.flatten.foreach(p => assert(p.startsWith(copy.toString), p))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    assert(rows(resumed.seenSet()) == rows(twin.seenSet()))
+    assert(rows(resumed.frontier()) == rows(twin.frontier()))
+    assert(rows(store.readTable(m, "corpus_sim").get) ==
+      rows(twinStore.readTable(mTwin, "corpus_sim").get))
   }
 }

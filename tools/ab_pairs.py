@@ -10,10 +10,14 @@ to pair, so a slow spell of a shared box falls on both sides alike. Both
 checkouts are built before the first pair, so no pair pays for a build.
 
 For each end-to-end metric of the base's BENCHMARK.json it prints both
-medians, both sides' interquartile ranges, and how many pairs each side
-won (by the metric's `better` direction; ties count for neither). It names
-every run that was incorrect, had a failed epoch or did not finish. With
---out, every run's result line is appended there as JSON.
+medians, the change's median relative to the base's as a signed
+percentage, both sides' interquartile ranges, and how many pairs each side
+won (by the metric's `better` direction; ties count for neither). A metric
+whose change median is worse than the base's by more than the metric's
+`bound` is flagged WORSE and named on a line of its own. It names every
+run that was incorrect, had a failed epoch or did not finish, and exits
+non-zero if any run was bad or any metric is flagged. With --out, every
+run's result line is appended there as JSON.
 """
 import argparse
 import json
@@ -94,7 +98,9 @@ def main() -> int:
     n = len(runs["base"])
     print(f"\n{args.workload}: {n} complete pairs")
     print(f"{'metric':14s} {'base p50':>10s} {'change p50':>11s} "
-          f"{'base IQR':>19s} {'change IQR':>19s} {'wins b/c':>9s}")
+          f"{'vs base':>8s} {'base IQR':>19s} {'change IQR':>19s} "
+          f"{'wins b/c':>9s}")
+    worse = []
     for m in spec["end_to_end"]:
         name = m["name"]
         b = [r[name]["value"] for r in runs["base"]]
@@ -107,13 +113,21 @@ def main() -> int:
         iqr = " ".join("[{:8.4g}, {:8.4g}]".format(*(quartiles(xs) if n > 1
                                                     else (xs[0], xs[0])))
                        for xs in (b, c))
-        print(f"{name:14s} {statistics.median(b):10.4g} "
-              f"{statistics.median(c):11.4g} {iqr} {wins_b:4d}/{wins_c:<4d}")
+        mb, mc = statistics.median(b), statistics.median(c)
+        rel = (mc - mb) / mb if mb else 0.0
+        flag = " WORSE" if -sign * rel > m["bound"] else ""
+        if flag:
+            worse.append(f"WORSE {name}: {rel:+.1%} against a bound of "
+                         f"{m['bound']:.0%}")
+        print(f"{name:14s} {mb:10.4g} {mc:11.4g} {rel:+8.1%} {iqr} "
+              f"{wins_b:4d}/{wins_c:<4d}{flag}")
+    for line in worse:
+        print(line)
     for line in bad:
         print(f"BAD RUN {line}")
     if not bad:
         print("all runs correct, 0 failed")
-    return 1 if bad else 0
+    return 1 if bad or worse else 0
 
 
 if __name__ == "__main__":
